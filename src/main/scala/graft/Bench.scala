@@ -1,21 +1,51 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 object Bench {
+
+  /** True when a per-key group limit runs map-side of a shuffle: a
+    * partial `WindowGroupLimit` in the stage that feeds an `Exchange`,
+    * so the shuffle carries at most k rows per key per map task. Takes
+    * an executed plan before it runs (AQE's initial plan).
+    */
+  def groupLimitBeforeExchange(plan: SparkPlan): Boolean = {
+    def mapSide(p: SparkPlan): Iterator[SparkPlan] = Iterator(p) ++
+      p.children.iterator.filterNot(_.isInstanceOf[Exchange]).flatMap(mapSide)
+    val root = plan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    root.collect { case e: ShuffleExchangeExec => e }.exists { e =>
+      mapSide(e.child).exists {
+        case w: WindowGroupLimitExec => w.mode == Partial
+        case _ => false
+      }
+    }
+  }
+
+  /** The `topk_rewrite_fires` check, a regression canary for the window
+    * top-k queries: an events `row_number <= 3` per user must still cap
+    * rows per key before the shuffle, or those queries shuffle every row.
+    */
+  def topkLimitFires(spark: SparkSession, sfDir: String): Boolean = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("value").desc)
+    groupLimitBeforeExchange(graft.model.Tables.events(spark, sfDir)
+      .withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
+      .queryExecution.executedPlan)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // median-of-N timing: one cold pass then repeats over a warm cache;
     // the median filters page-cache/JIT/GC noise a single pass can't
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
-    graft.plans.TopKPerKey.ensureRegistered(spark)
+    val spark = Session()
+    val cpus = Session.cpus
     // warm the session (JVM/codegen/file-index) so per-query numbers
     // measure the query, not first-action startup
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -90,16 +120,7 @@ object Bench {
       val s = xs.sorted
       s(s.length / 2)
     }
-    // regression canary for the optimizer rule the window top-k queries
-    // depend on: without the rewrite they plan a full sort+window
-    val topkFires = {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val w = Window.partitionBy(col("user_id")).orderBy(col("value").desc)
-      graft.model.Tables.events(spark, sfDir)
-        .withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
-        .queryExecution.executedPlan.toString.contains("FinalTopK")
-    }
+    val topkFires = topkLimitFires(spark, sfDir)
     // millisecond precision: full-double repr overflowed the harness'
     // stdout tail-capture window last round (15 entries truncated)
     def ms(v: Double): Double = math.round(v * 1000) / 1000.0

@@ -96,15 +96,8 @@ object DecadeCheck {
     val onlyTables: Option[Set[String]] = flags.find(_.startsWith("only:"))
       .map(_.stripPrefix("only:").split(',').filter(_.nonEmpty).toSet)
     def want(name: String): Boolean = onlyTables.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Session("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
     // strictly above any sf0.1 surrogate key (max is l_orderkey ~6e5),
     // so replica i's keys occupy a disjoint range

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan for one
   * or more queries (all when no names given). Usage:
   * `runMain graft.Explain <sfDir> [name ...]`. Used to audit pushdown,
@@ -11,13 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     names.foreach { n =>
       println(s"\n===== $n =====")
       try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

@@ -402,14 +402,7 @@ object MoneyFuzz {
     require(Set("rule", "naive", "avgthr", "ratio")(mode),
       s"bad mode $mode")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .createOrReplaceTempView("lineitem")

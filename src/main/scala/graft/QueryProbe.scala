@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-query execution profiler (optimization-round instrumentation,
@@ -19,22 +18,8 @@ import scala.collection.mutable
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val pats = args.headOption.map(_.split(',').toSeq).getOrElse(Seq())
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // A/B hook: SPARK_GRAFT_EXTRA_CONFS="k=v;k=v" to trial a conf
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
-    graft.plans.TopKPerKey.ensureRegistered(spark)
+    val spark = Session()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val jobTimes = mutable.ListBuffer.empty[(Int, Long)] // jobId -> ms

@@ -15,12 +15,7 @@ object ScaleCheck {
     val pats = args.flatMap(_.split(',')).filter(_.nonEmpty)
     val only: String => Boolean =
       if (pats.isEmpty) _ => true else n => pats.exists(n.contains)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPerKey.ensureRegistered(spark)
+    val spark = Session()
     val sf = "/root/testdata/sf0.1"
     val mult = 32
     val e0 = graft.model.Tables.events(spark, sf)
@@ -773,11 +768,7 @@ object ScaleCheck128 {
     val pats = args.flatMap(_.split(',')).filter(_.nonEmpty)
     val only: String => Boolean =
       if (pats.isEmpty) _ => true else n => pats.exists(n.contains)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val sf = "/root/testdata/sf0.1"
     val d0 = graft.model.Tables.documents(spark, sf)
     def replicate(mult: Int): org.apache.spark.sql.DataFrame = {
@@ -939,12 +930,7 @@ object ScaleCheckGates {
     val pats = args.drop(1).flatMap(_.split(',')).filter(_.nonEmpty)
     val only: String => Boolean =
       if (pats.isEmpty) _ => true else n => pats.exists(n.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     def time(name: String)(f: => String): Unit = if (only(name)) {
       val t0 = System.nanoTime()
       val out = f
@@ -1071,12 +1057,7 @@ object ScaleCheckGates {
 object CellRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     import graft.similarity.Similarity
     val media = graft.multimodal.Multimodal.asMedia(
       graft.model.Tables.documents(spark, sfDir), "doc_id", "text")
@@ -1271,12 +1252,7 @@ object ScaleCheckCapRecall {
 
   def main(args: Array[String]): Unit = {
     val pairsPerCell = if (args.nonEmpty) args(0).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // arg 2: boundary (r17 #2 fixture, default) | bulk (r18 #3 deep-cut
     // fixture — guard-disengaged recall curve) | both
     val mode = if (args.length > 1) args(1) else "boundary"

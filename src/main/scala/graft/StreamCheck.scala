@@ -30,13 +30,7 @@ object StreamCheck {
     val sfDir = args.find(!_.startsWith("--")).getOrElse("/root/testdata/sf0.01")
     val mode = args.find(_.startsWith("--check="))
       .map(_.stripPrefix("--check=")).getOrElse("all")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-streamcheck").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     val checks: Seq[(String, () => Boolean)] = Seq(
       "fraud" -> (() => checkFraud(spark, sfDir)),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,39 +13,7 @@ object Verify {
       val pats = args(2).split(',').toSeq
       name => pats.exists(name.contains)
     } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // optional k=v Spark confs — dev-loop invariance runs (e.g.
-    // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false" proves no
-    // result depends on AQE's runtime re-planning); never set by the
-    // driver. Separator CONTRACT (ADVICE r12): ';' is canonical — any
-    // ';' in the raw string selects ';' mode, where values may contain
-    // commas (codec lists, spark.sql.extensions chains). A string with
-    // no ';' splits on ',' for back-compat with every recorded battery
-    // leg; in that legacy mode values must not contain ';' (a
-    // semicolon-valued conf must be passed in ';' mode, e.g. by
-    // appending a trailing ';').
-    sys.env.get("SPARK_GRAFT_CONF").foreach { raw =>
-      val sep = if (raw.contains(';')) ';' else ','
-      raw.split(sep)
-        .filter(_.contains('=')).foreach { kv =>
-          val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-        }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional reliable-checkpoint posture (VERDICT r13 #2): with a dir
-    // set, every graft.Checkpoints call site takes the cluster branch
-    // (df.checkpoint → dir) instead of localCheckpoint — the battery
-    // leg that exercises the deployment posture at all eight sites
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
-    graft.functions.GraftExtensions.register(spark)
-    graft.plans.TopKPerKey.ensureRegistered(spark)
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // per-query wall timings → outDir/timings.json (decade anchors:
     // the sf1.0/sf10 Spark-side cost table BASELINE.md records)

@@ -1,53 +1,28 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Registers the graft custom expressions as SQL functions, so
-  * `spark.sql("SELECT graft_simhash64(tokens) ...")` works alongside the
-  * DataFrame wrappers in [[VectorExprs]].
-  *
-  * Two entry points:
-  *  - `withExtensions(new GraftExtensions)` at session build time
-  *    (`spark.sql.extensions=graft.functions.GraftExtensions` also works);
-  *  - [[GraftExtensions.register]] on a live session (used by tests and
-  *    the Verify/Bench mains, which receive an already-built session).
+/** The one extension path: registers the graft custom expressions as
+  * SQL functions, so `spark.sql("SELECT graft_simhash64(tokens) ...")`
+  * works alongside the DataFrame wrappers in [[VectorExprs]], plus the
+  * top-k-per-key planner strategy. [[graft.Session]] calls it on every
+  * session it builds.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.definitions.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-    // whole-operator extension: plans TopKPerKeyNode as partial+final
-    // bounded heaps (see graft.plans.TopKPerKey)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKey.TopKStrategy)
-    // optimizer rule: rewrite Filter(row_number <= k, Window(...)) into
-    // TopKPerKeyNode so idiomatic top-k queries get the heap operator
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-  }
-}
-
 object GraftExtensions {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.functions.VectorExprs", null, name, usage, "")
+  private val definitions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_float_dot" -> (es => VectorExprs.FloatVecDot(es(0), es(1))),
+    "graft_simhash64" -> (es => VectorExprs.SimHash64(es(0))))
 
-  val definitions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("graft_float_dot",
-      info("graft_float_dot", "dot product of two float arrays (double accumulation)"),
-      (es: Seq[Expression]) => VectorExprs.FloatVecDot(es(0), es(1))),
-    ("graft_simhash64",
-      info("graft_simhash64", "64-bit SimHash of a token array"),
-      (es: Seq[Expression]) => VectorExprs.SimHash64(es(0))))
-
-  /** Register on a live session (temp functions, same builders). */
+  /** Register on a live session; idempotent (functions are replaced,
+    * the strategy is added once).
+    */
   def register(spark: SparkSession): Unit = {
-    val registry: FunctionRegistry = spark.sessionState.functionRegistry
-    definitions.foreach { case (name, _, builder) =>
+    val registry = spark.sessionState.functionRegistry
+    definitions.foreach { case (name, builder) =>
       registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+    graft.plans.TopKPerKey.ensureRegistered(spark)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.IntegerType
@@ -16,9 +16,9 @@ import org.apache.spark.sql.types.IntegerType
 /** Whole-operator top-k-per-key — the custom `LogicalPlan` + `Strategy` +
   * `SparkPlan` path (SURVEY.md §7.4 / spark_guide "custom operator").
   *
-  * Spark expresses per-key top-k as
-  * `Exchange → Sort(key, order) → Window(row_number) → Filter(rank<=k)`,
-  * which fully sorts every key group. This operator plans
+  * Spark plans `row_number() <= k` per key as a group limit on sorted
+  * input on both sides of the exchange, so every partition is fully
+  * sorted. This operator, reached only through [[topKPerKey]], plans
   * `PartialTopK → Exchange(key) → FinalTopK`: bounded heaps on both
   * sides, so
   *  - the shuffle carries at most k rows per (key, input partition) —
@@ -77,13 +77,9 @@ object TopKPerKey {
                            k: Int, rankAttr: Attribute, child: SparkPlan)
       extends UnaryExecNode {
     override def output: Seq[Attribute] = child.output :+ rankAttr
-    // No keys = global top-k: every partial heap must merge in ONE task
-    // (AllTuples ⇒ single-partition exchange, same as WindowExec with an
-    // empty partitionSpec). The exchange input is already bounded to
-    // k rows per upstream partition by PartialTopKExec, so this is the
-    // cheap tree-reduce shape, not a full-data collapse.
+    override def producedAttributes: AttributeSet = AttributeSet(rankAttr)
     override def requiredChildDistribution: Seq[Distribution] =
-      if (keys.isEmpty) Seq(AllTuples) else Seq(ClusteredDistribution(keys))
+      Seq(ClusteredDistribution(keys))
     override def outputPartitioning: Partitioning = child.outputPartitioning
     override protected def doExecute(): RDD[InternalRow] = {
       val (ks, ord, kk, in, out) = (keys, order, k, child.output, output)
@@ -145,17 +141,13 @@ object TopKPerKey {
     }
   }
 
-  /** Idempotently register the strategy + rewrite rule on a live
-    * session (the `SparkSessionExtensions` path is
-    * [[graft.functions.GraftExtensions]]).
+  /** Idempotently register the planner strategy on a live session
+    * (called by [[graft.functions.GraftExtensions.register]]).
     */
   def ensureRegistered(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[TopKStrategy.type]))
+    if (!cur.contains(TopKStrategy))
       spark.experimental.extraStrategies = cur :+ TopKStrategy
-    val curOpt = spark.experimental.extraOptimizations
-    if (!curOpt.contains(TopKRewrite))
-      spark.experimental.extraOptimizations = curOpt :+ TopKRewrite
   }
 
   /** DataFrame API: top `k` rows per `keyCols` group, ordered by
@@ -165,6 +157,7 @@ object TopKPerKey {
     */
   def topKPerKey(df: DataFrame, keyCols: Seq[String],
                  orderBy: Seq[(String, Boolean)], k: Int): DataFrame = {
+    require(keyCols.nonEmpty, "topKPerKey needs at least one key column")
     val spark = df.sparkSession
     ensureRegistered(spark)
     val child = bridge.analyzedPlan(df)

@@ -3,16 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for suites (one per suite via lazy val). */
+/** Shared local SparkSession for suites, built by [[Session]]. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Session("spark.sql.warehouse.dir" -> "/tmp/graft_warehouse")
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

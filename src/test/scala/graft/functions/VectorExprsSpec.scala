@@ -18,7 +18,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("native expressions are SQL-callable via GraftExtensions") {
-    GraftExtensions.register(spark)
     Tables.documents(spark, sf()).limit(10).createOrReplaceTempView("docs_v")
     val out = spark.sql(
       """SELECT doc_id, graft_simhash64(split(trim(text), '\\s+')) AS fp

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.SparkEntry
-import graft.plans.TopKPerKey
+import graft.Bench.groupLimitBeforeExchange
 import org.apache.spark.sql.functions.col
 
 /** Physical-plan invariants for representative queries — the properties
@@ -13,10 +13,8 @@ import org.apache.spark.sql.functions.col
   */
 class PlanAuditSpec extends SparkSpec {
 
-  private def plan(name: String): String = {
-    TopKPerKey.ensureRegistered(spark)
+  private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
-  }
 
   test("serve_point_lookup pushes the key filter into the parquet scan") {
     val p = plan("serve_point_lookup")
@@ -78,20 +76,20 @@ class PlanAuditSpec extends SparkSpec {
       "partial + final funnel aggregation expected\n" + p)
   }
 
-  test("PQ ADC scoring broadcasts the lookup table and heap-rewrites " +
-    "the per-query top-k — no sort-merge join, no float vectors") {
+  test("PQ ADC top-k: broadcast lookup table, group limit before the exchange") {
     val emb = graft.model.Tables.embeddings(spark, sf())
     val cbs = graft.similarity.Similarity.pqTrain(emb, "vec_id",
       "embedding", m = 4, k = 8, iters = 1)
     val codes = graft.similarity.Similarity.pqEncode(emb, "vec_id",
       "embedding", cbs)
-    val p = graft.similarity.Similarity.pqAdcTopK(
+    val exec = graft.similarity.Similarity.pqAdcTopK(
         emb.where(col("vec_id") < 4), codes, cbs, "vec_id", "embedding", 5)
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan
+    val p = exec.toString
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
-    assert(p.contains("FinalTopK") && !p.contains("WindowExec"),
-      s"per-query top-k must run on the bounded-heap operator\n$p")
+    assert(groupLimitBeforeExchange(exec) && !p.contains("FinalTopK"),
+      s"per-query top-k must cap rows per key before the shuffle\n$p")
   }
 
   test("join_broadcast_dims broadcasts both dimension tables") {
@@ -101,11 +99,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("topk queries use the heap operator, never a sort+window") {
-    for (q <- Seq("topk_custom_plan", "window_top_order_per_customer")) {
-      val p = plan(q)
-      assert(p.contains("FinalTopK"), s"$q:\n$p")
-      assert(!p.contains("WindowExec"), s"$q:\n$p")
-    }
+    val p = plan("topk_custom_plan")
+    assert(p.contains("FinalTopK"), p)
+    assert(!p.contains("WindowExec"), p)
   }
 
   test("tpch_q1 aggregates partially before the exchange") {
@@ -152,11 +148,14 @@ class PlanAuditSpec extends SparkSpec {
       "partial + final aggregation expected\n" + p)
   }
 
-  test("sim_topk_ivf: probe join carries ids+cells, final top-k uses heaps") {
-    val p = plan("sim_topk_ivf")
-    assert(p.contains("FinalTopK"), p)
-    assert(!p.contains("WindowExec"), p)
-    assert(!p.contains("CartesianProduct"), p)
+  test("row_number top-k queries cap rows per key before the key exchange") {
+    for (q <- Seq("window_top_order_per_customer", "sim_topk_ivf")) {
+      val exec = SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan
+      val p = exec.toString
+      assert(groupLimitBeforeExchange(exec), s"$q:\n$p")
+      assert(!p.contains("FinalTopK"), s"$q:\n$p")
+      assert(!p.contains("CartesianProduct"), s"$q:\n$p")
+    }
   }
 
   test("text_decontaminate: eval grams broadcast; the corpus side never shuffles " +
@@ -216,7 +215,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("tpch_q6 pushes every predicate into the lineitem scan") {
     // toString truncates long PushedFilters lists; use formatted explain
-    TopKPerKey.ensureRegistered(spark)
     val p = SparkEntry.queries("tpch_q6_forecast_revenue")(spark, sf())
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -323,7 +321,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("layout_zorder_prune pushes BOTH box dimensions into the " +
     "re-clustered scan (the stats-pruning contract)") {
-    TopKPerKey.ensureRegistered(spark)
     // formatted mode: the compact toString truncates long filter lists
     val p = SparkEntry.queries("layout_zorder_prune")(spark, sf())
       .queryExecution.explainString(
