@@ -842,8 +842,9 @@ object BreadthQueries {
         "src", "dst")),
 
     // k-core peeling (graft.graph.KCore): 10 fixed rounds at k=20 over
-    // the sampled co-purchase graph — converged at sf0.01 (the peel
-    // genuinely cascades: 500 → 404 nodes over 10 rounds)
+    // the sampled co-purchase graph. The peel genuinely cascades: at
+    // sf0.01, 500 → 404 nodes with the fixpoint after 9 peels; sf0.1
+    // reaches it after 7, and at sf0.001 the graph empties after 3
     "graph_kcore_peel" -> ((s, dir) =>
       graft.graph.KCore.kCoreTruncated(
         graft.graph.Triangles.coPurchaseEdges(Tables.lineitem(s, dir),
@@ -1700,11 +1701,11 @@ object BreadthQueries {
     }.mkString("\nUNION ALL\n")
   }
 
-  /** Unrolled 6-round twin of graph_kcore_peel: each round recomputes
-    * degrees and keeps edges whose BOTH endpoints clear the k=80 bar.
+  /** Unrolled 10-round twin of graph_kcore_peel: each round recomputes
+    * degrees and keeps edges whose BOTH endpoints clear the k=20 bar.
     * Every CTE is MATERIALIZED — DuckDB inlines plain CTEs, and each
     * round references the previous one three times, so an un-hinted
-    * chain expands 3^6-fold (the same blowup the Spark side truncates
+    * chain expands 3^10-fold (the same blowup the Spark side truncates
     * with per-round checkpoints).
     */
   private def kcoreOracleSql: String = {

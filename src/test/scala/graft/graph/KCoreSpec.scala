@@ -1,5 +1,9 @@
 package graft.graph
 
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 class KCoreSpec extends SparkSpec {
@@ -10,10 +14,39 @@ class KCoreSpec extends SparkSpec {
   private val chain = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
     (4L, 5L), (5L, 6L))
 
+  private def rows(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   private def run(edges: Seq[(Long, Long)], k: Int,
                   rounds: Int): Map[Long, Long] =
-    KCore.kCoreTruncated(edges.toDF("src", "dst"), "src", "dst", k, rounds)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    rows(KCore.kCoreTruncated(edges.toDF("src", "dst"), "src", "dst", k, rounds))
+
+  /** The fixed-round form kCoreTruncated replaced: every round peels,
+    * whether or not anything is left to peel. Returns the `(node,
+    * degree)` table after each of rounds 1..`rounds` — the output of
+    * that form called with each round count.
+    */
+  private def unrolled(edges: DataFrame, k: Int,
+                       rounds: Int): Seq[Map[Long, Long]] = {
+    def degrees(e: DataFrame): DataFrame =
+      e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("degree"))
+    val raw = edges.select(col("src").cast("long").as("a"),
+        col("dst").cast("long").as("b"))
+      .where(col("a") =!= col("b"))
+    var e = raw.select(least(col("a"), col("b")).as("u"),
+      greatest(col("a"), col("b")).as("v")).distinct().localCheckpoint()
+    (1 to rounds).map { _ =>
+      val keep = degrees(e).where(col("degree") >= k).select("node")
+      e = e.join(keep.select(col("node").as("u")), "u")
+        .join(keep.select(col("node").as("v")), "v")
+        .select("u", "v").localCheckpoint()
+      rows(degrees(e))
+    }
+  }
+
+  private def clique(n: Long): Seq[(Long, Long)] =
+    for (a <- 1L to n; b <- a + 1 to n) yield (a, b)
 
   test("2-core of triangle+chain peels the chain one hop per round") {
     // converged (3 rounds): only the triangle survives, all degree 2
@@ -24,8 +57,43 @@ class KCoreSpec extends SparkSpec {
       4L -> 2L, 5L -> 1L))
   }
 
+  test("stopping at the fixpoint gives the fixed-round output for every " +
+    "round count") {
+    val small = chain.toDF("src", "dst")
+    unrolled(small, 2, 5).zipWithIndex.foreach { case (want, i) =>
+      assert(rows(KCore.kCoreTruncated(small, "src", "dst", 2, i + 1)) == want,
+        s"triangle+chain, rounds=${i + 1}")
+    }
+    val harness = Triangles.coPurchaseEdges(
+      graft.model.Tables.lineitem(spark, sf()), partMod = 4)
+    unrolled(harness, 20, 10).zipWithIndex.foreach { case (want, i) =>
+      assert(rows(KCore.kCoreTruncated(harness, "src", "dst", 20, i + 1)) == want,
+        s"harness graph, rounds=${i + 1}")
+    }
+  }
+
+  test("a graph that is its own k-core runs no extra jobs for more rounds") {
+    val k5 = clique(5).toDF("src", "dst")
+    def jobs(rounds: Int): Int = {
+      val (r, n) = JobCounter.count(spark.sparkContext)(
+        rows(KCore.kCoreTruncated(k5, "src", "dst", 4, rounds)))
+      assert(r == (1L to 5L).map(_ -> 4L).toMap)
+      n
+    }
+    val one = jobs(1)
+    assert(jobs(10) <= one)
+  }
+
   test("threshold above the max degree empties the graph") {
     assert(run(chain, 5, 2).isEmpty)
+    def jobs(rounds: Int): Int = {
+      val (r, n) = JobCounter.count(spark.sparkContext)(run(chain, 5, rounds))
+      assert(r.isEmpty)
+      n
+    }
+    // one peel empties the graph; the rounds after it run nothing
+    val one = jobs(1)
+    assert(jobs(10) <= one)
   }
 
   test("reversed duplicates and self-loops are canonicalised away") {
