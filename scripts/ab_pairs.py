@@ -3,11 +3,12 @@
 
     python3 scripts/ab_pairs.py --parent <checkout> --change <checkout> \\
         --workload curation [--workload card_pipeline] --pairs 10 \\
-        [--seeds 7,8,...] [--seconds 20]
+        [--seeds 7,8,...]
 
 Each pair runs `python3 pipebench/run.py --workload W --seed S --seconds T
---trace 0` once in each checkout, with the same seed on both sides; the
-side that runs first alternates from pair to pair. The parent checkout
+--trace 0` once in each checkout, with T the run_seconds of the change's
+BENCHMARK.json and the same seed on both sides; the side that runs first
+alternates from pair to pair. The parent checkout
 can be any copy of the parent commit, for example
 `git worktree add ../parent HEAD~` or `git archive HEAD~ | tar -x -C ../parent`.
 
@@ -34,6 +35,9 @@ import subprocess
 import sys
 import time
 
+# Seconds one pipebench run may take before it counts as failed.
+RUN_TIMEOUT_S = 600
+
 
 def quartiles(xs):
     """(Q1, median, Q3); the quartiles interpolate between samples."""
@@ -43,13 +47,13 @@ def quartiles(xs):
     return q1, med, q3
 
 
-def run_once(checkout, workload, seed, seconds, timeout):
+def run_once(checkout, workload, seed, seconds):
     cmd = [sys.executable, "pipebench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     t0 = time.time()
     try:
         p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True,
-                           timeout=timeout)
+                           timeout=RUN_TIMEOUT_S)
     except subprocess.TimeoutExpired:
         return {"ok": False, "error": "timeout", "wall_s": time.time() - t0}
     lines = p.stdout.strip().splitlines()
@@ -93,14 +97,11 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", default=None,
                     help="comma-separated seeds, one per pair (default 1..pairs)")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="timed-phase seconds (default: run_seconds of BENCHMARK.json)")
-    ap.add_argument("--timeout", type=float, default=600)
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     seeds = ([int(s) for s in a.seeds.split(",")] if a.seeds
              else list(range(1, a.pairs + 1)))
     if len(seeds) < a.pairs:
@@ -113,7 +114,7 @@ def main():
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             pair = {}
             for side in order:
-                r = run_once(sides[side], w, seeds[i], seconds, a.timeout)
+                r = run_once(sides[side], w, seeds[i], seconds)
                 pair[side] = r
                 print(f"ab_pairs {w} pair {i + 1}/{a.pairs} seed {seeds[i]} {side}: "
                       f"{'ok' if r['ok'] else 'FAILED ' + r.get('error', 'incorrect')} "

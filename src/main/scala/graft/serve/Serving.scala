@@ -100,10 +100,10 @@ object Serving {
     */
   def upsertBatch(store: KvStore, pkCol: String, skCol: String)
                  (batch: DataFrame, batchId: Long): Unit = {
-    val (cols, pk, sk) = layout(batch, pkCol, skCol)
+    val indexed = batch.columns.zipWithIndex
     batch.collect().foreach { row =>
-      store.put(String.valueOf(row.get(pk)), String.valueOf(row.get(sk)),
-        attributes(cols, row))
+      val attrs = indexed.map { case (c, i) => c -> String.valueOf(row.get(i)) }.toMap
+      store.put(attrs(pkCol), attrs(skCol), attrs)
     }
   }
 
@@ -117,32 +117,13 @@ object Serving {
     */
   def upsertPartitions(clientId: String, pkCol: String, skCol: String)
                       (batch: DataFrame, batchId: Long): Unit = {
-    val (cols, pk, sk) = layout(batch, pkCol, skCol)
+    val indexed = batch.columns.zipWithIndex
     batch.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       val client = KvClients.clientFor(clientId)
       rows.foreach { row =>
-        client.put(String.valueOf(row.get(pk)), String.valueOf(row.get(sk)),
-          attributes(cols, row))
+        val attrs = indexed.map { case (c, i) => c -> String.valueOf(row.get(i)) }.toMap
+        client.put(attrs(pkCol), attrs(skCol), attrs)
       }
     }
   }
-
-  /** Column names with their positions, and the positions of the key
-    * columns — resolved once per batch, not per row. A repeated name
-    * keeps its last column in the attribute map, so the keys do too.
-    */
-  private def layout(batch: DataFrame, pkCol: String,
-                     skCol: String): (Array[(String, Int)], Int, Int) = {
-    val names = batch.columns
-    val pk = names.lastIndexOf(pkCol)
-    val sk = names.lastIndexOf(skCol)
-    require(pk >= 0 && sk >= 0,
-      s"key columns $pkCol/$skCol not in ${names.mkString(", ")}")
-    (names.zipWithIndex, pk, sk)
-  }
-
-  /** One row as the store's attribute map (every value stringified). */
-  private def attributes(cols: Array[(String, Int)],
-                         row: org.apache.spark.sql.Row): Map[String, String] =
-    cols.iterator.map { case (c, i) => c -> String.valueOf(row.get(i)) }.toMap
 }
