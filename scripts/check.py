@@ -5,7 +5,9 @@ Usage: python3 scripts/check.py <sfDir> <verifyOutDir> [samplePreds.json]
 
 For each <name>/ parquet dir in verifyOutDir, runs oracle_sql.json[name]
 in DuckDB over the sfDir tables and compares (column-name-sorted,
-row-sorted) values. Prints PASS/FAIL per query.
+row-sorted) values. Prints PASS/FAIL per query; a name in
+oracle_sql.json with no output dir prints "FAIL <name>: no output".
+The total counts the union of the output dirs and the oracle names.
 
 samplePreds.json ({query_name: "sql predicate on OUTPUT columns"}):
 for the named queries, BOTH sides are filtered by the predicate —
@@ -71,10 +73,16 @@ def main(sf_dir, out_dir, preds_path=None):
         elif os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
-    names = [d for d in sorted(os.listdir(out_dir))
-             if os.path.isdir(f"{out_dir}/{d}")]
+    dirs = {d for d in os.listdir(out_dir) if os.path.isdir(f"{out_dir}/{d}")}
+    # fail closed: every oracle name without an output dir is a FAIL
+    # (its query threw or never ran), never a silently shorter total
+    names = sorted(dirs | set(oracles))
     n_pass = n_fail = 0
     for name in names:
+        if name not in dirs:
+            print(f"FAIL {name}: no output")
+            n_fail += 1
+            continue
         pred = preds.get(name)
         src = f"SELECT * FROM '{out_dir}/{name}/*.parquet'"
         n_full = None

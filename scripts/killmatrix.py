@@ -10,8 +10,9 @@ control for the rows/schema/value channels AND the sampled-pred
 channel.
 
 Suites:
-  exact    the 5 r17 defects (value ×3 / rows ×1 / schema ×1) at
-           sf0.01 with full-output compares. Expect: all CAUGHT.
+  exact    the 5 r17 defects (value ×3 / rows ×1 / schema ×1) plus a
+           query that throws (missing ×1) at sf0.01 with full-output
+           compares. Expect: all CAUGHT.
   sampled  2 sf10 defects whose wrong rows fall OUTSIDE the default
            sampled pred slice (id_a % 10 = 0 / = 1). Each runs the
            check TWICE: GRAFT_PRED_ROT=0 (default slice — expect
@@ -92,6 +93,18 @@ EXACT = [
             '        .withColumnRenamed("order_count", "order_cnt")'
             '  // SEEDED DEFECT\n    }),',
         filter="tpch_q4",
+        expect={0: True},
+    ),
+    dict(
+        # Verify must fail closed: a query that throws leaves no output
+        # dir, and check.py FAILs its oracle name as "no output"
+        name="throwing_query",
+        channel="missing",
+        file="src/main/scala/graft/queries/TpchQueries.scala",
+        old='      s.sql(q11Sql("lineitem_sq_v"))\n    }),',
+        new='      throw new IllegalStateException("SEEDED DEFECT: throws")\n'
+            '    }),',
+        filter="tpch_q11",
         expect={0: True},
     ),
 ]

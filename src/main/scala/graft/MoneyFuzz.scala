@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
 import scala.util.Random
 
 /** Seed-fixed cross-engine divergence fuzzer for the money-sum class
@@ -20,27 +19,27 @@ import scala.util.Random
   * each as ONE SQL text run verbatim on BOTH engines (Spark via temp
   * view, DuckDB via scripts/check.py's oracle compare).
   *
-  * Two modes:
-  *  - `rule` (the battery gate): every case spelled per the
-  *    integer-units rule. 200/200 must hash-match — this is the claim
-  *    that the rule is order-independent and engine-portable across
-  *    the whole shape space, not just the queries a sweep happened to
-  *    catch. Note the rule-spelled cases still exercise the two
-  *    remaining cross-engine double ops — DECIMAL→DOUBLE cast and
-  *    round(identical double, d) — so a divergence in THOSE layers
-  *    (e.g. the engines' round() disagreeing on a binary value whose
-  *    ×10^d product floats onto an exact .5) would surface here.
-  *  - `naive` (measurement, not a gate): the SAME cases respelled as
-  *    `round(sum(double chain), d)` — quantifies the escape rate of
-  *    the pattern the rule replaces at the given SF.
+  * `rule` mode (the battery gate): every case spelled per the
+  * integer-units rule. 200/200 must hash-match — this is the claim
+  * that the rule is order-independent and engine-portable across the
+  * whole shape space, not just the queries a sweep happened to catch.
+  * Note the rule-spelled cases still exercise the two remaining
+  * cross-engine double ops — DECIMAL→DOUBLE cast and round(identical
+  * double, d) — so a divergence in THOSE layers (e.g. the engines'
+  * round() disagreeing on a binary value whose ×10^d product floats
+  * onto an exact .5) would surface here.
+  * The pattern the rule replaces, `round(sum(double chain), d)` over
+  * the same cases, diverged on 1/200 at sf0.01 and 0/200 at sf0.1 and
+  * sf1.0 (BASELINE_HISTORY.md "Money-sum hardening" and "Round-14
+  * standing battery") — a boundary lottery that green runs never clear.
   *
-  * Usage:
+  * Usage (exits 1 and names the cases that threw, if any):
   * {{{
-  * sbt "runMain graft.MoneyFuzz <sfDir> <outDir> [rule|naive|avgthr|ratio] [nCases]"
+  * sbt "runMain graft.MoneyFuzz <sfDir> <outDir> [rule|avgthr|ratio] [nCases]"
   * python3 scripts/check.py <sfDir> <outDir>
   * }}}
   *
-  * A third mode `avgthr` ([[avgThrCases]]) watches the q22
+  * Mode `avgthr` ([[avgThrCases]]) watches the q22
   * avg-threshold knife edge — membership decided by a double `avg()`
   * comparison while output sums stay rule-exact.
   *
@@ -298,8 +297,7 @@ object MoneyFuzz {
           s"CASE WHEN $k % $m = 0 THEN NULL ELSE l_extendedprice END"
         case None => "l_extendedprice"
       }
-      // unit scale k: cents=2, ×disc hundredths=4, ×tax hundredths=6
-      val unitScale = Seq(2, 4, 6)(chain)
+      // unit scale: cents, ×disc hundredths, ×tax hundredths
       val unitDiv = Seq("100.0", "10000.0", "1000000.0")(chain)
 
       val (groupSel, groupBy) = group match {
@@ -312,7 +310,7 @@ object MoneyFuzz {
         case 5 => (Seq("NULLIF(l_returnflag, 'R') AS g1"), Seq("g1"))
       }
 
-      // ---- units expression (rule mode) --------------------------------
+      // ---- units expression --------------------------------------------
       // per-row products in BIGINT (max ~1.1e11 — far under 2^63), ONE
       // cast to DECIMAL(w,0) at the sum boundary: decimal×decimal
       // precision inference differs between engines (Spark clamps at
@@ -327,70 +325,38 @@ object MoneyFuzz {
           s" AS DECIMAL($width,0))"
       }
 
-      // ---- double chain (naive mode) ------------------------------------
-      val dblChain = chain match {
-        case 0 => priceRaw
-        case 1 => s"$priceRaw * (1 - l_discount)"
-        case 2 => s"$priceRaw * (1 - l_discount) * (1 + l_tax)"
+      val sumD = s"CAST(sum(u) AS DOUBLE) / $unitDiv"
+      val sumExpr = present match {
+        case 0 => s"$sumD AS v_sum"
+        case 1 => s"round($sumD, $digits) AS v_sum"
+        // exact-integer presentation: a prime modulus makes the
+        // compare exact (DECIMAL % stays decimal-exact in BOTH
+        // engines) where the double cast would mask last-digit drift
+        case 2 => s"CAST(sum(u) % 999999937 AS BIGINT) AS v_sum_mod,\n" +
+          s"  $sumD AS v_sum_dbl"
       }
-
-      val sql = if (mode == "rule") {
-        val sumD = s"CAST(sum(u) AS DOUBLE) / $unitDiv"
-        val sumExpr = present match {
-          case 0 => s"$sumD AS v_sum"
-          case 1 => s"round($sumD, $digits) AS v_sum"
-          // exact-integer presentation: a prime modulus makes the
-          // compare exact (DECIMAL % stays decimal-exact in BOTH
-          // engines) where the double cast would mask last-digit drift
-          case 2 => s"CAST(sum(u) % 999999937 AS BIGINT) AS v_sum_mod,\n" +
-            s"  $sumD AS v_sum_dbl"
-        }
-        val avgExpr = present match {
-          case 2 => s"CAST(sum(u) % 999999937 AS BIGINT) AS v_tot_mod,\n" +
-            "  count(u) AS n_u"
-          case _ => s"$sumD / count(u) AS v_avg"
-        }
-        val aggExprs = agg match {
-          case 0 => Seq(sumExpr)
-          case 1 => Seq(avgExpr)
-          case 2 => Seq(sumExpr, avgExpr).distinct
-        }
-        val sel = (groupSel ++ aggExprs :+ "count(*) AS n_rows")
-          .mkString(",\n  ")
-        val hav = if (having) s"\nHAVING sum(u) > $thrUnits" else ""
-        val gb = if (groupBy.nonEmpty)
-          s"\nGROUP BY ${groupBy.mkString(", ")}" else ""
+      val avgExpr = present match {
+        case 2 => s"CAST(sum(u) % 999999937 AS BIGINT) AS v_tot_mod,\n" +
+          "  count(u) AS n_u"
+        case _ => s"$sumD / count(u) AS v_avg"
+      }
+      val aggExprs = agg match {
+        case 0 => Seq(sumExpr)
+        case 1 => Seq(avgExpr)
+        case 2 => Seq(sumExpr, avgExpr).distinct
+      }
+      val sel = (groupSel ++ aggExprs :+ "count(*) AS n_rows")
+        .mkString(",\n  ")
+      val hav = if (having) s"\nHAVING sum(u) > $thrUnits" else ""
+      val gb = if (groupBy.nonEmpty)
+        s"\nGROUP BY ${groupBy.mkString(", ")}" else ""
+      Case(f"fuzz_$i%03d",
         s"""WITH t AS (SELECT l_returnflag, l_linestatus, l_orderkey,
            |  l_partkey, l_suppkey,
            |  $units AS u FROM lineitem)
            |SELECT
            |  $sel
-           |FROM t$gb$hav""".stripMargin
-      } else {
-        // naive: the pattern the rule replaces — double accumulation,
-        // rounded presentation. Measurement only.
-        val d2 = math.max(2, digits)
-        val sumExpr = s"round(sum(u), $d2) AS v_sum"
-        val avgExpr = s"round(avg(u), ${d2 + 2}) AS v_avg"
-        val aggExprs = agg match {
-          case 0 => Seq(sumExpr)
-          case 1 => Seq(avgExpr)
-          case 2 => Seq(sumExpr, avgExpr)
-        }
-        val sel = (groupSel ++ aggExprs :+ "count(*) AS n_rows")
-          .mkString(",\n  ")
-        val thrD = thrUnits / math.pow(10, unitScale)
-        val hav = if (having) s"\nHAVING round(sum(u), 2) > $thrD" else ""
-        val gb = if (groupBy.nonEmpty)
-          s"\nGROUP BY ${groupBy.mkString(", ")}" else ""
-        s"""WITH t AS (SELECT l_returnflag, l_linestatus, l_orderkey,
-           |  l_partkey, l_suppkey,
-           |  $dblChain AS u FROM lineitem)
-           |SELECT
-           |  $sel
-           |FROM t$gb$hav""".stripMargin
-      }
-      Case(f"fuzz_$i%03d", sql)
+           |FROM t$gb$hav""".stripMargin)
     }
   }
 
@@ -399,39 +365,23 @@ object MoneyFuzz {
     val outDir = args(1)
     val mode = if (args.length > 2) args(2) else "rule"
     val nCases = if (args.length > 3) args(3).toInt else 200
-    require(Set("rule", "naive", "avgthr", "ratio")(mode),
-      s"bad mode $mode")
+    require(Set("rule", "avgthr", "ratio")(mode), s"bad mode $mode")
 
     val spark = Session()
 
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .createOrReplaceTempView("lineitem")
-    new java.io.File(outDir).mkdirs()
 
+    // the Verify loop: stale case dirs cleared, oracle_sql.json written
+    // with the same JSON escaper, thrown cases returned
     val all = cases(nCases, mode)
-    all.foreach { c =>
-      try c.df.map(_(spark)).getOrElse(spark.sql(c.sql))
-        .repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/${c.name}")
-      catch { case e: Throwable =>
-        System.err.println(s"[fuzz] ${c.name} failed: ${e.getMessage}")
-      }
-    }
-    // same JSON-escape discipline as Verify
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = all.map(c => s"${q(c.name)}: ${q(c.oracle.getOrElse(c.sql))}")
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = Verify.run(spark, sfDir, outDir,
+      all.map(c => c.name -> ((s: SparkSession, _: String) =>
+        c.df.map(_(s)).getOrElse(s.sql(c.sql)))),
+      all.map(c => c.name -> c.oracle.getOrElse(c.sql)))
     println(s"[fuzz] wrote ${all.size} $mode cases to $outDir " +
       s"(seed 42, sf=$sfDir); compare with scripts/check.py")
     spark.stop()
+    Verify.exitIfFailed("fuzz", failed)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1,
+  * naming the failed queries, if any selected query threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -14,52 +16,81 @@ object Verify {
       name => pats.exists(name.contains)
     } else _ => true
     val spark = Session()
+    val failed = run(spark, sfDir, outDir,
+      SparkEntry.queries.toSeq.filter(kv => only(kv._1)),
+      SparkEntry.oracleSql.toSeq.filter(kv => only(kv._1)))
+    spark.stop()
+    exitIfFailed("verify", failed)
+  }
+
+  /** Runs each query into `outDir/<name>` (parquet), then writes
+    * `outDir/oracle_sql.json` from `oracles` and `outDir/timings.json`
+    * (per-query wall seconds — the decade-anchor table BASELINE.md
+    * records). Each query's directory is deleted before it runs, so a
+    * query that throws leaves no output, never an earlier run's, and
+    * scripts/check.py FAILs it. Returns the names of the queries that
+    * threw, in run order.
+    */
+  private[graft] def run(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      oracles: Seq[(String, String)]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    // per-query wall timings → outDir/timings.json (decade anchors:
-    // the sf1.0/sf10 Spark-side cost table BASELINE.md records)
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only(name)) {
-        // repartition(1), NOT coalesce(1): both emit the single part
-        // file the oracle compare reads, but coalesce folds the final
-        // compute stage into the write task — at sf1.0 that serialized
-        // dedup_containment's per-pair array_intersect verify onto one
-        // core (~20 min for work that is ~1 min at 32-way). The
-        // round-robin shuffle moves only RESULT rows, so its cost is
-        // output-sized while upstream keeps full parallelism.
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).repartition(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          timings(name) = (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val failed = Seq.newBuilder[String]
+    queries.foreach { case (name, fn) =>
+      val dir = new java.io.File(s"$outDir/$name")
+      new scala.reflect.io.Directory(dir).deleteRecursively()
+      // repartition(1), NOT coalesce(1): both emit the single part
+      // file the oracle compare reads, but coalesce folds the final
+      // compute stage into the write task — at sf1.0 that serialized
+      // dedup_containment's per-pair array_intersect verify onto one
+      // core (~20 min for work that is ~1 min at 32-way). The
+      // round-robin shuffle moves only RESULT rows, so its cost is
+      // output-sized while upstream keeps full parallelism.
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).repartition(1).write.mode("overwrite")
+          .parquet(dir.getPath)
+        timings(name) = (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => only(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = oracles
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // formatLocal(Locale.ROOT): the default-locale format would emit
     // comma decimals (0,123) under e.g. de_DE — invalid JSON, the same
-    // failure class the q() control-char escapes guard against
+    // failure class the jsonString control-char escapes guard against
     val tJson = timings
       .map { case (k, v) =>
-        s"${q(k)}: ${"%.3f".formatLocal(java.util.Locale.ROOT, v)}" }
+        s"${jsonString(k)}: ${"%.3f".formatLocal(java.util.Locale.ROOT, v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/timings.json"), tJson)
-    spark.stop()
+    failed.result()
   }
+
+  /** Prints the failed names and exits 1 when there are any. */
+  private[graft] def exitIfFailed(tag: String, failed: Seq[String]): Unit =
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[$tag] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

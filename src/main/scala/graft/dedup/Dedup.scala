@@ -379,7 +379,9 @@ object Dedup {
     connectedComponentsWithRounds(edges, aCol, bCol, maxIters, algorithm)._1
 
   /** [[connectedComponents]] plus the number of rounds it took — the
-    * O(log n) evidence ScaleCheck records for long-chain graphs.
+    * O(log n) evidence for long-chain graphs (16 rounds on a 20,000-node
+    * chain, 21 on a 640,000-node one: BASELINE_HISTORY.md "round-7/8
+    * rows").
     */
   def connectedComponentsWithRounds(edges: DataFrame, aCol: String,
                                     bCol: String, maxIters: Int = 50,
@@ -802,16 +804,19 @@ object Dedup {
 
   /** Default ceiling for [[containmentPairsAuto]]'s prefix-posting
     * volume (level 1/2) and Σdf² candidate-pair volume (level 3) —
-    * named so diagnostics (ScaleCheck `cont_auto_gate`) and the
-    * production gate share ONE constant and cannot drift.
+    * named so diagnostics and the production gate share ONE constant
+    * and cannot drift (the gate inputs measured per fixture are in
+    * BASELINE_HISTORY.md "zipf-token leg" and BASELINE.md "sf100 gate
+    * decisions").
     */
   val DefaultMaxPrefixPostings: Long = 2000000000L
   val DefaultMaxCandidatePairs: Long = 2000000000L
 
   /** Decision inputs + outcome of [[containmentPairsAuto]]'s measured
     * gate. Produced by [[containmentGate]] — the SAME code the
-    * production entry runs — so ScaleCheck's printed route can never
-    * disagree with what the gate actually chooses.
+    * production entry runs — so a printed route (the route tables in
+    * BASELINE.md "sf100 gate decisions") can never disagree with what
+    * the gate actually chooses.
     */
   private[graft] case class ContainmentGate(
       planPostings: BigDecimal, planBound: BigDecimal,
@@ -832,7 +837,8 @@ object Dedup {
 
   /** [[containmentPairsInverted]] plus which verify regime the size
     * routing chose (`true` = count-verify) — the observability hook
-    * the routing spec and ScaleCheck pin against.
+    * the routing spec pins against (both regimes timed at sf0.1 and
+    * sf1.0: BASELINE_HISTORY.md "Hybrid containment verify").
     */
   private[graft] def containmentPairsInvertedWithPath(
       df: DataFrame, idCol: String, textCol: String,
@@ -1083,7 +1089,8 @@ object Dedup {
 
   /** [[containmentPairsAuto]] plus which path the gate chose
     * (`true` = sketch screen) — the observability hook the gate spec
-    * and ScaleCheck pin against.
+    * pins against (the route executed at sf100: BASELINE.md "sf100
+    * containment EXECUTED leg").
     */
   private[graft] def containmentPairsAutoWithPath(
       df: DataFrame, idCol: String, textCol: String,

@@ -205,10 +205,11 @@ object Triangles {
     * `partMod` keeps every part with `l_partkey % partMod == 0` — a
     * systematic node sample (1 = full graph). The registered queries
     * use 4: edge density falls ~16× and wedge work ~64×, keeping the
-    * bench-scale run seconds-sized while the ×32 ScaleCheck probe
-    * (which replicates this same graph) carries the linearity
-    * evidence. This session's full-graph probe read 32.9 s → 469.6 s
-    * for ×32 edges — ~14× time on 32× data, comfortably sublinear.
+    * bench-scale run seconds-sized while the ×32 replica probe of this
+    * same graph carries the linearity evidence (`graph_tri_x32` 14.0 s:
+    * BASELINE_HISTORY.md "Round-13 full-registry decade sweep"). The
+    * full-graph probe read 32.9 s → 469.6 s for ×32 edges — ~14× time
+    * on 32× data, comfortably sublinear.
     */
   def coPurchaseEdges(lineitem: DataFrame, partMod: Int = 1): DataFrame = {
     val pr = lineitem.select(col("l_orderkey").as("ok"),

@@ -787,9 +787,11 @@ object NorthStarQueries {
     // inverted join (A-side prefix filter + B-side full postings +
     // positional prune, full-set verify) — which is what executes at
     // every tested sf, so this stays the worst-case timing canary the
-    // ScaleCheck probes anchor on (every prefix is half the shingles at
-    // t=0.5). Above the threshold — the 100 TB all-pairs regime the
-    // exact join is spill-bound in — the gate routes automatically
+    // ×32 replica probe anchored on (every prefix is half the shingles
+    // at t=0.5; BASELINE_HISTORY.md "Scale probe (events ×32 …)":
+    // 7.0 → 216 s, at the 31× linear bound). Above the threshold — the
+    // 100 TB all-pairs regime the exact join is spill-bound in — the
+    // gate routes automatically
     // through the bottom-k sketch screen + exact re-verify
     // (bounded A-side volume; DedupSpec pins path parity on a
     // forced-low threshold). The batch regime

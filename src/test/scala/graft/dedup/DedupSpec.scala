@@ -473,7 +473,7 @@ class DedupSpec extends SparkSpec {
     // 12 cells: c in [.375,.556] x hot-mass fraction in {.83,.5,.25};
     // tiny budget binds the cap on the 192-doc fixture (hot df = 192,
     // hot sum-df2 = 368k > 100k budget > cold sum-df2 ~ 26k)
-    val cells = graft.ScaleCheckCapRecall.measure(spark, pairsPerCell = 8,
+    val cells = CapRecallFixture.measure(spark, pairsPerCell = 8,
       budget = 100000L)
     assert(cells.size == 12, s"expected 12 cells, got ${cells.size}")
     val minEst = 0.35
@@ -522,7 +522,7 @@ class DedupSpec extends SparkSpec {
     // (df=8, 10·#groups distinct hashes, ~0.48 of posting mass >=
     // minEst 0.35): the compensation guard must revert to raw
     // estimates, so the measured curve IS the deep-cap recall trade
-    val cells = graft.ScaleCheckCapRecall.measureBulk(spark, pairsPerCell = 8)
+    val cells = CapRecallFixture.measureBulk(spark, pairsPerCell = 8)
     assert(cells.size == 5, s"expected 5 bulk cells, got ${cells.size}")
     val minEst = 0.35
     cells.foreach { c =>

@@ -796,7 +796,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, v)
     }
     val df = rows.toDF("id", "vec")
-    val out = Similarity.cellRouteRecall(df, "id", "vec",
+    val out = CellRouteRecall.cellRouteRecall(df, "id", "vec",
         Seq(0.9, 0.99), sampleN = 64, targetCellRows = 16)
       .collect().map(r => r.getDouble(0) ->
         (r.getLong(1), r.getLong(2), if (r.isNullAt(3)) -1.0 else r.getDouble(3))).toMap
@@ -813,7 +813,7 @@ class SimilaritySpec extends SparkSpec {
   test("cellRoutePlantedRecall: eps=0 analog (tiny eps) is found; " +
     "recall and mean sim are monotone-sane (r15 #5)") {
     val emb = Tables.embeddings(spark, sf()).limit(512)
-    val out = Similarity.cellRoutePlantedRecall(emb, "vec_id", "embedding",
+    val out = CellRouteRecall.cellRoutePlantedRecall(emb, "vec_id", "embedding",
         Seq(0.01, 0.2), nPlant = 32, targetCellRows = 64)
       .collect().map(r => r.getDouble(0) ->
         (r.getDouble(1), r.getLong(2), r.getDouble(4))).toMap
