@@ -12,7 +12,9 @@ channel.
 Suites:
   exact    the 5 r17 defects (value ×3 / rows ×1 / schema ×1) plus a
            query that throws (missing ×1) at sf0.01 with full-output
-           compares. Expect: all CAUGHT.
+           compares. Expect: all CAUGHT. Plus a patch that does not
+           compile (build ×1). Expect: VERIFY-ERROR, and no check.py
+           run.
   sampled  2 sf10 defects whose wrong rows fall OUTSIDE the default
            sampled pred slice (id_a % 10 = 0 / = 1). Each runs the
            check TWICE: GRAFT_PRED_ROT=0 (default slice — expect
@@ -32,13 +34,15 @@ sf_dir defaults: exact → /root/testdata/sf0.01, sampled → /tmp/sf10
 Requires a CLEAN git tree (it edits source and `git checkout`-restores
 after each defect). Exit 0 iff every defect matched its expectation.
 """
-import json, os, subprocess, sys
+import os, re, shutil, subprocess, sys, tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # a defect: patch (file, old, new), the Verify name-filter that covers
 # the affected queries, and per-(rot) expectations: True = check.py
-# must FAIL (caught), False = check.py must PASS (documented blindness)
+# must FAIL (caught), False = check.py must PASS (documented blindness);
+# or VERIFY_ERROR: the patched tree must fail to build
+VERIFY_ERROR = "VERIFY-ERROR"
 EXACT = [
     dict(
         name="off_by_one_threshold",
@@ -63,12 +67,12 @@ EXACT = [
         name="swapped_aliases",
         channel="value",
         file="src/main/scala/graft/queries/TpchQueries.scala",
-        old='      s.sql(q12Sql("orders_sq_v", "lineitem_sq_v"))\n    }),',
+        old='      s.sql(q12Sql("orders_sq_v", "lineitem_sq_v"))\n    },',
         new='      s.sql(q12Sql("orders_sq_v", "lineitem_sq_v"))\n'
             '        .withColumnRenamed("high_line_count", "__t")\n'
             '        .withColumnRenamed("low_line_count", "high_line_count")\n'
             '        .withColumnRenamed("__t", "low_line_count")'
-            '  // SEEDED DEFECT\n    }),',
+            '  // SEEDED DEFECT\n    },',
         filter="tpch_q12",
         expect={0: True},
     ),
@@ -88,10 +92,10 @@ EXACT = [
         name="alias_typo",
         channel="schema",
         file="src/main/scala/graft/queries/TpchQueries.scala",
-        old='      s.sql(q4Sql("orders_sq_v", "lineitem_sq_v"))\n    }),',
+        old='      s.sql(q4Sql("orders_sq_v", "lineitem_sq_v"))\n    },',
         new='      s.sql(q4Sql("orders_sq_v", "lineitem_sq_v"))\n'
             '        .withColumnRenamed("order_count", "order_cnt")'
-            '  // SEEDED DEFECT\n    }),',
+            '  // SEEDED DEFECT\n    },',
         filter="tpch_q4",
         expect={0: True},
     ),
@@ -101,11 +105,24 @@ EXACT = [
         name="throwing_query",
         channel="missing",
         file="src/main/scala/graft/queries/TpchQueries.scala",
-        old='      s.sql(q11Sql("lineitem_sq_v"))\n    }),',
+        old='      s.sql(q11Sql("lineitem_sq_v"))\n    },',
         new='      throw new IllegalStateException("SEEDED DEFECT: throws")\n'
-            '    }),',
+            '    },',
         filter="tpch_q11",
         expect={0: True},
+    ),
+    dict(
+        # a patch that does not compile must stop the leg before
+        # check.py: it reports VERIFY-ERROR, never a verdict read off
+        # output dirs the patched build did not write
+        name="compile_error",
+        channel="build",
+        file="src/main/scala/graft/queries/TpchQueries.scala",
+        old='      s.sql(q11Sql("lineitem_sq_v"))\n    },',
+        new='      s.sql(q11Sql(lineitem_sq_v))  // SEEDED DEFECT: no such name\n'
+            '    },',
+        filter="tpch_q11",
+        expect=VERIFY_ERROR,
     ),
 ]
 
@@ -113,17 +130,17 @@ SAMPLED = [
     dict(
         name="row_drop_outside_pred",
         channel="sampled-rows",
-        file="src/main/scala/graft/queries/NorthStarQueries.scala",
-        old='    "dedup_containment" -> ((s, dir) =>\n'
+        file="src/main/scala/graft/queries/DedupQueries.scala",
+        old='    Query("dedup_containment", (s, dir) =>\n'
             '      Dedup.containmentPairsAuto(Tables.documents(s, dir),'
             ' "doc_id",\n'
-            '        "text", shingleSize = 3, threshold = 0.5)),',
-        new='    "dedup_containment" -> ((s, dir) =>\n'
+            '        "text", shingleSize = 3, threshold = 0.5),',
+        new='    Query("dedup_containment", (s, dir) =>\n'
             '      Dedup.containmentPairsAuto(Tables.documents(s, dir),'
             ' "doc_id",\n'
             '        "text", shingleSize = 3, threshold = 0.5)\n'
             '        // SEEDED DEFECT: silently drop one output slice\n'
-            '        .where(col("id_a") % 10 =!= 3)),',
+            '        .where(col("id_a") % 10 =!= 3),',
         # substring filter also runs the batch/sketch siblings — they
         # stay green and audit as extra negative controls
         filter="dedup_containment",
@@ -132,13 +149,13 @@ SAMPLED = [
     dict(
         name="value_corrupt_outside_pred",
         channel="sampled-value",
-        file="src/main/scala/graft/queries/NorthStarQueries.scala",
-        old='    "dedup_containment_batch" -> ((s, dir) =>\n'
+        file="src/main/scala/graft/queries/DedupQueries.scala",
+        old='    Query("dedup_containment_batch", (s, dir) =>\n'
             '      Dedup.containmentPairsAuto(Tables.documents(s, dir),'
             ' "doc_id",\n'
             '        "text", shingleSize = 3, threshold = 0.5,\n'
-            '        aFilter = col("doc_id") % 2 === 1)),',
-        new='    "dedup_containment_batch" -> ((s, dir) =>\n'
+            '        aFilter = col("doc_id") % 2 === 1),',
+        new='    Query("dedup_containment_batch", (s, dir) =>\n'
             '      Dedup.containmentPairsAuto(Tables.documents(s, dir),'
             ' "doc_id",\n'
             '        "text", shingleSize = 3, threshold = 0.5,\n'
@@ -147,7 +164,7 @@ SAMPLED = [
             '        .withColumn("containment",\n'
             '          when(col("id_a") % 10 === 7,'
             ' col("containment") + 1e-6)\n'
-            '            .otherwise(col("containment")))),',
+            '            .otherwise(col("containment"))),',
         filter="dedup_containment_batch",
         expect={0: False, 3: True},
     ),
@@ -170,13 +187,26 @@ def run_defect(d, sf_dir, preds_path):
                  f"anchor text not found in {d['file']}")]
     open(path, "w").write(src.replace(d["old"], d["new"], 1))
     results = []
-    out_dir = f"/tmp/killmatrix_out_{d['name']}"
+    out_dir = os.path.join(tempfile.gettempdir(),
+                           f"killmatrix_out_{d['name']}")
+    # an earlier matrix run's outputs must never reach this leg's check
+    shutil.rmtree(out_dir, ignore_errors=True)
     try:
         r = sh(f'sbt -batch "runMain graft.Verify {sf_dir} {out_dir} '
-               f'{d["filter"]}" > /tmp/killmatrix_verify.log 2>&1; '
-               f'tail -3 /tmp/killmatrix_verify.log')
-        if r.returncode != 0:
-            return [(d["name"], None, "VERIFY-ERROR", r.stdout[-300:])]
+               f'{d["filter"]}"')
+        vlog = (r.stdout + r.stderr).splitlines()
+        # sbt's own status: nonzero when the build failed, and also
+        # when Verify ran and exited 1 because a query threw — only the
+        # latter prints Verify's "[verify] N failed:" summary, and leaves
+        # the thrown queries' dirs absent for check.py to FAIL
+        threw = any(re.search(r"\[verify\] \d+ failed: ", l) for l in vlog)
+        if r.returncode != 0 and not threw:
+            want = d["expect"] == VERIFY_ERROR
+            return [(d["name"], None,
+                     VERIFY_ERROR + ("" if want else " (UNEXPECTED)"),
+                     vlog[-5:])]
+        if d["expect"] == VERIFY_ERROR:
+            return [(d["name"], None, "BUILT (UNEXPECTED)", vlog[-5:])]
         for rot, want_fail in sorted(d["expect"].items()):
             env = {"GRAFT_PRED_ROT": str(rot)}
             c = sh(f"python3 scripts/check.py {sf_dir} {out_dir} "
@@ -234,7 +264,7 @@ def main():
             else:
                 print("   ", detail)
             if "UNEXPECTED" in verdict or verdict in (
-                    "PATCH-STALE", "VERIFY-ERROR", "CHECK-ERROR"):
+                    "PATCH-STALE", "CHECK-ERROR"):
                 all_ok = False
     print("\n| defect | channel | rot | verdict |")
     print("|---|---|---|---|")

@@ -105,7 +105,7 @@ object Bench {
           passSec += sec
         } catch {
           case e: Throwable =>
-            // raw message; proper JSON escaping happens at emission (jsonStr)
+            // raw message; proper JSON escaping happens at emission (jsonString)
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
         }
         if (inPassEvery > 0 && (qi + 1) % inPassEvery == 0 &&
@@ -125,20 +125,13 @@ object Bench {
     // stdout tail-capture window last round (15 entries truncated)
     def ms(v: Double): Double = math.round(v * 1000) / 1000.0
     // one escape path for EVERY string field (keys, error messages, and
-    // env-provided paths like sfDir/outFile alike): proper JSON escapes
-    // for backslash/quote/control chars, no lossy substitution
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '\\'           => "\\\\"
-        case '"'            => "\\\""
-        case c if c < ' '   => f"\\u${c.toInt}%04x"
-        case c              => c.toString
-      } + "\""
+    // env-provided paths like sfDir/outFile alike): Verify's JSON escaper
+    import Verify.jsonString
     val med = names.filter(times.contains).map(n => n -> median(times(n)))
-    val qs = med.map { case (k, v) => jsonStr(k) + ":" + ms(v) }
+    val qs = med.map { case (k, v) => jsonString(k) + ":" + ms(v) }
       .mkString("{", ",", "}")
     val errs = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+      .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
       .mkString("{", ",", "}")
     val total = ms(med.map(_._2).sum)
     val calibArr = calibSamples.map(ms).mkString("[", ",", "]")
@@ -193,7 +186,7 @@ object Bench {
     val ambientJson =
       s""""pass_totals":$passArr,"pass_totals_norm":$passNormArr,"pass_canary_means":$passCanArr,"inpass_canaries":$inPassArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"canary_idle_ref":$canaryIdleRef,"value_canary_norm":$totalNorm,$ambientJson,"sf":${jsonStr(sfDir)},"config":${jsonStr(config)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"canary_idle_ref":$canaryIdleRef,"value_canary_norm":$totalNorm,$ambientJson,"sf":${jsonString(sfDir)},"config":${jsonString(config)}}"""
     // The full per-query line also persists to a file, resolved to an
     // ABSOLUTE path so running outside the repo root can't silently
     // misplace it (r9 ADVICE); a failed write warns instead of vanishing.
@@ -220,8 +213,8 @@ object Bench {
     // compact line past the tail window, ship a count + pointer instead
     val compactErrs =
       if (errs.length <= 1200) errs
-      else s"""{"_truncated":${jsonStr(s"${errors.size} errors, see full_json")}}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${med.size},"errors":$compactErrs,"error_count":${errors.size},"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"value_canary_norm":$totalNorm,"pass_totals_norm":$passNormArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended,"sf":${jsonStr(sfDir)},"full_json":${jsonStr(outFile)}}""")
+      else s"""{"_truncated":${jsonString(s"${errors.size} errors, see full_json")}}"""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${med.size},"errors":$compactErrs,"error_count":${errors.size},"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"value_canary_norm":$totalNorm,"pass_totals_norm":$passNormArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended,"sf":${jsonString(sfDir)},"full_json":${jsonString(outFile)}}""")
     spark.stop()
   }
 }

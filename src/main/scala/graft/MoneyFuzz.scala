@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.Random
+import graft.queries.Query
 
 /** Seed-fixed cross-engine divergence fuzzer for the money-sum class
   * (VERDICT r13 task #3).
@@ -375,10 +376,9 @@ object MoneyFuzz {
     // the Verify loop: stale case dirs cleared, oracle_sql.json written
     // with the same JSON escaper, thrown cases returned
     val all = cases(nCases, mode)
-    val failed = Verify.run(spark, sfDir, outDir,
-      all.map(c => c.name -> ((s: SparkSession, _: String) =>
-        c.df.map(_(s)).getOrElse(s.sql(c.sql)))),
-      all.map(c => c.name -> c.oracle.getOrElse(c.sql)))
+    val failed = Verify.run(spark, sfDir, outDir, all.map(c =>
+      Query(c.name, (s, _) => c.df.map(_(s)).getOrElse(s.sql(c.sql)),
+        c.oracle.getOrElse(c.sql))))
     println(s"[fuzz] wrote ${all.size} $mode cases to $outDir " +
       s"(seed 42, sf=$sfDir); compare with scripts/check.py")
     spark.stop()

@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{BreadthQueries, NorthStarQueries, ReferenceQueries, TpchQueries}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` maps operator names (SURVEY.md §2 inventory) to
-  * `(spark, sfDir) => DataFrame`; `oracleSql` carries the DuckDB twin for
-  * every SQL-expressible query. Column names/aliases are identical on
-  * both sides (the driver sorts columns by name before hashing).
+  * `(spark, sfDir) => DataFrame`; `oracleSql` carries each query's DuckDB
+  * twin. Column names/aliases are identical on both sides (the driver
+  * sorts columns by name before hashing). Both maps derive from one
+  * record list, so every query has exactly one oracle.
   */
 object SparkEntry {
 
@@ -16,26 +17,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("fraud_window_sum")(spark, "/root/testdata/sf0.001")
 
-  /** Every query registry, in merge order. `queries`/`oracleSql` AND the
-    * collision guard in SparkEntrySpec derive from this one list, so a
-    * new registry file only has to be added here.
+  /** Every registry record, family by family. A new family file only has
+    * to be added here; SparkEntrySpec guards the names' uniqueness.
     */
-  val registries: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
-    Seq(
-      (ReferenceQueries.defs, ReferenceQueries.oracles),
-      (BreadthQueries.defs, BreadthQueries.oracles),
-      (NorthStarQueries.defs, NorthStarQueries.oracles),
-      (TpchQueries.defs, TpchQueries.oracles))
+  val records: Seq[Query] = ReferenceQueries.all ++ BreadthQueries.all ++
+    GraphQueries.all ++ TextQueries.all ++ TokenQueries.all ++
+    SamplingQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
+    MultimodalQueries.all ++ TpchQueries.all
 
-  /** One entry per implemented operator from SURVEY.md §2. Cached: the
-    * registry maps are immutable literals, and per-query callers (Bench,
-    * Verify) would otherwise pay the O(n) merge on every lookup.
+  /** Records by name. Its iteration order is the registry order that
+    * `queries`, `oracleSql`, Verify's run and its JSON files follow.
+    */
+  lazy val byName: Map[String, Query] = records.map(q => q.name -> q).toMap
+
+  /** One entry per implemented operator from SURVEY.md §2. Cached:
+    * per-query callers (Bench, Verify) look names up one at a time.
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    registries.map(_._1).reduce(_ ++ _)
+    byName.map { case (n, q) => n -> q.body }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check.
+    * the same parquet tables. Rendered on first read, so a main that
+    * dumps it (Verify) sets `OracleAux.sqlSfDir` before reading.
     */
-  lazy val oracleSql: Map[String, String] = registries.map(_._2).reduce(_ ++ _)
+  lazy val oracleSql: Map[String, String] =
+    byName.map { case (n, q) => n -> q.oracle }
 }

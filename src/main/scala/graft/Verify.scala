@@ -1,6 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import graft.queries.Query
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1,
   * naming the failed queries, if any selected query threw. */
@@ -17,27 +18,26 @@ object Verify {
     } else _ => true
     val spark = Session()
     val failed = run(spark, sfDir, outDir,
-      SparkEntry.queries.toSeq.filter(kv => only(kv._1)),
-      SparkEntry.oracleSql.toSeq.filter(kv => only(kv._1)))
+      SparkEntry.byName.values.filter(q => only(q.name)).toSeq)
     spark.stop()
     exitIfFailed("verify", failed)
   }
 
   /** Runs each query into `outDir/<name>` (parquet), then writes
-    * `outDir/oracle_sql.json` from `oracles` and `outDir/timings.json`
-    * (per-query wall seconds — the decade-anchor table BASELINE.md
-    * records). Each query's directory is deleted before it runs, so a
+    * `outDir/oracle_sql.json` (each query's oracle, in run order) and
+    * `outDir/timings.json` (per-query wall seconds — the decade-anchor
+    * table BASELINE.md records). Each query's directory is deleted before it runs, so a
     * query that throws leaves no output, never an earlier run's, and
     * scripts/check.py FAILs it. Returns the names of the queries that
     * threw, in run order.
     */
   private[graft] def run(spark: SparkSession, sfDir: String, outDir: String,
-      queries: Seq[(String, (SparkSession, String) => DataFrame)],
-      oracles: Seq[(String, String)]): Seq[String] = {
+      queries: Seq[Query]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val failed = Seq.newBuilder[String]
-    queries.foreach { case (name, fn) =>
+    queries.foreach { q =>
+      val name = q.name
       val dir = new java.io.File(s"$outDir/$name")
       new scala.reflect.io.Directory(dir).deleteRecursively()
       // repartition(1), NOT coalesce(1): both emit the single part
@@ -49,7 +49,7 @@ object Verify {
       // output-sized while upstream keeps full parallelism.
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).repartition(1).write.mode("overwrite")
+        q.body(spark, sfDir).repartition(1).write.mode("overwrite")
           .parquet(dir.getPath)
         timings(name) = (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
@@ -57,8 +57,8 @@ object Verify {
         failed += name
       }
     }
-    val json = oracles
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+    val json = queries
+      .map(q => s"${jsonString(q.name)}: ${jsonString(q.oracle)}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // formatLocal(Locale.ROOT): the default-locale format would emit

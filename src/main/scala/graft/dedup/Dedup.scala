@@ -356,15 +356,9 @@ object Dedup {
   /** Connected components over a near-duplicate pair graph — the cluster
     * step of corpus dedup: a near-dup PAIR list (from MinHash/SimHash/
     * embedding LSH) becomes disjoint clusters, and one canonical doc
-    * (min id) is kept per cluster.
-    *
-    * Two algorithms behind one signature:
-    *  - `"alternating"` (default) — large-star/small-star pointer
-    *    doubling ([[ccAlternating]]): O(log n) rounds independent of
-    *    graph diameter, the 100 TB-safe choice;
-    *  - `"minlabel"` — min-label propagation ([[ccMinLabel]]):
-    *    diameter-of-graph rounds, fine for the shallow clusters real
-    *    near-dup graphs produce.
+    * (min id) is kept per cluster. Runs alternating large-star/small-star
+    * pointer doubling ([[connectedComponentsWithRounds]]): O(log n)
+    * rounds independent of graph diameter, the 100 TB-safe choice.
     * The driver sees only per-round fixpoint aggregates, never node
     * data; rounds are checkpointed (reliable dir when the session has
     * one configured, else localCheckpoint — see [[checkpoint]]).
@@ -374,27 +368,11 @@ object Dedup {
     * (isolated docs are their own trivial cluster).
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 50,
-                          algorithm: String = "alternating"): DataFrame =
-    connectedComponentsWithRounds(edges, aCol, bCol, maxIters, algorithm)._1
-
-  /** [[connectedComponents]] plus the number of rounds it took — the
-    * O(log n) evidence for long-chain graphs (16 rounds on a 20,000-node
-    * chain, 21 on a 640,000-node one: BASELINE_HISTORY.md "round-7/8
-    * rows").
-    */
-  def connectedComponentsWithRounds(edges: DataFrame, aCol: String,
-                                    bCol: String, maxIters: Int = 50,
-                                    algorithm: String = "alternating")
-      : (DataFrame, Int) = algorithm match {
-    case "alternating" => ccAlternating(edges, aCol, bCol, maxIters)
-    case "minlabel"    => ccMinLabel(edges, aCol, bCol, maxIters)
-    case other => throw new IllegalArgumentException(
-      s"unknown connected-components algorithm '$other'")
-  }
+                          maxIters: Int = 50): DataFrame =
+    connectedComponentsWithRounds(edges, aCol, bCol, maxIters)._1
 
   /** Shared reliable-dir-aware lineage truncation — see
-    * [[graft.Checkpoints]]. LAZY here: both CC loops follow every
+    * [[graft.Checkpoints]]. LAZY here: the CC loop follows every
     * checkpoint with exactly one action (the fixpoint aggregate), which
     * materializes it — an eager checkpoint would run a second job per
     * round just to write the same blocks, doubling the per-round fixed
@@ -403,38 +381,12 @@ object Dedup {
   private def checkpoint(df: DataFrame): DataFrame =
     graft.Checkpoints.checkpoint(df, eager = false)
 
-  /** Min-label propagation: converges in `diameter(graph)` rounds — the
-    * cheap path for the shallow clusters near-dup graphs produce, kept
-    * for comparison; [[ccAlternating]] is the default (long chains make
-    * diameter rounds quadratic work in the worst case).
-    */
-  private def ccMinLabel(edges: DataFrame, aCol: String, bCol: String,
-                         maxIters: Int): (DataFrame, Int) = {
-    val sym = edges.select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .union(edges.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-    var labels = checkpoint(sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var iters = 0
-    var changed = 1L
-    while (changed > 0 && iters < maxIters) {
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
-      val updated = checkpoint(labels.as("l")
-        .join(nbrMin, col("l.id") === nbrMin("src"), "left")
-        .select(col("l.id").as("id"),
-          least(col("l.label"), coalesce(col("nbr_label"), col("l.label")))
-            .as("label"),
-          col("l.label").as("__old")))
-      changed = updated.where(col("label") < col("__old")).count()
-      labels = updated.select("id", "label")
-      iters += 1
-    }
-    (labels, iters)
-  }
-
-  /** Alternating large-star/small-star (Kiveris et al., "Connected
+  /** [[connectedComponents]] plus the number of rounds it took — the
+    * O(log n) evidence for long-chain graphs (16 rounds on a 20,000-node
+    * chain, 21 on a 640,000-node one: BASELINE_HISTORY.md "round-7/8
+    * rows").
+    *
+    * Alternating large-star/small-star (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC '14) — pointer-doubling
     * for edge lists: converges in O(log n) rounds regardless of graph
     * diameter, where min-label propagation needs diameter rounds (a
@@ -457,8 +409,9 @@ object Dedup {
     * round; both steps are monotone (labels only decrease), so a stable
     * signature means a stable edge set.
     */
-  private def ccAlternating(edges: DataFrame, aCol: String, bCol: String,
-                            maxIters: Int): (DataFrame, Int) = {
+  def connectedComponentsWithRounds(edges: DataFrame, aCol: String,
+                                    bCol: String, maxIters: Int = 50)
+      : (DataFrame, Int) = {
     // canonical direction: (big, small); self-loops dropped
     def canon(e: DataFrame): DataFrame =
       e.where(col("src") =!= col("dst"))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.etl.{Aggregation, EventsStage, Mapping}
@@ -14,75 +13,123 @@ import graft.stream.Fraud
   */
 object ReferenceQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Fraud thresholds chosen so sf0.001 already yields rows (driver
     * smoke-checks rows > 0): 10s window sums > 150 → 40 rows at sf0.001.
     */
   val WindowSec = 10
   val Threshold = 150.0
 
-  def defs: Map[String, Q] = Map(
+  // BOUNDARY-SAFETY NOTE (the r13 .xx5 money-rounding class): the
+  // fraud and wire-spec sums below keep the reference's
+  // round(sum(value), 2) spelling deliberately. Their groups are
+  // BOUNDED by construction — (user, 30s window) holds at most a few
+  // dozen events and the 10-dim wire rollup a handful of
+  // transactions at any corpus scale — so the float sum of n 2dp
+  // values sits within n·ulp ≪ half a cent of the exact 2dp total
+  // and round(·, 2) recovers it exactly in any accumulation order.
+  // The class only escapes when per-group n grows with the corpus
+  // (event_type / per-customer / grand-total groups — those are
+  // migrated to exact integer cents) or when the rounded value has
+  // >2dp precision (products, divisions — migrated in r13).
+  val all: Seq[Query] = Seq(
     // A1 + P4 + P5 + T1-T5: tumbling window grouped sum with HAVING
-    "fraud_window_sum" -> ((s, dir) =>
-      Fraud.windowSum(Tables.events(s, dir), WindowSec, Threshold)),
+    Query("fraud_window_sum", (s, dir) =>
+      Fraud.windowSum(Tables.events(s, dir), WindowSec, Threshold),
+      s"""SELECT user_id,
+         |  CAST(floor(epoch(ts)/$WindowSec)*$WindowSec AS BIGINT) AS window_start,
+         |  CAST(floor(epoch(ts)/$WindowSec)*$WindowSec + $WindowSec AS BIGINT) AS window_end,
+         |  round(sum(value), 2) AS total_value
+         |FROM events GROUP BY 1, 2, 3
+         |HAVING round(sum(value), 2) > $Threshold""".stripMargin),
 
     // literal grouping parity with flink_app/app.py:78 (includes unique id)
-    "fraud_literal_parity" -> ((s, dir) =>
-      Fraud.literalParity(Tables.events(s, dir), WindowSec, Threshold)),
+    Query("fraud_literal_parity", (s, dir) =>
+      Fraud.literalParity(Tables.events(s, dir), WindowSec, Threshold),
+      s"""SELECT user_id, event_id, round(sum(value), 2) AS value,
+         |  CAST(floor(epoch(ts)/$WindowSec)*$WindowSec + $WindowSec AS BIGINT) AS window_end
+         |FROM events GROUP BY user_id, event_id, floor(epoch(ts)/$WindowSec)
+         |HAVING round(sum(value), 2) > $Threshold""".stripMargin),
 
     // P1 + P2 + P8 + S8: JSON extract → cast/rename → unnest → partition col
-    "etl_stage_mapping" -> ((s, dir) =>
-      EventsStage.stage(Tables.events(s, dir))),
+    Query("etl_stage_mapping", (s, dir) =>
+      EventsStage.stage(Tables.events(s, dir)),
+      """SELECT event_id, user_id, event_type,
+        |  CAST(value AS DOUBLE) AS amount,
+        |  CAST(json_extract(props, '$.k') AS INTEGER) AS k,
+        |  CAST(CAST(json_extract(props, '$.k') AS INTEGER) % 10 AS INTEGER) AS k_bucket,
+        |  CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
+        |FROM events""".stripMargin),
 
     // P3 + A2 + A3: PII drop then multi-dim grouped sum
-    "spec_pii_agg" -> ((s, dir) => {
+    Query("spec_pii_agg", (s, dir) => {
       val li = Mapping.dropFields(Tables.lineitem(s, dir), "l_partkey", "l_suppkey")
       Aggregation.sparkAggregate(li,
         Seq("l_returnflag", "l_linestatus", "l_linenumber"),
         Seq(Aggregation.AggSpec("l_quantity", "sum", Some("sum_qty_raw"))))
         .select(col("l_returnflag"), col("l_linestatus"), col("l_linenumber"),
           round(col("sum_qty_raw"), 2).as("sum_qty"))
-    }),
+    },
+      """SELECT l_returnflag, l_linestatus, l_linenumber,
+        |  round(sum(l_quantity), 2) AS sum_qty
+        |FROM lineitem GROUP BY 1, 2, 3""".stripMargin),
 
     // A2 empty-groups fallback → global aggregate (spec.py:17-21)
-    "agg_global_fallback" -> ((s, dir) => {
+    Query("agg_global_fallback", (s, dir) => {
       val li = Tables.lineitem(s, dir)
       Aggregation.sparkAggregate(li, Seq.empty, Seq(
         Aggregation.AggSpec("l_quantity", "sum", Some("sum_qty_raw")),
         Aggregation.AggSpec("l_orderkey", "count", Some("n")),
         Aggregation.AggSpec("l_extendedprice", "max", Some("max_price"))))
         .select(round(col("sum_qty_raw"), 2).as("sum_qty"), col("n"), col("max_price"))
-    }),
+    },
+      """SELECT round(sum(l_quantity), 2) AS sum_qty,
+        |  count(l_orderkey) AS n,
+        |  max(l_extendedprice) AS max_price
+        |FROM lineitem""".stripMargin),
 
     // P6 + §2.6: point lookup in sort-key order
-    "serve_point_lookup" -> ((s, dir) =>
+    Query("serve_point_lookup", (s, dir) =>
       Serving.pointLookup(
         Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"),
-        "user_id", 7L, "event_id")),
+        "user_id", 7L, "event_id"),
+      "SELECT event_id, user_id, event_type, value FROM events WHERE user_id = 7 ORDER BY event_id"),
 
     // P7: full scan (identity projection)
-    "serve_scan" -> ((s, dir) =>
-      Serving.scanAll(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"))),
+    Query("serve_scan", (s, dir) =>
+      Serving.scanAll(Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")),
+      "SELECT event_id, user_id, event_type, value FROM events"),
 
     // F6 + S10: TTL stamping (30 days past event time)
-    "serve_ttl_stamp" -> ((s, dir) =>
-      Serving.withTtl(Tables.events(s, dir), "ts").select("event_id", "ttl")),
+    Query("serve_ttl_stamp", (s, dir) =>
+      Serving.withTtl(Tables.events(s, dir), "ts").select("event_id", "ttl"),
+      s"SELECT event_id, CAST(floor(epoch(ts)) + ${Serving.TtlSeconds} AS BIGINT) AS ttl FROM events"),
 
     // custom keyed state (flatMapGroupsWithState analog): first upward
     // crossing of a lifetime-spend threshold per user. This is the batch
     // twin of StatefulSpend.streamingSpendAlerts; the spec asserts
     // stream == batch on ordered replay.
-    "stateful_spend_alert" -> ((s, dir) =>
+    Query("stateful_spend_alert", (s, dir) =>
       graft.streaming.StatefulSpend.batchSpendAlerts(
-        Tables.events(s, dir), threshold = 200.0)),
+        Tables.events(s, dir), threshold = 200.0),
+      """WITH r AS (
+        |  SELECT user_id, ts, value,
+        |    sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running
+        |  FROM events)
+        |SELECT user_id,
+        |  CAST(floor(epoch(ts)) AS BIGINT) AS alert_epoch,
+        |  round(running, 2) AS total_at_alert
+        |FROM r WHERE running >= 200.0 AND running - value < 200.0""".stripMargin),
 
     // T10: incremental-batch bookmark analog — a high-watermark predicate
     // selecting only records newer than the last processed point
-    "incremental_high_watermark" -> ((s, dir) =>
+    Query("incremental_high_watermark", (s, dir) =>
       Tables.eventsAfter(s, dir, 1705276800L) // 2024-01-15
         .select(col("event_id"), col("user_id"), col("value"),
-          unix_timestamp(col("ts")).as("ts_epoch"))),
+          unix_timestamp(col("ts")).as("ts_epoch")),
+      """SELECT event_id, user_id, value,
+        |  CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
+        |FROM events WHERE ts > to_timestamp(1705276800)""".stripMargin),
 
     // S11 + F9-F11 + P1-P3 + A3: the reference's own wire→stage→spec
     // pipeline end-to-end on generated transactions (deterministic seed;
@@ -90,7 +137,7 @@ object ReferenceQueries {
     // WIRE table is materialized to parquet (the raw-zone landing it
     // models anyway), so the stage+spec half is fully DuckDB-checkable —
     // the generator draws themselves are covered by TransactionGenSpec.
-    "pipeline_wire_to_spec" -> ((s, dir) => {
+    Query("pipeline_wire_to_spec", (s, dir) => {
       val n = if (dir.contains("0.1")) 100000L else 10000L
       val wirePath = OracleAux.dir(dir, "wire")
       graft.gen.TransactionGen.transactions(s, n)
@@ -98,7 +145,19 @@ object ReferenceQueries {
       graft.gen.TransactionGen.spec(
         graft.gen.TransactionGen.stage(s.read.parquet(wirePath)))
         .withColumn("sum_valor", round(col("sum_valor"), 2))
-    }),
+    },
+      // stage+spec over the materialized wire table (struct unnest, string
+      // →double casts, PII-free 10-dim rollup) — written by the query
+      // immediately before the check reads it
+      s"""SELECT w.bandeira, w.numero_cartao, w.exp, w.tipo_cartao,
+        |  w.cor_cartao, w.tipo_transacao,
+        |  w.localizacao.cidade AS cidade,
+        |  CAST(w.localizacao.lat AS DOUBLE) AS latitude,
+        |  CAST(w.localizacao.lng AS DOUBLE) AS longitude,
+        |  w.localizacao.estado AS estado,
+        |  round(sum(CAST(w.valor AS DOUBLE)), 2) AS sum_valor
+        |FROM read_parquet('${OracleAux.sqlDir("wire")}/*.parquet') w
+        |GROUP BY 1, 2, 3, 4, 5, 6, 7, 8, 9, 10""".stripMargin),
 
     // S3/crawler analog (historical.py:216,323-337 + stage.py:20-22):
     // raw-zone gzip NDJSON landed by the firehose writer, read BACK with
@@ -106,7 +165,7 @@ object ReferenceQueries {
     // then stage-mapped: casts, partition-column derivation, date
     // derivation. ts travels as epoch micros so neither engine's
     // timestamp inference is in play.
-    "raw_json_to_stage" -> ((s, dir) => {
+    Query("raw_json_to_stage", (s, dir) => {
       val rawPath = OracleAux.dir(dir, "raw_events_json")
       graft.etl.Writers.gzipJson(
         Tables.events(s, dir).select(col("event_id"), col("user_id"),
@@ -117,7 +176,12 @@ object ReferenceQueries {
         round(col("value"), 2).as("value_2dp"),
         (col("user_id") % 16).cast("integer").as("k_bucket"),
         to_date(timestamp_micros(col("ts_us"))).as("event_date"))
-    }),
+    },
+      s"""SELECT event_id, user_id, event_type,
+        |  round(value, 2) AS value_2dp,
+        |  CAST(user_id % 16 AS INTEGER) AS k_bucket,
+        |  CAST(make_timestamp(ts_us) AS DATE) AS event_date
+        |FROM read_json_auto('${OracleAux.sqlDir("raw_events_json")}/*.json.gz')""".stripMargin),
 
     // S3/crawler nested-struct inference (historical.py:236-243 landed a
     // nested `localizacao` object; stage.py:38-41 read it back through
@@ -125,7 +189,7 @@ object ReferenceQueries {
     // infer the struct tree on read (no user schema), then project
     // dotted paths out of the INFERRED tree. DuckDB's read_json_auto
     // infers the same nesting for the twin.
-    "raw_json_nested_infer" -> ((s, dir) => {
+    Query("raw_json_nested_infer", (s, dir) => {
       val rawPath = OracleAux.dir(dir, "raw_events_nested_json")
       graft.etl.Writers.gzipJson(
         Tables.events(s, dir).select(
@@ -143,13 +207,19 @@ object ReferenceQueries {
         col("who.geo.region").as("region"),
         col("who.geo.city").as("city"),
         round(col("value"), 2).as("value_2dp"))
-    }),
+    },
+      s"""SELECT event_id,
+        |  who.user_id AS user_id,
+        |  who.geo.region AS region,
+        |  who.geo.city AS city,
+        |  round(value, 2) AS value_2dp
+        |FROM read_json_auto('${OracleAux.sqlDir("raw_events_nested_json")}/*.json.gz')""".stripMargin),
 
     // schema evolution across raw-zone generations (the crawler problem
     // one deploy later): generation 1 landed without `event_type`,
     // generation 2 added it; mergeSchema reads both under one schema
     // (missing column → NULL) — DuckDB twin via union_by_name
-    "raw_schema_evolution" -> ((s, dir) => {
+    Query("raw_schema_evolution", (s, dir) => {
       val g1 = OracleAux.dir(dir, "schema_evo_g1")
       val g2 = OracleAux.dir(dir, "schema_evo_g2")
       val e = Tables.events(s, dir)
@@ -165,12 +235,21 @@ object ReferenceQueries {
         // (see BreadthQueries.moneySum: the r13 .xx5-boundary class)
         .agg(count(lit(1)).as("n"),
           BreadthQueries.moneySum(col("value")).as("sum_value"))
-    }),
+    },
+      s"""SELECT coalesce(event_type, '__pre_schema') AS event_type,
+        |  count(*) AS n,
+        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 AS sum_value
+        |FROM read_parquet(
+        |  ['${OracleAux.sqlDir("schema_evo_g1")}/*.parquet',
+        |   '${OracleAux.sqlDir("schema_evo_g2")}/*.parquet'],
+        |  union_by_name = true)
+        |GROUP BY 1""".stripMargin),
 
     // columnar-format breadth: same rows through an ORC round-trip must
     // aggregate identically to the parquet source (lossless fidelity —
     // the oracle computes from the original table)
-    "format_orc_roundtrip" -> ((s, dir) => {
+    Query("format_orc_roundtrip", (s, dir) => {
       val p = OracleAux.dir(dir, "orc_events")
       Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")
         .write.mode("overwrite").orc(p)
@@ -179,11 +258,16 @@ object ReferenceQueries {
           BreadthQueries.moneySum(col("value")).as("sum_value"),
           min(col("event_id")).as("min_event_id"),
           max(col("user_id")).as("max_user_id"))
-    }),
+    },
+      """SELECT event_type, count(*) AS n,
+        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 AS sum_value,
+        |  min(event_id) AS min_event_id, max(user_id) AS max_user_id
+        |FROM events GROUP BY 1""".stripMargin),
 
     // text-format breadth: Spark-written CSV read back by BOTH engines
     // (DuckDB parses the same files) — cross-engine escaping/typing
-    "format_csv_roundtrip" -> ((s, dir) => {
+    Query("format_csv_roundtrip", (s, dir) => {
       val p = OracleAux.dir(dir, "csv_events")
       Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")
         .write.mode("overwrite").option("header", "true").csv(p)
@@ -193,14 +277,22 @@ object ReferenceQueries {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           BreadthQueries.moneySum(col("value")).as("sum_value"))
-    }),
+    },
+      s"""SELECT event_type, count(*) AS n,
+        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
+        |    / 100.0 AS sum_value
+        |FROM read_csv('${OracleAux.sqlDir("csv_events")}/*.csv',
+        |  header = true,
+        |  columns = {'event_id': 'BIGINT', 'user_id': 'BIGINT',
+        |             'event_type': 'VARCHAR', 'value': 'DOUBLE'})
+        |GROUP BY 1""".stripMargin),
 
     // CDC apply with tombstones: latest change per key wins (seq desc),
     // op='D' deletes the row, 'U' updates the balance — the ordered-
     // upsert semantics every lakehouse MERGE pipeline implements.
     // Changes are derived deterministically from orders (key=o_custkey,
     // seq=o_orderkey, op from o_orderstatus: P→D, else U→o_totalprice)
-    "etl_cdc_apply" -> ((s, dir) => {
+    Query("etl_cdc_apply", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_custkey")).orderBy(col("o_orderkey").desc)
       val latest = Tables.orders(s, dir)
@@ -214,127 +306,7 @@ object ReferenceQueries {
         .select(col("c_custkey"), col("c_name"),
           round(when(col("op") === "U", col("o_totalprice"))
             .otherwise(col("c_acctbal")), 2).as("final_bal"))
-    })
-  )
-
-  def oracles: Map[String, String] = Map(
-    // BOUNDARY-SAFETY NOTE (the r13 .xx5 money-rounding class): the
-    // fraud and wire-spec sums below keep the reference's
-    // round(sum(value), 2) spelling deliberately. Their groups are
-    // BOUNDED by construction — (user, 30s window) holds at most a few
-    // dozen events and the 10-dim wire rollup a handful of
-    // transactions at any corpus scale — so the float sum of n 2dp
-    // values sits within n·ulp ≪ half a cent of the exact 2dp total
-    // and round(·, 2) recovers it exactly in any accumulation order.
-    // The class only escapes when per-group n grows with the corpus
-    // (event_type / per-customer / grand-total groups — those are
-    // migrated to exact integer cents) or when the rounded value has
-    // >2dp precision (products, divisions — migrated in r13).
-    "fraud_window_sum" ->
-      s"""SELECT user_id,
-         |  CAST(floor(epoch(ts)/$WindowSec)*$WindowSec AS BIGINT) AS window_start,
-         |  CAST(floor(epoch(ts)/$WindowSec)*$WindowSec + $WindowSec AS BIGINT) AS window_end,
-         |  round(sum(value), 2) AS total_value
-         |FROM events GROUP BY 1, 2, 3
-         |HAVING round(sum(value), 2) > $Threshold""".stripMargin,
-
-    "fraud_literal_parity" ->
-      s"""SELECT user_id, event_id, round(sum(value), 2) AS value,
-         |  CAST(floor(epoch(ts)/$WindowSec)*$WindowSec + $WindowSec AS BIGINT) AS window_end
-         |FROM events GROUP BY user_id, event_id, floor(epoch(ts)/$WindowSec)
-         |HAVING round(sum(value), 2) > $Threshold""".stripMargin,
-
-    "etl_stage_mapping" ->
-      """SELECT event_id, user_id, event_type,
-        |  CAST(value AS DOUBLE) AS amount,
-        |  CAST(json_extract(props, '$.k') AS INTEGER) AS k,
-        |  CAST(CAST(json_extract(props, '$.k') AS INTEGER) % 10 AS INTEGER) AS k_bucket,
-        |  CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
-        |FROM events""".stripMargin,
-
-    "spec_pii_agg" ->
-      """SELECT l_returnflag, l_linestatus, l_linenumber,
-        |  round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY 1, 2, 3""".stripMargin,
-
-    "agg_global_fallback" ->
-      """SELECT round(sum(l_quantity), 2) AS sum_qty,
-        |  count(l_orderkey) AS n,
-        |  max(l_extendedprice) AS max_price
-        |FROM lineitem""".stripMargin,
-
-    "serve_point_lookup" ->
-      "SELECT event_id, user_id, event_type, value FROM events WHERE user_id = 7 ORDER BY event_id",
-
-    "serve_scan" ->
-      "SELECT event_id, user_id, event_type, value FROM events",
-
-    "serve_ttl_stamp" ->
-      s"SELECT event_id, CAST(floor(epoch(ts)) + ${Serving.TtlSeconds} AS BIGINT) AS ttl FROM events",
-
-    "incremental_high_watermark" ->
-      """SELECT event_id, user_id, value,
-        |  CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
-        |FROM events WHERE ts > to_timestamp(1705276800)""".stripMargin,
-
-    // stage+spec over the materialized wire table (struct unnest, string
-    // →double casts, PII-free 10-dim rollup) — written by the query
-    // immediately before the check reads it
-    "pipeline_wire_to_spec" ->
-      s"""SELECT w.bandeira, w.numero_cartao, w.exp, w.tipo_cartao,
-        |  w.cor_cartao, w.tipo_transacao,
-        |  w.localizacao.cidade AS cidade,
-        |  CAST(w.localizacao.lat AS DOUBLE) AS latitude,
-        |  CAST(w.localizacao.lng AS DOUBLE) AS longitude,
-        |  w.localizacao.estado AS estado,
-        |  round(sum(CAST(w.valor AS DOUBLE)), 2) AS sum_valor
-        |FROM read_parquet('${OracleAux.sqlDir("wire")}/*.parquet') w
-        |GROUP BY 1, 2, 3, 4, 5, 6, 7, 8, 9, 10""".stripMargin,
-
-    "raw_json_to_stage" ->
-      s"""SELECT event_id, user_id, event_type,
-        |  round(value, 2) AS value_2dp,
-        |  CAST(user_id % 16 AS INTEGER) AS k_bucket,
-        |  CAST(make_timestamp(ts_us) AS DATE) AS event_date
-        |FROM read_json_auto('${OracleAux.sqlDir("raw_events_json")}/*.json.gz')""".stripMargin,
-
-    "raw_json_nested_infer" ->
-      s"""SELECT event_id,
-        |  who.user_id AS user_id,
-        |  who.geo.region AS region,
-        |  who.geo.city AS city,
-        |  round(value, 2) AS value_2dp
-        |FROM read_json_auto('${OracleAux.sqlDir("raw_events_nested_json")}/*.json.gz')""".stripMargin,
-
-    "raw_schema_evolution" ->
-      s"""SELECT coalesce(event_type, '__pre_schema') AS event_type,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_value
-        |FROM read_parquet(
-        |  ['${OracleAux.sqlDir("schema_evo_g1")}/*.parquet',
-        |   '${OracleAux.sqlDir("schema_evo_g2")}/*.parquet'],
-        |  union_by_name = true)
-        |GROUP BY 1""".stripMargin,
-
-    "format_orc_roundtrip" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_value,
-        |  min(event_id) AS min_event_id, max(user_id) AS max_user_id
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "format_csv_roundtrip" ->
-      s"""SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 AS sum_value
-        |FROM read_csv('${OracleAux.sqlDir("csv_events")}/*.csv',
-        |  header = true,
-        |  columns = {'event_id': 'BIGINT', 'user_id': 'BIGINT',
-        |             'event_type': 'VARCHAR', 'value': 'DOUBLE'})
-        |GROUP BY 1""".stripMargin,
-
-    "etl_cdc_apply" ->
+    },
       """WITH latest AS (
         |  SELECT o_custkey,
         |    CASE WHEN o_orderstatus = 'P' THEN 'D' ELSE 'U' END AS op,
@@ -348,17 +320,6 @@ object ReferenceQueries {
         |  round(CASE WHEN latest.op = 'U' THEN latest.o_totalprice
         |    ELSE c_acctbal END, 2) AS final_bal
         |FROM customer LEFT JOIN latest ON c_custkey = o_custkey
-        |WHERE latest.op IS NULL OR latest.op <> 'D'""".stripMargin,
-
-    "stateful_spend_alert" ->
-      """WITH r AS (
-        |  SELECT user_id, ts, value,
-        |    sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running
-        |  FROM events)
-        |SELECT user_id,
-        |  CAST(floor(epoch(ts)) AS BIGINT) AS alert_epoch,
-        |  round(running, 2) AS total_at_alert
-        |FROM r WHERE running >= 200.0 AND running - value < 200.0""".stripMargin
+        |WHERE latest.op IS NULL OR latest.op <> 'D'""".stripMargin)
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.model.Tables
@@ -31,8 +30,6 @@ import graft.model.Tables
   * carry a total-order tiebreak so the selected set is deterministic.
   */
 object TpchQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def dec(c: String) = col(c).cast(DecimalType(18, 2))
   private val one = lit(1).cast(DecimalType(18, 2))
@@ -413,12 +410,11 @@ object TpchQueries {
       |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
       |LIMIT 100""".stripMargin
 
-  def defs: Map[String, Q] = Map(
-
+  val all: Seq[Query] = Seq(
     // q3 — shipping priority: unshipped high-value orders for one
     // segment. customer(segment-filtered) broadcasts; orders⋈lineitem
     // shuffles on orderkey; LIMIT 10 = heap top-k.
-    "tpch_q3_shipping_priority" -> ((s, dir) => {
+    Query("tpch_q3_shipping_priority", (s, dir) => {
       val pivot = lit("1997-06-01").cast("timestamp")
       val c = Tables.customer(s, dir).where(col("c_mktsegment") === "BUILDING")
       val o = Tables.orders(s, dir).where(col("o_orderdate") < pivot)
@@ -430,13 +426,22 @@ object TpchQueries {
         .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
         .limit(10)
         .select("l_orderkey", "revenue", "o_orderdate")
-    }),
+    },
+      s"""SELECT l_orderkey, $revenueSql, CAST(o_orderdate AS DATE) AS o_orderdate
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1997-06-01'
+        |  AND l_shipdate > TIMESTAMP '1997-06-01'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, o_orderdate, l_orderkey
+        |LIMIT 10""".stripMargin),
 
     // q5 — local supplier volume: 6-way join, revenue per nation for
     // one region-year where customer and supplier share a nation.
     // nation/region/supplier broadcast; customer⋈orders and ⋈lineitem
     // shuffle on their keys.
-    "tpch_q5_local_supplier_volume" -> ((s, dir) => {
+    Query("tpch_q5_local_supplier_volume", (s, dir) => {
       val c = Tables.customer(s, dir)
       val o = Tables.orders(s, dir)
         .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -454,23 +459,40 @@ object TpchQueries {
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
         .agg(revenue)
-    }),
+    },
+      s"""SELECT n_name, $revenueSql
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |GROUP BY n_name""".stripMargin),
 
     // q6 — forecast revenue change: pure scan-filter-agg; every
     // predicate reaches the parquet scan (PushedFilters), one partial+
     // final agg, no shuffle of data rows.
-    "tpch_q6_forecast_revenue" -> ((s, dir) =>
+    Query("tpch_q6_forecast_revenue", (s, dir) =>
       Tables.lineitem(s, dir)
         .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
                col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
                col("l_discount") >= 0.04 && col("l_discount") <= 0.06 &&
                col("l_quantity") < 24)
         .agg(sum(dec("l_extendedprice") * dec("l_discount"))
-          .cast("double").as("revenue"))),
+          .cast("double").as("revenue")),
+      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
+        |                CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_discount >= 0.04 AND l_discount <= 0.06
+        |  AND l_quantity < 24""".stripMargin),
 
     // q10 — returned-item reporting: revenue lost to returns per
     // customer in a quarter; nation broadcasts, LIMIT 20 heap top-k.
-    "tpch_q10_returned_items" -> ((s, dir) => {
+    Query("tpch_q10_returned_items", (s, dir) => {
       val c = Tables.customer(s, dir)
       val o = Tables.orders(s, dir)
         .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -485,13 +507,23 @@ object TpchQueries {
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-    }),
+    },
+      s"""SELECT c_custkey, c_name, $revenueSql, c_acctbal, n_name
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01'
+        |GROUP BY c_custkey, c_name, c_acctbal, n_name
+        |ORDER BY revenue DESC, c_custkey
+        |LIMIT 20""".stripMargin),
 
     // q18 — large-volume customers: the "orders whose total quantity
     // exceeds T" subquery aggregates lineitem on l_orderkey — the SAME
     // key as the join that follows, so at scale the exchange is shared,
     // and the semi-join side is tiny (p99 cutoff) → broadcast.
-    "tpch_q18_large_volume_customer" -> ((s, dir) => {
+    Query("tpch_q18_large_volume_customer", (s, dir) => {
       val l = Tables.lineitem(s, dir)
       val big = l.groupBy(col("l_orderkey"))
         .agg(round(sum("l_quantity"), 2).as("big_qty"))
@@ -509,193 +541,7 @@ object TpchQueries {
         .limit(100)
         .select("c_custkey", "c_name", "o_orderkey", "o_orderdate",
           "o_totalprice", "sum_qty")
-    }),
-
-    // q4 shape — correlated EXISTS; decorrelates to a left-semi hash
-    // join on l_orderkey with the late-line inequality as the join's
-    // extra condition (PlanAuditSpec: no nested-loop anywhere).
-    "tpch_q4_order_priority" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      s.sql(q4Sql("orders_sq_v", "lineitem_sq_v"))
-    }),
-
-    // q21 shape — EXISTS + NOT EXISTS self-correlations on the fact;
-    // decorrelate to one semi and one anti hash join on l_orderkey.
-    "tpch_q21_waiting_suppliers" -> ((s, dir) => {
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
-      s.sql(q21Sql("supplier_sq_v", "lineitem_sq_v", "orders_sq_v", "nation_sq_v"))
-    }),
-
-    // q22 shape — correlated scalar subquery + filtered NOT EXISTS.
-    "tpch_q22_idle_rich_customers" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      s.sql(q22Sql("customer_sq_v", "nation_sq_v", "orders_sq_v"))
-    }),
-
-    // q11 shape — HAVING against an uncorrelated scalar subquery
-    "tpch_q11_part_concentration" -> ((s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      s.sql(q11Sql("lineitem_sq_v"))
-    }),
-
-    // q20 shape — IN-over-aggregate with correlated HAVING scalar
-    "tpch_q20_excess_inventory" -> ((s, dir) => {
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      s.sql(q20Sql("supplier_sq_v", "lineitem_sq_v", "part_sq_v"))
-    }),
-
-    // q7 shape — two-role nation dimension with a direction disjunction
-    "tpch_q7_volume_shipping" -> ((s, dir) => {
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
-      s.sql(q7Sql("supplier_sq_v", "lineitem_sq_v", "orders_sq_v",
-        "customer_sq_v", "nation_sq_v"))
-    }),
-
-    // q8 shape — 8-table market-share join, conditional decimal ratio
-    "tpch_q8_market_share" -> ((s, dir) => {
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
-      Tables.region(s, dir).createOrReplaceTempView("region_sq_v")
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      s.sql(q8Sql("part_sq_v", "lineitem_sq_v", "orders_sq_v",
-        "customer_sq_v", "nation_sq_v", "region_sq_v", "supplier_sq_v"))
-    }),
-
-    // q13 shape — outer-join count distribution (zero-order customers kept)
-    "tpch_q13_customer_distribution" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      s.sql(q13Sql("customer_sq_v", "orders_sq_v"))
-    }),
-
-    // q14 shape — conditional aggregation ratio over a dim join
-    "tpch_q14_promo_effect" -> ((s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      s.sql(q14Sql("lineitem_sq_v", "part_sq_v"))
-    }),
-
-    // q15 shape — aggregated view + scalar max subquery
-    "tpch_q15_top_supplier" -> ((s, dir) => {
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      s.sql(q15Sql("supplier_sq_v", "lineitem_sq_v"))
-    }),
-
-    // q17 shape — per-part correlated scalar average (decimal-exact)
-    "tpch_q17_small_quantity_revenue" -> ((s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      s.sql(q17Sql("lineitem_sq_v", "part_sq_v"))
-    }),
-
-    // q19 shape — disjunctive residual over an equi hash join
-    "tpch_q19_discounted_revenue" -> ((s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      s.sql(q19Sql("lineitem_sq_v", "part_sq_v"))
-    }),
-
-    // q12 shape — conditional priority counts over the fact-fact join
-    "tpch_q12_ship_priority_counts" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      s.sql(q12Sql("orders_sq_v", "lineitem_sq_v"))
-    }),
-
-    // q16 shape — distinct-supplier counts with a NOT IN blacklist
-    "tpch_q16_supplier_part_counts" -> ((s, dir) => {
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      s.sql(q16Sql("part_sq_v", "lineitem_sq_v", "supplier_sq_v"))
-    }),
-
-    // q2 shape — correlated scalar MIN over a twice-consumed CTE
-    "tpch_q2_min_cost_supplier" -> ((s, dir) => {
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
-      Tables.region(s, dir).createOrReplaceTempView("region_sq_v")
-      s.sql(q2Sql("part_sq_v", "lineitem_sq_v", "supplier_sq_v",
-        "nation_sq_v", "region_sq_v"))
-    }),
-
-    // q9 shape — profit by nation × year over a 5-table join
-    "tpch_q9_product_profit" -> ((s, dir) => {
-      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
-      s.sql(q9Sql("part_sq_v", "lineitem_sq_v", "supplier_sq_v",
-        "orders_sq_v", "nation_sq_v"))
-    })
-  )
-
-  def oracles: Map[String, String] = Map(
-
-    "tpch_q3_shipping_priority" ->
-      s"""SELECT l_orderkey, $revenueSql, CAST(o_orderdate AS DATE) AS o_orderdate
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-06-01'
-        |  AND l_shipdate > TIMESTAMP '1997-06-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "tpch_q5_local_supplier_volume" ->
-      s"""SELECT n_name, $revenueSql
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name""".stripMargin,
-
-    "tpch_q6_forecast_revenue" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |                CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.04 AND l_discount <= 0.06
-        |  AND l_quantity < 24""".stripMargin,
-
-    "tpch_q10_returned_items" ->
-      s"""SELECT c_custkey, c_name, $revenueSql, c_acctbal, n_name
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "tpch_q18_large_volume_customer" ->
+    },
       """SELECT c_custkey, c_name, o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
         |       o_totalprice, round(sum(l_quantity), 2) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -705,40 +551,160 @@ object TpchQueries {
         |  GROUP BY l_orderkey HAVING round(sum(l_quantity), 2) > 250)
         |GROUP BY c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice
         |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin),
 
-    "tpch_q4_order_priority" -> q4Sql("orders", "lineitem"),
+    // q4 shape — correlated EXISTS; decorrelates to a left-semi hash
+    // join on l_orderkey with the late-line inequality as the join's
+    // extra condition (PlanAuditSpec: no nested-loop anywhere).
+    Query("tpch_q4_order_priority", (s, dir) => {
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      s.sql(q4Sql("orders_sq_v", "lineitem_sq_v"))
+    },
+      q4Sql("orders", "lineitem")),
 
-    "tpch_q21_waiting_suppliers" ->
-      q21Sql("supplier", "lineitem", "orders", "nation"),
+    // q21 shape — EXISTS + NOT EXISTS self-correlations on the fact;
+    // decorrelate to one semi and one anti hash join on l_orderkey.
+    Query("tpch_q21_waiting_suppliers", (s, dir) => {
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
+      s.sql(q21Sql("supplier_sq_v", "lineitem_sq_v", "orders_sq_v", "nation_sq_v"))
+    },
+      q21Sql("supplier", "lineitem", "orders", "nation")),
 
-    "tpch_q22_idle_rich_customers" -> q22Sql("customer", "nation", "orders"),
+    // q22 shape — correlated scalar subquery + filtered NOT EXISTS.
+    Query("tpch_q22_idle_rich_customers", (s, dir) => {
+      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
+      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      s.sql(q22Sql("customer_sq_v", "nation_sq_v", "orders_sq_v"))
+    },
+      q22Sql("customer", "nation", "orders")),
 
-    "tpch_q11_part_concentration" -> q11Sql("lineitem"),
+    // q11 shape — HAVING against an uncorrelated scalar subquery
+    Query("tpch_q11_part_concentration", (s, dir) => {
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      s.sql(q11Sql("lineitem_sq_v"))
+    },
+      q11Sql("lineitem")),
 
-    "tpch_q20_excess_inventory" -> q20Sql("supplier", "lineitem", "part"),
+    // q20 shape — IN-over-aggregate with correlated HAVING scalar
+    Query("tpch_q20_excess_inventory", (s, dir) => {
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      s.sql(q20Sql("supplier_sq_v", "lineitem_sq_v", "part_sq_v"))
+    },
+      q20Sql("supplier", "lineitem", "part")),
 
-    "tpch_q7_volume_shipping" ->
-      q7Sql("supplier", "lineitem", "orders", "customer", "nation"),
+    // q7 shape — two-role nation dimension with a direction disjunction
+    Query("tpch_q7_volume_shipping", (s, dir) => {
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
+      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
+      s.sql(q7Sql("supplier_sq_v", "lineitem_sq_v", "orders_sq_v",
+        "customer_sq_v", "nation_sq_v"))
+    },
+      q7Sql("supplier", "lineitem", "orders", "customer", "nation")),
 
-    "tpch_q8_market_share" ->
+    // q8 shape — 8-table market-share join, conditional decimal ratio
+    Query("tpch_q8_market_share", (s, dir) => {
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
+      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
+      Tables.region(s, dir).createOrReplaceTempView("region_sq_v")
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      s.sql(q8Sql("part_sq_v", "lineitem_sq_v", "orders_sq_v",
+        "customer_sq_v", "nation_sq_v", "region_sq_v", "supplier_sq_v"))
+    },
       q8Sql("part", "lineitem", "orders", "customer", "nation", "region",
-        "supplier"),
+        "supplier")),
 
-    "tpch_q13_customer_distribution" -> q13Sql("customer", "orders"),
+    // q13 shape — outer-join count distribution (zero-order customers kept)
+    Query("tpch_q13_customer_distribution", (s, dir) => {
+      Tables.customer(s, dir).createOrReplaceTempView("customer_sq_v")
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      s.sql(q13Sql("customer_sq_v", "orders_sq_v"))
+    },
+      q13Sql("customer", "orders")),
 
-    "tpch_q14_promo_effect" -> q14Sql("lineitem", "part"),
+    // q14 shape — conditional aggregation ratio over a dim join
+    Query("tpch_q14_promo_effect", (s, dir) => {
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      s.sql(q14Sql("lineitem_sq_v", "part_sq_v"))
+    },
+      q14Sql("lineitem", "part")),
 
-    "tpch_q15_top_supplier" -> q15Sql("supplier", "lineitem"),
+    // q15 shape — aggregated view + scalar max subquery
+    Query("tpch_q15_top_supplier", (s, dir) => {
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      s.sql(q15Sql("supplier_sq_v", "lineitem_sq_v"))
+    },
+      q15Sql("supplier", "lineitem")),
 
-    "tpch_q17_small_quantity_revenue" -> q17Sql("lineitem", "part"),
+    // q17 shape — per-part correlated scalar average (decimal-exact)
+    Query("tpch_q17_small_quantity_revenue", (s, dir) => {
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      s.sql(q17Sql("lineitem_sq_v", "part_sq_v"))
+    },
+      q17Sql("lineitem", "part")),
 
-    "tpch_q19_discounted_revenue" -> q19Sql("lineitem", "part"),
-    "tpch_q12_ship_priority_counts" -> q12Sql("orders", "lineitem"),
-    "tpch_q16_supplier_part_counts" -> q16Sql("part", "lineitem", "supplier"),
-    "tpch_q9_product_profit" ->
-      q9Sql("part", "lineitem", "supplier", "orders", "nation"),
-    "tpch_q2_min_cost_supplier" ->
-      q2Sql("part", "lineitem", "supplier", "nation", "region")
+    // q19 shape — disjunctive residual over an equi hash join
+    Query("tpch_q19_discounted_revenue", (s, dir) => {
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      s.sql(q19Sql("lineitem_sq_v", "part_sq_v"))
+    },
+      q19Sql("lineitem", "part")),
+
+    // q12 shape — conditional priority counts over the fact-fact join
+    Query("tpch_q12_ship_priority_counts", (s, dir) => {
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      s.sql(q12Sql("orders_sq_v", "lineitem_sq_v"))
+    },
+      q12Sql("orders", "lineitem")),
+
+    // q16 shape — distinct-supplier counts with a NOT IN blacklist
+    Query("tpch_q16_supplier_part_counts", (s, dir) => {
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      s.sql(q16Sql("part_sq_v", "lineitem_sq_v", "supplier_sq_v"))
+    },
+      q16Sql("part", "lineitem", "supplier")),
+
+    // q2 shape — correlated scalar MIN over a twice-consumed CTE
+    Query("tpch_q2_min_cost_supplier", (s, dir) => {
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
+      Tables.region(s, dir).createOrReplaceTempView("region_sq_v")
+      s.sql(q2Sql("part_sq_v", "lineitem_sq_v", "supplier_sq_v",
+        "nation_sq_v", "region_sq_v"))
+    },
+      q2Sql("part", "lineitem", "supplier", "nation", "region")),
+
+    // q9 shape — profit by nation × year over a 5-table join
+    Query("tpch_q9_product_profit", (s, dir) => {
+      Tables.part(s, dir).createOrReplaceTempView("part_sq_v")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sq_v")
+      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sq_v")
+      Tables.orders(s, dir).createOrReplaceTempView("orders_sq_v")
+      Tables.nation(s, dir).createOrReplaceTempView("nation_sq_v")
+      s.sql(q9Sql("part_sq_v", "lineitem_sq_v", "supplier_sq_v",
+        "orders_sq_v", "nation_sq_v"))
+    },
+      q9Sql("part", "lineitem", "supplier", "orders", "nation"))
   )
 }

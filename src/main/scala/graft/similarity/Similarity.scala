@@ -647,8 +647,9 @@ object Similarity {
     * shuffle). Training cost = 2 extra corpus passes, both map-side
     * partial-aggregated. At 100 TB the only shuffle is the probe⋈cell
     * equi-join, whose right side carries ~|corpus|·nprobe/numCells rows
-    * per query, and the final per-query top-k runs on
-    * [[graft.plans.TopKPerKey]] (bounded heaps, no sort).
+    * per query, and the final per-query top-k is [[rerankTopK]]'s
+    * `row_number` rank filter, which Spark plans as a per-query group
+    * limit over the sorted candidates.
     */
   private def withNorm(v: Seq[Float]): (Seq[Float], Double) =
     (v, math.sqrt(v.map(x => x.toDouble * x.toDouble).sum))

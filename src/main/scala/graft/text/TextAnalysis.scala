@@ -1474,9 +1474,10 @@ object TextAnalysis {
     * no driver count(). Per-term contributions are rounded to micro
     * units and summed as LONGS, so the per-doc score is exact and
     * partition-order-invariant (FP sum order would otherwise flip
-    * 6-dp rounding between engines). Final top-k is a sort of |docs
-    * matching ≥1 term| rows — at 100 TB swap the limit for
-    * [[graft.plans.TopKPerKey]] on a constant key, same semantics.
+    * 6-dp rounding between engines). Final top-k is an `orderBy` +
+    * `limit(k)` over the |docs matching ≥1 term| rows, which Spark
+    * plans as TakeOrderedAndProject: a bounded heap per partition, no
+    * global sort.
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queryTerms: Seq[String], k: Int,

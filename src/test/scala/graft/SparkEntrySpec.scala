@@ -6,22 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class SparkEntrySpec extends AnyFunSuite {
 
   test("no query-name collisions across the registries") {
-    // derive from SparkEntry.registries (the same list `queries` merges)
-    // so a newly added registry file is guarded automatically
-    val allKeys = SparkEntry.registries.flatMap(_._1.keys)
-    val dups = allKeys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
-    assert(dups.isEmpty, s"duplicate query names (later registry shadows earlier): $dups")
-    assert(SparkEntry.queries.size === allKeys.size)
-    val allOracleKeys = SparkEntry.registries.flatMap(_._2.keys)
-    val oDups = allOracleKeys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
-    assert(oDups.isEmpty, s"duplicate oracle names: $oDups")
+    // over SparkEntry.records, the one list both maps derive from, so a
+    // newly added family file is guarded automatically
+    val names = SparkEntry.records.map(_.name)
+    val dups = names.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
+    assert(dups.isEmpty, s"duplicate query names (a later record shadows an earlier): $dups")
+    assert(SparkEntry.queries.size === names.size)
   }
 
-  test("every oracle key has a query; names are well-formed") {
-    val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet -- qs
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
-    assert(qs.forall(_.matches("[a-z0-9_]+")))
+  test("names are well-formed") {
+    assert(SparkEntry.queries.keySet.forall(_.matches("[a-z0-9_]+")))
   }
 
   test("oracle SQL contains no tabs (driver JSON escaping hazard)") {

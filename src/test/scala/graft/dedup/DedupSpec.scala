@@ -178,30 +178,49 @@ class DedupSpec extends SparkSpec {
     assert(inv == brute, "prefix-filtered join must stay EXACT")
   }
 
+  /** Min-label propagation, the reference connectedComponents is checked
+    * against: each round every node takes the min label over itself and
+    * its neighbours, so a label moves one hop per round (diameter
+    * rounds). Returns the labels and the rounds run, at most `maxIters`;
+    * the round that changes nothing counts.
+    */
+  private def minLabel(edges: Seq[(Long, Long)],
+                       maxIters: Int = 50): (Map[Long, Long], Int) = {
+    val nbrs = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+    var labels = nbrs.keys.map(n => n -> n).toMap
+    var rounds = 0
+    var changed = true
+    while (changed && rounds < maxIters) {
+      val next = labels.map { case (n, l) => n -> nbrs(n).map(labels).min.min(l) }
+      changed = next != labels
+      labels = next
+      rounds += 1
+    }
+    (labels, rounds)
+  }
+
   test("connectedComponents: alternating == minlabel on a random graph") {
     val rnd = new scala.util.Random(11)
     val edges = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter { case (a, b) => a != b }
-      .toDF("id_a", "id_b")
-    def labels(algo: String) =
-      Dedup.connectedComponents(edges, "id_a", "id_b", algorithm = algo)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels("alternating") == labels("minlabel"))
+    val alternating = Dedup.connectedComponents(edges.toDF("id_a", "id_b"),
+        "id_a", "id_b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(alternating == minLabel(edges)._1)
   }
 
   test("connectedComponents: alternating converges in O(log n) rounds on " +
     "a long chain where minlabel needs diameter rounds") {
     // 512-node chain: diameter 511. minlabel moves the min one hop per
     // round; alternating's star contractions collapse it in ~log n.
-    val chain = (0L until 511L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val chain = (0L until 511L).map(i => (i, i + 1))
     val (labels, rounds) = Dedup.connectedComponentsWithRounds(
-      chain, "id_a", "id_b", maxIters = 25, algorithm = "alternating")
+      chain.toDF("id_a", "id_b"), "id_a", "id_b", maxIters = 25)
     val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m.size == 512 && m.values.forall(_ == 0L), s"rounds=$rounds")
     assert(rounds <= 15, s"expected O(log 512) ≈ <=15 rounds, took $rounds")
     // and minlabel demonstrably can NOT finish the chain in that budget
-    val (_, mlRounds) = Dedup.connectedComponentsWithRounds(
-      chain, "id_a", "id_b", maxIters = 16, algorithm = "minlabel")
+    val (_, mlRounds) = minLabel(chain, maxIters = 16)
     assert(mlRounds == 16, "minlabel should exhaust its budget on a chain")
   }
 

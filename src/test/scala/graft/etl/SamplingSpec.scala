@@ -144,8 +144,8 @@ class SamplingSpec extends SparkSpec {
 
   test("temperature weights: shares sum to ~1, tail sources boosted " +
     "above head sources, deterministic across partitionings") {
-    def run(dir: String) = graft.queries.NorthStarQueries
-      .defs("sample_temperature_weights")(spark, dir)
+    def run(dir: String) = graft.SparkEntry
+      .queries("sample_temperature_weights")(spark, dir)
       .orderBy(col("source"))
       .select("source", "n_tokens", "p_raw", "p_temp", "boost")
       .collect().toSeq

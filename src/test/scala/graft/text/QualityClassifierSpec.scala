@@ -44,8 +44,8 @@ class QualityClassifierSpec extends SparkSpec {
 
   test("score keepCols pass through; pr-curve confusion counts are " +
     "consistent and monotone in the threshold") {
-    val out = graft.queries.NorthStarQueries
-      .defs("text_quality_pr_curve")(spark, sf())
+    val out = graft.SparkEntry
+      .queries("text_quality_pr_curve")(spark, sf())
       .orderBy(col("thr"))
       .select("thr", "tp", "fp", "fn", "tn").collect()
     assert(out.length == 9)

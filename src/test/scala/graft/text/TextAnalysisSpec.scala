@@ -612,8 +612,8 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("pipeline_curation_e2e funnel is internally consistent per source") {
-    val rows = graft.queries.NorthStarQueries
-      .defs("pipeline_curation_e2e")(spark, sf()).collect()
+    val rows = graft.SparkEntry
+      .queries("pipeline_curation_e2e")(spark, sf()).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (raw, dd, kept, shards) = (r.getAs[Long]("n_raw"),
