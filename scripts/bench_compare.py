@@ -4,7 +4,9 @@
 Usage: python3 scripts/bench_compare.py <after.json> [before.json]
 
 Prints per-query after/before/anchor seconds with ratios, sorted by
-after-seconds descending, plus family rollups. The before file defaults
+after-seconds descending, plus family rollups. When both files carry
+graft.Bench's per-query `profile`, it also prints the per-query jobs,
+tasks and one-task-stage-seconds deltas. The before file defaults
 to target/bench_r19_before.json; anchors parse from BASELINE.md.
 """
 import json, re, sys, os
@@ -22,9 +24,27 @@ def anchors():
 def family(name):
     return name.split("_", 1)[0]
 
+PROFILE_KEYS = ("jobs", "tasks", "one_task_stage_s")
+
+def profile_deltas(after, before):
+    """Per-query after-minus-before of PROFILE_KEYS, changed rows only."""
+    both = sorted(set(after) & set(before))
+    print("\nprofile deltas (after - before), queries that moved:")
+    print(f"{'d_jobs':>7} {'d_tasks':>8} {'d_1task_s':>10}  query")
+    totals = [0, 0, 0.0]
+    for k in both:
+        d = [after[k][m] - before[k][m] for m in PROFILE_KEYS]
+        totals = [t + x for t, x in zip(totals, d)]
+        if any(d):
+            print(f"{d[0]:7d} {d[1]:8d} {d[2]:10.3f}  {k}")
+    print(f"{totals[0]:7d} {totals[1]:8d} {totals[2]:10.3f}  "
+          f"TOTAL over {len(both)} queries in both")
+
 def main(after_path, before_path):
-    after = json.load(open(after_path))["queries"]
-    before = json.load(open(before_path))["queries"] if before_path else {}
+    after_doc = json.load(open(after_path))
+    before_doc = json.load(open(before_path)) if before_path else {}
+    after = after_doc["queries"]
+    before = before_doc.get("queries", {})
     anc = anchors()
     rows = []
     for k, v in after.items():
@@ -50,6 +70,8 @@ def main(after_path, before_path):
     tb = sum(r[1] or 0.0 for r in rows)
     tc = sum(r[2] or 0.0 for r in rows)
     print(f"\nTOTAL after={ta:.2f} before={tb:.2f} anchors={tc:.2f}")
+    if "profile" in after_doc and "profile" in before_doc:
+        profile_deltas(after_doc["profile"], before_doc["profile"])
 
 if __name__ == "__main__":
     ap = sys.argv[1]

@@ -1,11 +1,17 @@
 package graft
+import java.util.UUID
+import scala.collection.mutable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.queries.Query
 object Bench {
 
   /** True when a per-key group limit runs map-side of a shuffle: a
@@ -39,12 +45,148 @@ object Bench {
       .queryExecution.executedPlan)
   }
 
+  // millisecond precision: full-double repr overflowed the harness'
+  // stdout tail-capture window (15 entries truncated)
+  private def ms(v: Double): Double = math.round(v * 1000) / 1000.0
+
+  /** Profiles each timed query: a SparkListener tallies the jobs of the
+    * query's own job group (AQE's stage jobs inherit it) and the stages
+    * and tasks of those jobs, and a QueryExecutionListener keeps the
+    * count action's `QueryExecution` for its planning time. Construction
+    * and execution split at a timestamp the caller takes.
+    */
+  private final class Profiler(spark: SparkSession) extends SparkListener {
+    private final class Tally(val group: String) {
+      val stageIds = mutable.Set.empty[Int]
+      var jobs, stages, tasks = 0
+      var oneTaskStageMs, shuffleRead, shuffleWrite, spill = 0L
+      val taskMs = mutable.ArrayBuffer.empty[Long]
+      var countQe: Option[QueryExecution] = None
+    }
+    private val sc = spark.sparkContext
+    // set on the main thread; the listener-bus thread fills it
+    @volatile private var cur: Option[Tally] = None
+
+    private val qeListener = new QueryExecutionListener {
+      // the body's own actions end before the timed count starts, so
+      // the last count the query runs is the timed one
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "count") cur.foreach(_.countQe = Some(qe))
+      override def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      cur.filter(t => bridge.jobGroup(e).contains(t.group)).foreach { t =>
+        t.jobs += 1
+        t.stageIds ++= e.stageIds
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      cur.filter(_.stageIds(e.stageInfo.stageId)).foreach { t =>
+        val i = e.stageInfo
+        t.stages += 1
+        t.tasks += i.numTasks
+        if (i.numTasks == 1) t.oneTaskStageMs +=
+          (for (s <- i.submissionTime; c <- i.completionTime) yield c - s)
+            .getOrElse(0L)
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      cur.filter(_.stageIds(e.stageId)).foreach { t =>
+        Option(e.taskMetrics).foreach { m =>
+          t.taskMs += m.executorRunTime
+          t.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          t.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          t.spill += m.diskBytesSpilled
+        }
+      }
+
+    def attach(): Unit = {
+      sc.addSparkListener(this)
+      spark.listenerManager.register(qeListener)
+    }
+
+    def detach(): Unit = {
+      sc.removeSparkListener(this)
+      spark.listenerManager.unregister(qeListener)
+    }
+
+    /** Starts a query: a fresh tally under a job group of its own. */
+    def begin(name: String): Unit = {
+      val t = new Tally(s"bench-${UUID.randomUUID()}")
+      cur = Some(t)
+      sc.setJobGroup(t.group, name)
+    }
+
+    /** The started query's layers as a JSON object, once the bus has
+      * delivered its events. `construct_s` (the body builds its frame,
+      * eager driver jobs included) plus `exec_s` (its `.count()`) is the
+      * timed wall; `plan_s` is the part of `exec_s` that the count's
+      * analysis, optimization and planning took. Stage and task figures
+      * cover the stages that ran (a reused stage is skipped); task times
+      * are executor run times.
+      */
+    def profile(constructS: Double, execS: Double): String = {
+      bridge.drainListenerBus(sc)
+      val t = cur.get
+      val taskMs = t.taskMs.sorted
+      Seq("construct_s" -> ms(constructS),
+        "plan_s" -> t.countQe.fold("null")(qe =>
+          ms(qe.tracker.phases.values.map(_.durationMs).sum / 1000.0).toString),
+        "exec_s" -> ms(execS), "jobs" -> t.jobs, "stages" -> t.stages,
+        "tasks" -> t.tasks, "one_task_stage_s" -> ms(t.oneTaskStageMs / 1000.0),
+        "shuffle_read_bytes" -> t.shuffleRead,
+        "shuffle_write_bytes" -> t.shuffleWrite, "spill_bytes" -> t.spill,
+        "task_ms_max" -> taskMs.lastOption.getOrElse(0L),
+        "task_ms_median" -> (if (taskMs.isEmpty) 0L else taskMs(taskMs.size / 2)))
+        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    }
+
+    def end(): Unit = {
+      cur = None
+      sc.clearJobGroup()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // median-of-N timing: one cold pass then repeats over a warm cache;
     // the median filters page-cache/JIT/GC noise a single pass can't
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_full.json")
     val spark = Session()
+    val (full, compact) = run(spark, sfDir,
+      selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY")), runs, outFile)
+    // ORDER MATTERS. A graded run's harness keeps only the last ~2000 chars of
+    // stdout and parses the final JSON line it finds there. The full
+    // JSON (per-query times and profiles, ~55 KB) can only grow, so it
+    // goes FIRST (and to the file); the ~450-byte compact summary must be
+    // the FINAL line. (History: r9's null parse was sbt's trailing `[success]`
+    // noise — fixed in build.sbt — while r10/r11's was the oversized
+    // full-map line overflowing the tail window.)
+    println(full)
+    println(compact)
+    spark.stop()
+  }
+
+  /** The registry queries `SPARK_GRAFT_BENCH_ONLY` selects: a
+    * dev-loop filter of comma-separated name substrings, NEVER set for
+    * a graded run (that is the full registry), only by hand
+    * while iterating on one query's plan. Unset or empty selects all.
+    */
+  private[graft] def selected(only: Option[String]): Seq[Query] = {
+    val pats = only.filter(_.nonEmpty).map(_.split(',').toSeq)
+    SparkEntry.records.filter(q => pats.forall(_.exists(q.name.contains)))
+  }
+
+  /** Times `queries` (sorted by name) over `runs` passes and profiles
+    * each timed run. Writes the full JSON to `outFile` and returns it
+    * with the compact summary line.
+    */
+  private[graft] def run(spark: SparkSession, sfDir: String,
+      queries: Seq[Query], runs: Int, outFile: String): (String, String) = {
     val cpus = Session.cpus
     // warm the session (JVM/codegen/file-index) so per-query numbers
     // measure the query, not first-action startup
@@ -68,16 +210,10 @@ object Bench {
     }
     val calibrationSec = List.fill(3)(calibrate()).sorted.apply(1)
     val calibSamples = collection.mutable.ListBuffer(calibrationSec)
-    // dev-loop filter: comma-separated name substrings; NEVER set by the
-    // driver (full registry is the graded run), only by hand while
-    // iterating on one query's plan
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(p) if p.nonEmpty =>
-        val pats = p.split(',').toSeq; name => pats.exists(name.contains)
-      case _ => _ => true
-    }
-    val names = SparkEntry.queries.keys.toSeq.filter(only).sorted
-    val times = collection.mutable.Map.empty[String, List[Double]]
+    val ordered = queries.sortBy(_.name)
+    val names = ordered.map(_.name)
+    // each timed run's wall and profile
+    val times = mutable.Map.empty[String, List[(Double, String)]]
     // a broken query must be VISIBLE in the bench json, not a fast -1
     val errors = collection.mutable.Map.empty[String, String]
     // IN-PASS canary sampling (r18 verdict #1): the between-pass
@@ -92,22 +228,29 @@ object Bench {
     val passTotals = collection.mutable.ListBuffer.empty[Double]
     val inPassCanaries =
       collection.mutable.ListBuffer.empty[List[Double]]
+    val profiler = new Profiler(spark)
+    profiler.attach()
     for (_ <- 1 to runs) {
       var passSec = 0.0
       val passSamples = collection.mutable.ListBuffer.empty[Double]
-      for ((name, qi) <- names.zipWithIndex) {
-        val fn = SparkEntry.queries(name)
+      for ((q, qi) <- ordered.zipWithIndex) {
+        val name = q.name
+        profiler.begin(name)
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          times(name) = sec :: times.getOrElse(name, Nil)
+          val frame = q.body(spark, sfDir)
+          val t1 = System.nanoTime()
+          frame.count()
+          val t2 = System.nanoTime()
+          val sec = (t2 - t0) / 1e9
+          times(name) = (sec, profiler.profile((t1 - t0) / 1e9,
+            (t2 - t1) / 1e9)) :: times.getOrElse(name, Nil)
           passSec += sec
         } catch {
           case e: Throwable =>
             // raw message; proper JSON escaping happens at emission (jsonString)
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
+        } finally profiler.end()
         if (inPassEvery > 0 && (qi + 1) % inPassEvery == 0 &&
             qi + 1 < names.size)
           passSamples += calibrate()
@@ -116,24 +259,25 @@ object Bench {
       inPassCanaries += passSamples.toList
       calibSamples += calibrate() // ambient drift, one sample per pass
     }
-    def median(xs: List[Double]): Double = {
-      val s = xs.sorted
+    profiler.detach()
+    // the median run's wall, with that run's profile
+    def median(xs: List[(Double, String)]): (Double, String) = {
+      val s = xs.sortBy(_._1)
       s(s.length / 2)
     }
     val topkFires = topkLimitFires(spark, sfDir)
-    // millisecond precision: full-double repr overflowed the harness'
-    // stdout tail-capture window last round (15 entries truncated)
-    def ms(v: Double): Double = math.round(v * 1000) / 1000.0
     // one escape path for EVERY string field (keys, error messages, and
     // env-provided paths like sfDir/outFile alike): Verify's JSON escaper
     import Verify.jsonString
     val med = names.filter(times.contains).map(n => n -> median(times(n)))
-    val qs = med.map { case (k, v) => jsonString(k) + ":" + ms(v) }
+    val qs = med.map { case (k, (v, _)) => jsonString(k) + ":" + ms(v) }
+      .mkString("{", ",", "}")
+    val profiles = med.map { case (k, (_, p)) => jsonString(k) + ":" + p }
       .mkString("{", ",", "}")
     val errs = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
       .mkString("{", ",", "}")
-    val total = ms(med.map(_._2).sum)
+    val total = ms(med.map(_._2._1).sum)
     val calibArr = calibSamples.map(ms).mkString("[", ",", "]")
     // Canary-normalized total (r12 verdict: USE the calibration_samples
     // instrumentation, don't just emit it). Four same-night same-HEAD
@@ -186,35 +330,25 @@ object Bench {
     val ambientJson =
       s""""pass_totals":$passArr,"pass_totals_norm":$passNormArr,"pass_canary_means":$passCanArr,"inpass_canaries":$inPassArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"canary_idle_ref":$canaryIdleRef,"value_canary_norm":$totalNorm,$ambientJson,"sf":${jsonString(sfDir)},"config":${jsonString(config)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"canary_idle_ref":$canaryIdleRef,"value_canary_norm":$totalNorm,$ambientJson,"sf":${jsonString(sfDir)},"config":${jsonString(config)},"profile":$profiles}"""
     // The full per-query line also persists to a file, resolved to an
     // ABSOLUTE path so running outside the repo root can't silently
     // misplace it (r9 ADVICE); a failed write warns instead of vanishing.
-    val outFile = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_full.json")
-    ).getAbsolutePath
+    val outPath = new java.io.File(outFile).getAbsolutePath
     try {
-      val p = java.nio.file.Paths.get(outFile)
+      val p = java.nio.file.Paths.get(outPath)
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] WARN: could not write $outFile: $e" +
+      System.err.println(s"[bench] WARN: could not write $outPath: $e" +
         " — full-json stdout line below is the only copy")
     }
-    // ORDER MATTERS. The driver captures only the last ~2000 chars of
-    // stdout and parses the final JSON line it finds there. The full
-    // per-query map is ~6 KB and can only grow, so it goes FIRST (and to
-    // the file above); the ~300-byte compact summary must be the FINAL
-    // line. (History: r9's null parse was sbt's trailing `[success]`
-    // noise — fixed in build.sbt — while r10/r11's was the oversized
-    // full-map line overflowing the tail window.)
-    println(full)
     // errors is {} on a healthy run; if a pathological run pushes the
     // compact line past the tail window, ship a count + pointer instead
     val compactErrs =
       if (errs.length <= 1200) errs
       else s"""{"_truncated":${jsonString(s"${errors.size} errors, see full_json")}}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${med.size},"errors":$compactErrs,"error_count":${errors.size},"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"value_canary_norm":$totalNorm,"pass_totals_norm":$passNormArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended,"sf":${jsonString(sfDir)},"full_json":${jsonString(outFile)}}""")
-    spark.stop()
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${med.size},"errors":$compactErrs,"error_count":${errors.size},"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"value_canary_norm":$totalNorm,"pass_totals_norm":$passNormArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended,"sf":${jsonString(sfDir)},"full_json":${jsonString(outPath)}}"""
+    (full, compact)
   }
 }

@@ -37,10 +37,8 @@ object Spread {
     * less than the exchange it buys), while the sf10 one-core
     * straggler it fixes is a 25-minute stage. 32 MB ≈ a few seconds of
     * single-core tokenize work — below that the exchange can't win.
-    * Env-overridable for probes (`SPARK_GRAFT_SPREAD_MIN_MB`).
     */
-  val MinSpreadBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SPREAD_MIN_MB", "32").toLong << 20
+  val MinSpreadBytes: Long = 32L << 20
 
   def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism

@@ -810,16 +810,16 @@ object BreadthQueries {
         |    / 100.0 AS total_value
         |FROM g GROUP BY user_id, grp""".stripMargin),
 
-    // bloom-pruned join: probe side pre-filtered by a broadcast Bloom
-    // sketch of the (selective) build side before the exact join —
-    // row-identical to the plain join, shuffle ∝ selectivity
+    // join against a selective build side: the plain equi-join. When the
+    // build side is too big to broadcast, Spark's runtime filter
+    // (InjectRuntimeFilter) prunes the events scan with a Bloom filter of
+    // the build keys, planned as a subquery (PlanAuditSpec pins it)
     Query("join_bloom_pruned", (s, dir) => {
       val highValue = Tables.customer(s, dir)
         .where(col("c_acctbal") > 9000)
         .select(col("c_custkey"), col("c_name"))
-      graft.etl.BloomPrune.prunedJoin(
-        Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value")),
-        highValue, "user_id", "c_custkey")
+      Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value"))
+        .join(highValue, col("user_id") === col("c_custkey"))
         .groupBy(col("c_custkey"), col("c_name"))
         .agg(count(lit(1)).as("n_events"),
           moneySum(col("value")).as("total_value"))

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -68,21 +67,13 @@ object StreamingFraud {
   }
 
   /** The streaming plan over any streaming DataFrame with
-    * (user_id, ts: timestamp, value) — same shape as
-    * [[graft.stream.Fraud.windowSum]] plus the watermark.
+    * (user_id, ts: timestamp, value): [[graft.stream.Fraud.windowSum]]
+    * over the watermarked events.
     */
   def fraudStream(events: DataFrame, windowSec: Int, threshold: Double,
                   watermark: String = "10 seconds"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), window(col("ts"), s"$windowSec seconds"))
-      .agg(round(sum("value"), 2).as("total_value"))
-      .where(col("total_value") > lit(threshold))
-      .select(
-        col("user_id"),
-        unix_timestamp(col("window.start")).as("window_start"),
-        unix_timestamp(col("window.end")).as("window_end"),
-        col("total_value"))
+    graft.stream.Fraud.windowSum(events.withWatermark("ts", watermark),
+      windowSec, threshold)
 
   /** File-source streaming run with `Trigger.AvailableNow` (the job-
     * bookmark analog, T10): processes all currently-available input then

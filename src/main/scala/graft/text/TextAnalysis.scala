@@ -212,8 +212,9 @@ object TextAnalysis {
     * 100 TB — so the eval gram set broadcasts and the corpus side is a
     * map-only explode + broadcast-hash semi-join + per-doc count; the
     * corpus is never shuffled. For an eval set too big to broadcast,
-    * swap in the bloom-pruned shuffle join ([[graft.etl.BloomPrune]])
-    * — same pair semantics, sketch-bounded traffic.
+    * the join runs as a shuffle join, and Spark's runtime Bloom filter
+    * (InjectRuntimeFilter) prunes the corpus side before the shuffle —
+    * same pair semantics, sketch-bounded traffic.
     */
   def contamination(train: DataFrame, eval: DataFrame, idCol: String,
                     textCol: String, n: Int = 8): DataFrame = {
@@ -248,8 +249,8 @@ object TextAnalysis {
     * COMPLETE (any J > 0 pair shares a shingle) — MinHash banding
     * exists to avoid an n² SELF-join and would pay probabilistic recall
     * for nothing here. For an eval set too big to broadcast, the same
-    * plan runs as a shuffle join with [[graft.etl.BloomPrune]] traffic
-    * bounds.
+    * plan runs as a shuffle join, its corpus side pruned by Spark's
+    * runtime Bloom filter.
     */
   def contaminationFuzzy(train: DataFrame, eval: DataFrame, idCol: String,
                          textCol: String, shingleSize: Int = 3,

@@ -1,12 +1,15 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridge into `private[sql]` surface: Column ⇄ Expression conversion and
-  * LogicalPlan → DataFrame construction for custom operators. This is the
+/** Bridge into `private[sql]` surface: Column ⇄ Expression conversion,
+  * LogicalPlan → DataFrame construction for custom operators, and a
+  * the `private[spark]` listener bus and job-group key. This is the
   * same mechanism third-party Spark extension libraries use; the
   * underlying calls are stable across the 4.x classic API.
   */
@@ -17,4 +20,14 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   def analyzedPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** Waits until the listener bus has delivered every event posted so
+    * far, so listener tallies read right after an action include it.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The job group a job was started under, if any. */
+  def jobGroup(e: SparkListenerJobStart): Option[String] =
+    Option(e.properties).flatMap(p =>
+      Option(p.getProperty(SparkContext.SPARK_JOB_GROUP_ID)))
 }

@@ -1,10 +1,9 @@
 package graft.graph
 
-import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 
 class KCoreSpec extends SparkSpec {
   import spark.implicits._

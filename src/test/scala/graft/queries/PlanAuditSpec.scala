@@ -98,6 +98,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
+  test("join_bloom_pruned: with broadcast off, Spark's runtime filter " +
+    "prunes the events scan by a Bloom filter of the build keys") {
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val p = plan("join_bloom_pruned")
+      assert(p.contains("might_contain"), p)
+      assert(p.contains("bloom_filter_agg(xxhash64(c_custkey"), p)
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("topk queries use the heap operator, never a sort+window") {
     val p = plan("topk_custom_plan")
     assert(p.contains("FinalTopK"), p)
