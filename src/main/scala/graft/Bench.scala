@@ -1,16 +1,17 @@
 package graft
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.queries.Query
 object Bench {
 
@@ -49,42 +50,37 @@ object Bench {
   // stdout tail-capture window (15 entries truncated)
   private def ms(v: Double): Double = math.round(v * 1000) / 1000.0
 
-  /** Profiles each timed query: a SparkListener tallies the jobs of the
-    * query's own job group (AQE's stage jobs inherit it) and the stages
-    * and tasks of those jobs, and a QueryExecutionListener keeps the
-    * count action's `QueryExecution` for its planning time. Construction
-    * and execution split at a timestamp the caller takes.
+  /** Profiles each timed query from listener-bus events alone: `begin`
+    * runs the query under a job group of its own, and the listener files
+    * that group's jobs (AQE's stage jobs inherit it), their stages and
+    * tasks, and the group's SQL executions under the run's tally. The
+    * tallies are read after `detach` drains the bus once, at the end of
+    * all passes, so nothing waits on the bus between timed queries.
     */
   private final class Profiler(spark: SparkSession) extends SparkListener {
-    private final class Tally(val group: String) {
-      val stageIds = mutable.Set.empty[Int]
+    private final class Tally {
       var jobs, stages, tasks = 0
       var oneTaskStageMs, shuffleRead, shuffleWrite, spill = 0L
       val taskMs = mutable.ArrayBuffer.empty[Long]
-      var countQe: Option[QueryExecution] = None
+      var planMs: Option[Long] = None
     }
     private val sc = spark.sparkContext
-    // set on the main thread; the listener-bus thread fills it
-    @volatile private var cur: Option[Tally] = None
-
-    private val qeListener = new QueryExecutionListener {
-      // the body's own actions end before the timed count starts, so
-      // the last count the query runs is the timed one
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        if (funcName == "count") cur.foreach(_.countQe = Some(qe))
-      override def onFailure(funcName: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
+    // `begin` adds a group's tally on the main thread; the listener-bus
+    // thread alone fills the tallies and the two maps below
+    private val byGroup = new ConcurrentHashMap[String, Tally]
+    private val byStage = mutable.Map.empty[Int, Tally]
+    private val byExecution = mutable.Map.empty[Long, Tally]
+    private def tally(group: Option[String]): Option[Tally] =
+      group.flatMap(g => Option(byGroup.get(g)))
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      cur.filter(t => bridge.jobGroup(e).contains(t.group)).foreach { t =>
+      tally(bridge.jobGroup(e)).foreach { t =>
         t.jobs += 1
-        t.stageIds ++= e.stageIds
+        e.stageIds.foreach(byStage(_) = t)
       }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      cur.filter(_.stageIds(e.stageInfo.stageId)).foreach { t =>
+      byStage.get(e.stageInfo.stageId).foreach { t =>
         val i = e.stageInfo
         t.stages += 1
         t.tasks += i.numTasks
@@ -94,7 +90,7 @@ object Bench {
       }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      cur.filter(_.stageIds(e.stageId)).foreach { t =>
+      byStage.get(e.stageId).foreach { t =>
         Option(e.taskMetrics).foreach { m =>
           t.taskMs += m.executorRunTime
           t.shuffleRead += m.shuffleReadMetrics.totalBytesRead
@@ -103,38 +99,49 @@ object Bench {
         }
       }
 
-    def attach(): Unit = {
-      sc.addSparkListener(this)
-      spark.listenerManager.register(qeListener)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        tally(s.jobGroupId).foreach(byExecution(s.executionId) = _)
+      // the body's own actions end before the timed count starts, so the
+      // group's last count is the timed one
+      case s: SparkListenerSQLExecutionEnd =>
+        for (t <- byExecution.remove(s.executionId);
+             p <- bridge.planningMs(s, "count")) t.planMs = Some(p)
+      case _ =>
     }
 
-    def detach(): Unit = {
-      sc.removeSparkListener(this)
-      spark.listenerManager.unregister(qeListener)
-    }
+    def attach(): Unit = sc.addSparkListener(this)
 
-    /** Starts a query: a fresh tally under a job group of its own. */
-    def begin(name: String): Unit = {
-      val t = new Tally(s"bench-${UUID.randomUUID()}")
-      cur = Some(t)
-      sc.setJobGroup(t.group, name)
-    }
-
-    /** The started query's layers as a JSON object, once the bus has
-      * delivered its events. `construct_s` (the body builds its frame,
-      * eager driver jobs included) plus `exec_s` (its `.count()`) is the
-      * timed wall; `plan_s` is the part of `exec_s` that the count's
-      * analysis, optimization and planning took. Stage and task figures
-      * cover the stages that ran (a reused stage is skipped); task times
-      * are executor run times.
+    /** Waits for the bus to deliver every event so far, then stops
+      * listening; the tallies are complete after this.
       */
-    def profile(constructS: Double, execS: Double): String = {
+    def detach(): Unit = {
       bridge.drainListenerBus(sc)
-      val t = cur.get
+      sc.removeSparkListener(this)
+    }
+
+    /** Starts a query run under a fresh job group; returns the group. */
+    def begin(name: String): String = {
+      val group = s"bench-${UUID.randomUUID()}"
+      byGroup.put(group, new Tally)
+      sc.setJobGroup(group, name)
+      group
+    }
+
+    def end(): Unit = sc.clearJobGroup()
+
+    /** A detached run's layers as a JSON object. `construct_s` (the body
+      * builds its frame, eager driver jobs included) plus `exec_s` (its
+      * `.count()`) is the timed wall; `plan_s` is the part of `exec_s`
+      * that the count's analysis, optimization and planning took. Stage
+      * and task figures cover the stages that ran (a reused stage is
+      * skipped); task times are executor run times.
+      */
+    def profile(group: String, constructS: Double, execS: Double): String = {
+      val t = byGroup.get(group)
       val taskMs = t.taskMs.sorted
       Seq("construct_s" -> ms(constructS),
-        "plan_s" -> t.countQe.fold("null")(qe =>
-          ms(qe.tracker.phases.values.map(_.durationMs).sum / 1000.0).toString),
+        "plan_s" -> t.planMs.fold("null")(p => ms(p / 1000.0).toString),
         "exec_s" -> ms(execS), "jobs" -> t.jobs, "stages" -> t.stages,
         "tasks" -> t.tasks, "one_task_stage_s" -> ms(t.oneTaskStageMs / 1000.0),
         "shuffle_read_bytes" -> t.shuffleRead,
@@ -142,11 +149,6 @@ object Bench {
         "task_ms_max" -> taskMs.lastOption.getOrElse(0L),
         "task_ms_median" -> (if (taskMs.isEmpty) 0L else taskMs(taskMs.size / 2)))
         .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    }
-
-    def end(): Unit = {
-      cur = None
-      sc.clearJobGroup()
     }
   }
 
@@ -212,8 +214,8 @@ object Bench {
     val calibSamples = collection.mutable.ListBuffer(calibrationSec)
     val ordered = queries.sortBy(_.name)
     val names = ordered.map(_.name)
-    // each timed run's wall and profile
-    val times = mutable.Map.empty[String, List[(Double, String)]]
+    // each timed run's wall, and its profile once the profiler detaches
+    val times = mutable.Map.empty[String, List[(Double, () => String)]]
     // a broken query must be VISIBLE in the bench json, not a fast -1
     val errors = collection.mutable.Map.empty[String, String]
     // IN-PASS canary sampling (r18 verdict #1): the between-pass
@@ -235,7 +237,7 @@ object Bench {
       val passSamples = collection.mutable.ListBuffer.empty[Double]
       for ((q, qi) <- ordered.zipWithIndex) {
         val name = q.name
-        profiler.begin(name)
+        val group = profiler.begin(name)
         val t0 = System.nanoTime()
         try {
           val frame = q.body(spark, sfDir)
@@ -243,7 +245,7 @@ object Bench {
           frame.count()
           val t2 = System.nanoTime()
           val sec = (t2 - t0) / 1e9
-          times(name) = (sec, profiler.profile((t1 - t0) / 1e9,
+          times(name) = (sec, () => profiler.profile(group, (t1 - t0) / 1e9,
             (t2 - t1) / 1e9)) :: times.getOrElse(name, Nil)
           passSec += sec
         } catch {
@@ -261,7 +263,7 @@ object Bench {
     }
     profiler.detach()
     // the median run's wall, with that run's profile
-    def median(xs: List[(Double, String)]): (Double, String) = {
+    def median(xs: List[(Double, () => String)]): (Double, () => String) = {
       val s = xs.sortBy(_._1)
       s(s.length / 2)
     }
@@ -272,7 +274,7 @@ object Bench {
     val med = names.filter(times.contains).map(n => n -> median(times(n)))
     val qs = med.map { case (k, (v, _)) => jsonString(k) + ":" + ms(v) }
       .mkString("{", ",", "}")
-    val profiles = med.map { case (k, (_, p)) => jsonString(k) + ":" + p }
+    val profiles = med.map { case (k, (_, p)) => jsonString(k) + ":" + p() }
       .mkString("{", ",", "}")
     val errs = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
