@@ -202,6 +202,8 @@ object Bench {
     // shift mid-run (two same-HEAD round-12 runs differed 12% at an
     // identical pre-run canary), so the emitted `calibration_samples`
     // band shows whether ambient held steady across the measurement.
+    // One uncounted sample first: on a cold JVM the probe's own codegen
+    // and shuffle setup read as load (0.54–0.99 s vs 0.49 s warm, 4 cores).
     def calibrate(): Double = {
       val t0 = System.nanoTime()
       spark.range(8000000L)
@@ -210,6 +212,7 @@ object Bench {
         .selectExpr("sum(`sum(v)`)").collect()
       (System.nanoTime() - t0) / 1e9
     }
+    calibrate()
     val calibrationSec = List.fill(3)(calibrate()).sorted.apply(1)
     val calibSamples = collection.mutable.ListBuffer(calibrationSec)
     val ordered = queries.sortBy(_.name)
@@ -223,10 +226,10 @@ object Bench {
     // WITHIN one registry pass — the r18 driver capture ran queries
     // 1.55× slower at a canary_mean ≈ the idle r17 run because the
     // inflation sat between the samples. One canary every
-    // `inPassEvery` queries (default 25 → ~8 samples over 201
-    // queries, ~6 s/pass overhead, not counted in query times) makes
-    // an in-pass burst visible in the emitted band.
-    val inPassEvery = sys.env.getOrElse("SPARK_GRAFT_CANARY_EVERY", "25").toInt
+    // `inPassEvery` queries (~8 samples over 201 queries, ~6 s/pass
+    // overhead, not counted in query times) makes an in-pass burst
+    // visible in the emitted band.
+    val inPassEvery = 25
     val passTotals = collection.mutable.ListBuffer.empty[Double]
     val inPassCanaries =
       collection.mutable.ListBuffer.empty[List[Double]]
@@ -240,7 +243,7 @@ object Bench {
         val group = profiler.begin(name)
         val t0 = System.nanoTime()
         try {
-          val frame = q.body(spark, sfDir)
+          val frame = q.frame(spark, sfDir)
           val t1 = System.nanoTime()
           frame.count()
           val t2 = System.nanoTime()
@@ -253,7 +256,7 @@ object Bench {
             // raw message; proper JSON escaping happens at emission (jsonString)
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
         } finally profiler.end()
-        if (inPassEvery > 0 && (qi + 1) % inPassEvery == 0 &&
+        if ((qi + 1) % inPassEvery == 0 &&
             qi + 1 < names.size)
           passSamples += calibrate()
       }
@@ -308,17 +311,13 @@ object Bench {
     val allSamples = calibSamples.toList ++ inPassCanaries.flatten
     val canaryMeanAll = allSamples.sum / allSamples.size
     val totalNormAll = ms(total * canaryIdleRef / canaryMeanAll)
-    // instability flag + re-run rule (BASELINE.md protocol): a capture
+    // instability flag = re-run rule (BASELINE.md protocol): a capture
     // whose canary band spans >1.3× within one run measured a MOVING
     // ambient — one cold re-run is warranted before the number stands.
     // The r18 driver capture (samples 0.748→1.01, ratio 1.35) trips
     // this; the same-HEAD clean re-run does not.
     val ambientUnstable =
       allSamples.nonEmpty && allSamples.max / allSamples.min > 1.3
-    val rerunRecommended = ambientUnstable ||
-      sys.env.get("SPARK_GRAFT_BENCH_PREV_NORM").exists { p =>
-        totalNormAll > 1.12 * p.toDouble
-      }
     // the session config, recorded so baseline_table.py renders what
     // actually ran instead of assuming the default
     val config = s"local[$cpus], shuffle=$cpus, UTC"
@@ -330,7 +329,7 @@ object Bench {
     val inPassArr = inPassCanaries
       .map(_.map(ms).mkString("[", ",", "]")).mkString("[", ",", "]")
     val ambientJson =
-      s""""pass_totals":$passArr,"pass_totals_norm":$passNormArr,"pass_canary_means":$passCanArr,"inpass_canaries":$inPassArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended"""
+      s""""pass_totals":$passArr,"pass_totals_norm":$passNormArr,"pass_canary_means":$passCanArr,"inpass_canaries":$inPassArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$ambientUnstable"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"canary_idle_ref":$canaryIdleRef,"value_canary_norm":$totalNorm,$ambientJson,"sf":${jsonString(sfDir)},"config":${jsonString(config)},"profile":$profiles}"""
     // The full per-query line also persists to a file, resolved to an
@@ -350,7 +349,7 @@ object Bench {
     val compactErrs =
       if (errs.length <= 1200) errs
       else s"""{"_truncated":${jsonString(s"${errors.size} errors, see full_json")}}"""
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${med.size},"errors":$compactErrs,"error_count":${errors.size},"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"value_canary_norm":$totalNorm,"pass_totals_norm":$passNormArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$rerunRecommended,"sf":${jsonString(sfDir)},"full_json":${jsonString(outPath)}}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${med.size},"errors":$compactErrs,"error_count":${errors.size},"runs":$runs,"topk_rewrite_fires":$topkFires,"calibration_sec":${ms(calibrationSec)},"calibration_samples":$calibArr,"canary_mean":${ms(canaryMean)},"value_canary_norm":$totalNorm,"pass_totals_norm":$passNormArr,"canary_mean_all":${ms(canaryMeanAll)},"value_canary_norm_all":$totalNormAll,"ambient_unstable":$ambientUnstable,"rerun_recommended":$ambientUnstable,"sf":${jsonString(sfDir)},"full_json":${jsonString(outPath)}}"""
     (full, compact)
   }
 }

@@ -377,7 +377,7 @@ object MoneyFuzz {
     // with the same JSON escaper, thrown cases returned
     val all = cases(nCases, mode)
     val failed = Verify.run(spark, sfDir, outDir, all.map(c =>
-      Query(c.name, (s, _) => c.df.map(_(s)).getOrElse(s.sql(c.sql)),
+      Query(c.name, (s, _) => c.df.fold(s.sql(c.sql))(_(s)),
         c.oracle.getOrElse(c.sql))))
     println(s"[fuzz] wrote ${all.size} $mode cases to $outDir " +
       s"(seed 42, sf=$sfDir); compare with scripts/check.py")

@@ -30,11 +30,12 @@ object SparkEntry {
     */
   lazy val byName: Map[String, Query] = records.map(q => q.name -> q).toMap
 
-  /** One entry per implemented operator from SURVEY.md §2. Cached:
-    * per-query callers (Bench, Verify) look names up one at a time.
+  /** One entry per implemented operator from SURVEY.md §2: each
+    * record's output frame, without its artifacts. Cached: per-query
+    * callers look names up one at a time.
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    byName.map { case (n, q) => n -> q.body }
+    byName.map { case (n, q) => n -> q.frame _ }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Rendered on first read, so a main that

@@ -1,16 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import graft.queries.Query
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1,
-  * naming the failed queries, if any selected query threw. */
+import graft.queries.{OracleAux, Query}
+/** Driver-run correctness dump: each registry query's output → parquet,
+  * its declared artifacts → the aux dirs its oracle reads, plus
+  * oracle_sql.json, for the driver's DuckDB compare. The one module that
+  * writes artifacts. Exits 1, naming the failed queries, if any selected
+  * query threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // oracle SQL references aux parquet namespaced by sfDir — render it
     // against the same sfDir the queries below run with
-    graft.queries.OracleAux.sqlSfDir = sfDir
+    OracleAux.sqlSfDir = sfDir
     // optional 3rd arg: comma-separated name substrings — dev-loop filter
     val only: String => Boolean = if (args.length > 2) {
       val pats = args(2).split(',').toSeq
@@ -23,13 +25,16 @@ object Verify {
     exitIfFailed("verify", failed)
   }
 
-  /** Runs each query into `outDir/<name>` (parquet), then writes
+  /** Runs each query into `outDir/<name>` (parquet), writes its declared
+    * artifacts to `OracleAux.dir(sfDir, <artifact>)`, then writes
     * `outDir/oracle_sql.json` (each query's oracle, in run order) and
-    * `outDir/timings.json` (per-query wall seconds — the decade-anchor
-    * table BASELINE.md records). Each query's directory is deleted before it runs, so a
-    * query that throws leaves no output, never an earlier run's, and
-    * scripts/check.py FAILs it. Returns the names of the queries that
-    * threw, in run order.
+    * `outDir/timings.json` (per-query wall seconds, artifact writes
+    * included — the decade-anchor table BASELINE.md records). A query's
+    * output and artifact directories are deleted before it runs and
+    * again if it throws (a body returning other artifacts than it
+    * declares throws too), so a failed query leaves no output, never an
+    * earlier run's, and scripts/check.py FAILs it. Returns the names of
+    * the queries that threw, in run order.
     */
   private[graft] def run(spark: SparkSession, sfDir: String, outDir: String,
       queries: Seq[Query]): Seq[String] = {
@@ -38,8 +43,11 @@ object Verify {
     val failed = Seq.newBuilder[String]
     queries.foreach { q =>
       val name = q.name
-      val dir = new java.io.File(s"$outDir/$name")
-      new scala.reflect.io.Directory(dir).deleteRecursively()
+      val dir = s"$outDir/$name"
+      val written = dir +: q.artifacts.map(OracleAux.dir(sfDir, _))
+      def clear(): Unit = written.foreach(d =>
+        new scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively())
+      clear()
       // repartition(1), NOT coalesce(1): both emit the single part
       // file the oracle compare reads, but coalesce folds the final
       // compute stage into the write task — at sf1.0 that serialized
@@ -49,11 +57,16 @@ object Verify {
       // output-sized while upstream keeps full parallelism.
       val t0 = System.nanoTime()
       try {
-        q.body(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(dir.getPath)
+        val out = q.body(spark, sfDir)
+        require(out.artifacts.map(_._1).sorted == q.artifacts.sorted,
+          s"artifacts returned differ from ${q.artifacts.mkString(",")}")
+        out.frame.repartition(1).write.mode("overwrite").parquet(dir)
+        out.artifacts.foreach { case (a, df) =>
+          df.write.mode("overwrite").parquet(OracleAux.dir(sfDir, a)) }
         timings(name) = (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        clear()
         failed += name
       }
     }

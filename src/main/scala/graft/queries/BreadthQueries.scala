@@ -687,23 +687,20 @@ object BreadthQueries {
 
     // approx sketches (HLL count-distinct, quantile summaries). The
     // estimates are engine-specific, so the aux-oracle pattern makes
-    // them checkable: the Spark sketch outputs are materialized to
-    // parquet, then BOTH engines read those same values back, recompute
-    // the exact answers independently, and evaluate the documented error
-    // bounds — every output column is deterministic, so the row hashes
-    // must match. Bounds: HLL++ default rsd=0.05 → 3σ=15% count bound;
+    // them checkable: the Spark sketch outputs are pinned and declared,
+    // then BOTH engines read those same values, recompute the exact
+    // answers independently, and evaluate the documented error bounds —
+    // every output column is deterministic, so the row hashes must
+    // match. Bounds: HLL++ default rsd=0.05 → 3σ=15% count bound;
     // percentile_approx(accuracy=1000) → ±n/1000 rank error, checked as
     // |rank(approx)/n − 0.5| ≤ 0.002 (2× for data-point snap slop).
-    Query("agg_approx_sketches", (s, dir) => {
-      val auxPath = OracleAux.dir(dir, "sketch_approx")
+    Query("agg_approx_sketches", Seq("sketch_approx"), (s, dir) => {
       val li = Tables.lineitem(s, dir)
-      li.groupBy(col("l_returnflag"))
+      val approx = graft.Checkpoints.checkpoint(li.groupBy(col("l_returnflag"))
         .agg(
           approx_count_distinct(col("l_orderkey")).as("approx_orders"),
           percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000))
-            .as("approx_median_price"))
-        .coalesce(1).write.mode("overwrite").parquet(auxPath)
-      val approx = s.read.parquet(auxPath)
+            .as("approx_median_price")))
       val exact = li.groupBy(col("l_returnflag")).agg(
         countDistinct(col("l_orderkey")).as("exact_orders"),
         count(lit(1)).as("n_rows"))
@@ -713,7 +710,8 @@ object BreadthQueries {
         .groupBy(col("l_returnflag"))
         .agg(sum(when(col("l_extendedprice") <= col("approx_median_price"), 1L)
           .otherwise(0L)).as("le_approx"))
-      approx.join(exact, Seq("l_returnflag")).join(ranked, Seq("l_returnflag"))
+      Query.Out(approx.join(exact, Seq("l_returnflag"))
+        .join(ranked, Seq("l_returnflag"))
         .select(
           col("l_returnflag"),
           col("approx_orders"),
@@ -722,9 +720,10 @@ object BreadthQueries {
             col("exact_orders").cast("double") * 0.15).as("orders_within_bound"),
           col("approx_median_price"),
           (abs(col("le_approx").cast("double") / col("n_rows").cast("double")
-            - 0.5) <= 0.002).as("median_within_bound"))
+            - 0.5) <= 0.002).as("median_within_bound")),
+        Seq("sketch_approx" -> approx))
     },
-      // reads the Spark-materialized sketch values, recomputes exact
+      // reads the Spark-pinned sketch values, recomputes exact
       // counts/ranks independently, and evaluates the same documented
       // bounds — every column deterministic, so hashes must match
       s"""WITH a AS (

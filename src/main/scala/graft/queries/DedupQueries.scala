@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 import graft.model.Tables
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
@@ -238,23 +239,23 @@ object DedupQueries {
         |WHERE CAST(i.c AS DOUBLE) / (sa.n + sb.n - i.c) >= 0.8""".stripMargin),
 
     // cluster-level dedup: near-dup pairs → connected components → one
-    // canonical (min-id) doc per cluster. The pair list is materialized
-    // so DuckDB can verify the component step via a recursive
+    // canonical (min-id) doc per cluster. The pair list is pinned and
+    // declared so DuckDB can verify the component step via a recursive
     // transitive-closure CTE; the iterative Spark loop is
     // Dedup.connectedComponents (large-star/small-star, checkpointed
     // per round)
-    Query("dedup_cluster_canonical", (s, dir) => {
-      val pairPath = OracleAux.dir(dir, "neardup_pairs")
-      Dedup.minhashNearDups(Tables.documents(s, dir), "doc_id", "text",
-        shingleSize = 3, numHashes = 32, bands = 16, threshold = 0.8)
-        .select("id_a", "id_b")
-        .write.mode("overwrite").parquet(pairPath)
-      val comp = Dedup.connectedComponents(
-        s.read.parquet(pairPath), "id_a", "id_b")
+    Query("dedup_cluster_canonical", Seq("neardup_pairs"), (s, dir) => {
+      val pairs = Checkpoints.checkpoint(
+        Dedup.minhashNearDups(Tables.documents(s, dir), "doc_id", "text",
+          shingleSize = 3, numHashes = 32, bands = 16, threshold = 0.8)
+        .select("id_a", "id_b"))
+      val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
       val w = Window.partitionBy(col("cluster_id"))
-      comp.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        .withColumn("cluster_size", count(lit(1)).over(w))
-        .withColumn("keep", col("doc_id") === col("cluster_id"))
+      Query.Out(
+        comp.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+          .withColumn("cluster_size", count(lit(1)).over(w))
+          .withColumn("keep", col("doc_id") === col("cluster_id")),
+        Seq("neardup_pairs" -> pairs))
     },
       // transitive closure over the materialized pair list, then
       // cluster id = min reachable node — exact twin of the connected-
@@ -285,14 +286,12 @@ object DedupQueries {
     // the pair graph, then keep the BEST-quality doc per cluster (not
     // min-id) — rank by (quality desc, doc_id asc); Spark plans the
     // rn==1 filter as its native per-cluster group limit
-    Query("dedup_cluster_keep_best", (s, dir) => {
-      val pairPath = OracleAux.dir(dir, "neardup_pairs_kb")
-      Dedup.minhashNearDups(Tables.documents(s, dir), "doc_id", "text",
-        shingleSize = 3, numHashes = 32, bands = 16, threshold = 0.8)
-        .select("id_a", "id_b")
-        .write.mode("overwrite").parquet(pairPath)
-      val comp = Dedup.connectedComponents(
-        s.read.parquet(pairPath), "id_a", "id_b")
+    Query("dedup_cluster_keep_best", Seq("neardup_pairs_kb"), (s, dir) => {
+      val pairs = Checkpoints.checkpoint(
+        Dedup.minhashNearDups(Tables.documents(s, dir), "doc_id", "text",
+          shingleSize = 3, numHashes = 32, bands = 16, threshold = 0.8)
+        .select("id_a", "id_b"))
+      val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("label").as("cluster_id"))
       val q = graft.text.TextAnalysis.qualityStats(
         Tables.documents(s, dir).select("doc_id", "text"), "text")
@@ -300,13 +299,14 @@ object DedupQueries {
       val w = Window.partitionBy(col("cluster_id"))
       val wOrd = Window.partitionBy(col("cluster_id"))
         .orderBy(col("quality_score").desc, col("doc_id").asc)
-      comp.join(q, "doc_id")
+      Query.Out(comp.join(q, "doc_id")
         .withColumn("n_docs", count(lit(1)).over(w))
         .withColumn("rn", row_number().over(wOrd))
         .where(col("rn") === 1)
         .select(col("cluster_id"), col("n_docs"),
           col("doc_id").as("keep_doc_id"),
-          col("quality_score").as("best_quality"))
+          col("quality_score").as("best_quality")),
+        Seq("neardup_pairs_kb" -> pairs))
     },
       s"""WITH RECURSIVE e AS (
         |  SELECT id_a AS a, id_b AS b
@@ -391,21 +391,21 @@ object DedupQueries {
     // MinHash sketch calibration: per LSH candidate pair, the signature
     // jaccard ESTIMATE next to the exact jaccard + abs error — sizes
     // numHashes for the threshold before trusting the sketch at scale.
-    // Estimates materialize to the aux dir (hash-dependent, not
+    // Estimates are a declared artifact (hash-dependent, not
     // SQL-expressible); the oracle recomputes exact + error from them
-    Query("dedup_minhash_est_error", (s, dir) => {
+    Query("dedup_minhash_est_error", Seq("mh_est"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      Dedup.minhashEstimatePairs(docs, "doc_id", "text")
-        .select("id_a", "id_b", "est_jaccard")
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "mh_est"))
+      val est = Checkpoints.checkpoint(
+        Dedup.minhashEstimatePairs(docs, "doc_id", "text")
+          .select("id_a", "id_b", "est_jaccard"))
       val withSh = docs.select(col("doc_id").cast("long").as("doc_id"),
         Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("__sh"))
-      Dedup.withJaccard(s.read.parquet(OracleAux.dir(dir, "mh_est")),
-          withSh, "doc_id", "__sh")
+      Query.Out(Dedup.withJaccard(est, withSh, "doc_id", "__sh")
         .select(col("id_a"), col("id_b"), col("est_jaccard"),
           Dedup.jaccard6(col("__ji"), col("__ju")).as("exact_jaccard"),
           round(abs(col("est_jaccard") -
-            Dedup.jaccard6(col("__ji"), col("__ju"))), 6).as("abs_err"))
+            Dedup.jaccard6(col("__ji"), col("__ju"))), 6).as("abs_err")),
+        Seq("mh_est" -> est))
     },
       s"""WITH p AS (SELECT id_a, id_b, est_jaccard
         |  FROM read_parquet('${OracleAux.sqlDir("mh_est")}/*.parquet')),
@@ -436,24 +436,22 @@ object DedupQueries {
     // observed candidate-pair jaccard distribution — one row per
     // (bands, rows) factorization of the 16-hash signature, with
     // data-weighted expected recall (hi pairs) and candidate waste
-    // (lo pairs). Candidate pairs are hash-dependent → materialized;
-    // the oracle recomputes exact jaccard and the squaring-chain
-    // probabilities from text
-    Query("dedup_lsh_tuning", (s, dir) => {
+    // (lo pairs). Candidate pairs are hash-dependent → a declared
+    // artifact; the oracle recomputes exact jaccard and the
+    // squaring-chain probabilities from text
+    Query("dedup_lsh_tuning", Seq("lsh_tune"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      Dedup.minhashEstimatePairs(docs, "doc_id", "text")
-        .select("id_a", "id_b")
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "lsh_tune"))
+      val pairs = Checkpoints.checkpoint(
+        Dedup.minhashEstimatePairs(docs, "doc_id", "text")
+          .select("id_a", "id_b"))
       val withSh = docs.select(col("doc_id").cast("long").as("doc_id"),
         Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("__sh"))
-      val pw = Dedup.withJaccard(
-          s.read.parquet(OracleAux.dir(dir, "lsh_tune")), withSh,
-          "doc_id", "__sh")
+      val pw = Dedup.withJaccard(pairs, withSh, "doc_id", "__sh")
         // boundary-exact input jaccard: the tuner's own round(·, 6) is
         // then an identity on an exact micro-multiple (r16 sweep)
         .withColumn("jaccard", Dedup.jaccard6(col("__ji"), col("__ju")))
-      Dedup.lshBandingTune(pw, "jaccard", numHashes = 16,
-        hiThreshold = 0.5)
+      Query.Out(Dedup.lshBandingTune(pw, "jaccard", numHashes = 16,
+        hiThreshold = 0.5), Seq("lsh_tune" -> pairs))
     },
       // estimates read from the materialized aux (hash-dependent); exact
       // jaccard + error recomputed from text — validates the sketch
@@ -545,26 +543,24 @@ object DedupQueries {
     // bounded-cost APPROXIMATE containment screen (bottom-k sketch)
     // for the all-pairs regime the exact join is spill-bound in: the
     // A-side explodes ≤ k postings per doc (constant) instead of the
-    // (1-t)·|a| prefix. Estimates materialize to the aux dir
+    // (1-t)·|a| prefix. Estimates are a declared artifact
     // (hash-dependent); exact containment + abs error are re-scored
     // from the full shingle sets — the dedup_minhash_est_error
     // calibration pattern, so the screen's error is a measured,
     // oracle-checked number
-    Query("dedup_containment_sketch", (s, dir) => {
+    Query("dedup_containment_sketch", Seq("cont_sketch"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      Dedup.containmentSketchPairs(docs, "doc_id", "text",
+      val est = Checkpoints.checkpoint(
+        Dedup.containmentSketchPairs(docs, "doc_id", "text",
           shingleSize = 3, k = 8, minEst = 0.3,
-          maxJoinPairs = Dedup.DefaultMaxCandidatePairs)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "cont_sketch"))
+          maxJoinPairs = Dedup.DefaultMaxCandidatePairs))
       val withSh = docs.select(col("doc_id").cast("long").as("doc_id"),
         Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("__sh"))
-      Dedup.withContainment(
-          s.read.parquet(OracleAux.dir(dir, "cont_sketch")),
-          withSh, "doc_id", "__sh")
+      Query.Out(Dedup.withContainment(est, withSh, "doc_id", "__sh")
         .select(col("id_a"), col("id_b"), col("est_containment"),
           col("exact_containment"),
           round(abs(col("est_containment") - col("exact_containment")), 6)
-            .as("abs_err"))
+            .as("abs_err")), Seq("cont_sketch" -> est))
     },
       // sketch estimates read from the materialized aux (hash-dependent);
       // exact containment + error recomputed from text — the screen's
@@ -709,20 +705,19 @@ object DedupQueries {
         |    / 1000000.0 >= 0.8""".stripMargin),
 
     // SimHash near-dups (hamming ≤ 7 on 64-bit fingerprints; the corpus'
-    // planted dup pairs measure hamming 0-7). The fingerprints are
-    // materialized to parquet so DuckDB can verify the PAIR step exactly
+    // planted dup pairs measure hamming 0-7). The fingerprints are a
+    // declared artifact so DuckDB can verify the PAIR step exactly
     // (bit_count(xor) over all pairs) — the fingerprint expression
     // itself is covered by DedupSpec
-    Query("dedup_simhash", (s, dir) => {
-      val fpPath = OracleAux.dir(dir, "simhash_fp")
-      Tables.documents(s, dir).select(col("doc_id"),
-        Dedup.simhash64(graft.text.TextAnalysis.tokens(col("text"))).as("fp"))
-        .write.mode("overwrite").parquet(fpPath)
-      Dedup.simhashCandidatePairs(s.read.parquet(fpPath), "doc_id", "fp",
-        maxHamming = 7)
+    Query("dedup_simhash", Seq("simhash_fp"), (s, dir) => {
+      val fps = Checkpoints.checkpoint(Tables.documents(s, dir).select(
+        col("doc_id"),
+        Dedup.simhash64(graft.text.TextAnalysis.tokens(col("text"))).as("fp")))
+      Query.Out(Dedup.simhashCandidatePairs(fps, "doc_id", "fp",
+        maxHamming = 7), Seq("simhash_fp" -> fps))
     },
-      // pair step over the materialized fingerprints (written by the query
-      // itself immediately before the check reads it)
+      // pair step over the fingerprint artifact (the pinned rows the
+      // Spark pair step read, written by Verify with the query's output)
       s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(bit_count(xor(a.fp, b.fp)) AS INTEGER) AS hamming
         |FROM read_parquet('${OracleAux.sqlDir("simhash_fp")}/*.parquet') a

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 import graft.model.Tables
 import graft.multimodal.Multimodal
 import graft.similarity.Similarity
@@ -94,28 +95,22 @@ object MultimodalQueries {
     // features through the decode boundary, then the MEASURED-GATE
     // near-dup operator (cosineNearDupsAutoWithPath) — never all-pairs.
     // Text-as-bytes payloads (asMedia) carry the corpus' planted
-    // near-dups; features and the candidate pair list materialize to
-    // the aux dir (the JVM decode boundary + hash/centroid-dependent
+    // near-dups; features and the candidate pair list are pinned and
+    // declared (the JVM decode boundary + hash/centroid-dependent
     // candidates), the oracle re-scores the exact stage from them —
     // the sim_cosine_neardups contract
-    Query("multimodal_neardups", (s, dir) => {
+    Query("multimodal_neardups", Seq("mm_feats", "mm_cands"), (s, dir) => {
       // repartition before the decode boundary: a single-file fixture
       // reads as ONE split (78 MB at sf10), serializing 500k payload
-      // decodes onto one core — the same small-file artifact as the
-      // feature read below; a real media corpus arrives in many splits
+      // decodes onto one core; a real media corpus arrives in many splits
       val media = Multimodal.asMedia(Tables.documents(s, dir), "doc_id", "text")
         .repartition(s.sparkContext.defaultParallelism)
-      Multimodal.extractPerceptualFeatures(s, media).toDF()
-        .select(col("media_id"), col("features"))
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "mm_feats"))
-      // repartition off the aux read: a feature table this narrow packs
-      // into ONE input split (16 floats/row — 500k sf10 rows are 13 MB
-      // of parquet), which would serialize the whole signature+band
-      // pipeline into a single task (measured: a 25-min one-core
-      // straggler at sf10; at real scale the splits come for free —
-      // this is the small-file artifact, not a plan property)
-      val f = s.read.parquet(OracleAux.dir(dir, "mm_feats"))
-        .repartition(s.sparkContext.defaultParallelism)
+      // the pin keeps the decode's partitions, so the narrow feature
+      // table is never packed into one input split the way a parquet
+      // read-back of it was (a 25-min one-core straggler at sf10)
+      val f = Checkpoints.checkpoint(
+        Multimodal.extractPerceptualFeatures(s, media).toDF()
+          .select(col("media_id"), col("features")))
       // MEASURED-gate routing (r15): byte-histogram features of text
       // are a DEGENERATE space — every document shares the corpus'
       // byte-frequency profile, so the measured background cosine is
@@ -131,14 +126,13 @@ object MultimodalQueries {
       // the auto gate reroutes to the cell-bounded SemDeDup-shape
       // operator (work Σ|cell|², cells ∝ n), the plan that holds at
       // 100 TB. The pair list (exact-scored ≥ t on either route)
-      // materializes as the candidate set the oracle re-scores.
-      Similarity.cosineNearDupsAuto(f, "media_id", "features",
-          threshold = 0.95, recall = 0.98)
-        .select(col("id_a"), col("id_b"))
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "mm_cands"))
-      Similarity.cosineNearDupsFromCandidates(
-        s.read.parquet(OracleAux.dir(dir, "mm_cands")),
-        f, "media_id", "features", threshold = 0.95)
+      // is pinned as the candidate set the oracle re-scores.
+      val cands = Checkpoints.checkpoint(
+        Similarity.cosineNearDupsAuto(f, "media_id", "features",
+          threshold = 0.95, recall = 0.98).select(col("id_a"), col("id_b")))
+      Query.Out(Similarity.cosineNearDupsFromCandidates(cands,
+          f, "media_id", "features", threshold = 0.95),
+        Seq("mm_feats" -> f, "mm_cands" -> cands))
     },
       // exact stage over the materialized perceptual features +
       // banded candidates (both hash-dependent JVM artifacts) — same

@@ -147,8 +147,9 @@ object ReferenceQueries {
         .withColumn("sum_valor", round(col("sum_valor"), 2))
     },
       // stage+spec over the materialized wire table (struct unnest, string
-      // →double casts, PII-free 10-dim rollup) — written by the query
-      // immediately before the check reads it
+      // →double casts, PII-free 10-dim rollup). The wire landing is the
+      // query's own storage: it reads the file the last Verify run of the
+      // query wrote at this sfDir
       s"""SELECT w.bandeira, w.numero_cartao, w.exp, w.tipo_cartao,
         |  w.cor_cartao, w.tipo_transacao,
         |  w.localizacao.cidade AS cidade,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 import graft.model.Tables
 import graft.similarity.Similarity
 import graft.text.TextAnalysis
@@ -251,15 +252,16 @@ object SimilarityQueries {
     // 128 planes = 16 bands × 8 bits + query-side multi-probe: band-key
     // space 256 keeps buckets ~n/256 (subquadratic candidates); see
     // Similarity.srpPlan for the sizing rule at other corpus scales.
-    // Candidates are materialized so DuckDB verifies the exact re-rank
-    // (the hash-dependent candidate stage is covered by the recall spec)
-    Query("sim_topk_lsh", (s, dir) => {
+    // Candidates are pinned and declared so DuckDB verifies the exact
+    // re-rank (the hash-dependent candidate stage is covered by the
+    // recall spec)
+    Query("sim_topk_lsh", Seq("lsh_cands"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 8)
-      Similarity.lshCandidates(q, emb, "vec_id", "embedding")
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "lsh_cands"))
-      Similarity.rerankTopK(s.read.parquet(OracleAux.dir(dir, "lsh_cands")),
-        q, emb, "vec_id", "embedding", k = 10)
+      val cands = Checkpoints.checkpoint(
+        Similarity.lshCandidates(q, emb, "vec_id", "embedding"))
+      Query.Out(Similarity.rerankTopK(cands, q, emb, "vec_id", "embedding",
+        k = 10), Seq("lsh_cands" -> cands))
     },
       // exact re-rank over the materialized LSH candidate pairs — same
       // cosine/rank formulation as the (hash-green) brute-force oracle
@@ -281,17 +283,17 @@ object SimilarityQueries {
     // index-quality gate. Recomputes its own candidate set (no ordering
     // dependency on sim_topk_lsh's aux dir); evaluation cost is
     // |Q|·k-row joins, corpus-size-independent
-    Query("sim_recall_at_k", (s, dir) => {
+    Query("sim_recall_at_k", Seq("recall_cands"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 8)
-      Similarity.lshCandidates(q, emb, "vec_id", "embedding")
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "recall_cands"))
-      val approx = Similarity.rerankTopK(
-        s.read.parquet(OracleAux.dir(dir, "recall_cands")),
-        q, emb, "vec_id", "embedding", k = 10)
+      val cands = Checkpoints.checkpoint(
+        Similarity.lshCandidates(q, emb, "vec_id", "embedding"))
+      val approx = Similarity.rerankTopK(cands, q, emb, "vec_id",
+        "embedding", k = 10)
       val exact = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
         k = 10)
-      Similarity.recallAtK(approx, exact)
+      Query.Out(Similarity.recallAtK(approx, exact),
+        Seq("recall_cands" -> cands))
     },
       // exact top-10 (brute-force CTE) vs the re-ranked materialized
       // candidate set — per-query hit fraction, same tiebreaks both sides
@@ -349,24 +351,19 @@ object SimilarityQueries {
         |FROM x GROUP BY 1, 2""".stripMargin),
 
     // k-means model training (Lloyd, 3 rounds, deterministic stratified
-    // init) + cell profile. The trained model is materialized so DuckDB
+    // init) + cell profile. The trained model is an artifact so DuckDB
     // verifies the ASSIGNMENT step exactly (argmax of list_dot_product
     // over the centroid table); the iterative trainer itself is covered
     // by SimilaritySpec (objective improvement + determinism)
-    Query("agg_kmeans_cells", (s, dir) => {
-      import s.implicits._
+    Query("agg_kmeans_cells", Seq("kmeans_centroids"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val cents = Similarity.trainCentroids(emb, "vec_id", "embedding",
         numCells = 8, iters = 3)
-      cents.zipWithIndex
-        .map { case ((v, n), i) => (i, v.map(_.toDouble), n) }.toSeq
-        .toDF("cell", "centroid", "norm")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(OracleAux.dir(dir, "kmeans_centroids"))
-      emb.select(col("vec_id"),
+      Query.Out(emb.select(col("vec_id"),
           Similarity.cellFor(cents)(col("embedding")).as("cell"))
         .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_vec_id"))
+        .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_vec_id")),
+        Seq("kmeans_centroids" -> OracleAux.centroids(s, cents)))
     },
       // nearest-centroid assignment against the materialized k-means
       // model; struct-max in Spark = (sim DESC, cell DESC) in SQL
@@ -387,21 +384,21 @@ object SimilarityQueries {
     // MMR diversified re-rank over the dense top-30 per query (k=10,
     // λ=0.7): sequential in k, parallel across queries (one
     // flatMapGroups task each, candK² local cosines). Candidates with
-    // double vecs materialize so the oracle replays the greedy loop
-    // exactly via a recursive CTE
-    Query("sim_mmr_rerank", (s, dir) => {
+    // double vecs are pinned and declared so the oracle replays the
+    // greedy loop exactly via a recursive CTE
+    Query("sim_mmr_rerank", Seq("mmr_cands"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 4)
       val cands = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
         k = 30)
         .select(col("query_id"), col("neighbor_id").as("cand_id"),
           col("score").as("rel"))
-      cands.join(emb.select(col("vec_id").as("cand_id"),
+      val withVecs = Checkpoints.checkpoint(
+        cands.join(emb.select(col("vec_id").as("cand_id"),
           col("embedding").cast("array<double>").as("vec")), "cand_id")
-        .select("query_id", "cand_id", "rel", "vec")
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "mmr_cands"))
-      Similarity.mmrRerank(s.read.parquet(OracleAux.dir(dir, "mmr_cands")),
-        k = 10, lambda = 0.7)
+        .select("query_id", "cand_id", "rel", "vec"))
+      Query.Out(Similarity.mmrRerank(withVecs, k = 10, lambda = 0.7),
+        Seq("mmr_cands" -> withVecs))
     },
       // the greedy MMR loop replayed as a recursive CTE over the
       // materialized candidates: anchor = best rel per query; each step's
@@ -445,19 +442,14 @@ object SimilarityQueries {
     // cluster-quality gate: simplified (centroid-based) silhouette of
     // the same 8-cell / 3-iter k-means model — per-cell mean of
     // s = (b−a)/max(a,b) over own/runner-up cosine distances. Trains
-    // and materializes its own centroid table (no ordering dependency
-    // on agg_kmeans_cells); one map-only corpus pass + 8-row agg
-    Query("sim_cluster_silhouette", (s, dir) => {
-      import s.implicits._
+    // and declares its own centroid table (no ordering dependency on
+    // agg_kmeans_cells); one map-only corpus pass + 8-row agg
+    Query("sim_cluster_silhouette", Seq("silhouette_centroids"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val cents = Similarity.trainCentroids(emb, "vec_id", "embedding",
         numCells = 8, iters = 3)
-      cents.zipWithIndex
-        .map { case ((v, n), i) => (i, v.map(_.toDouble), n) }.toSeq
-        .toDF("cell", "centroid", "norm")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(OracleAux.dir(dir, "silhouette_centroids"))
-      Similarity.clusterSilhouette(emb, "vec_id", "embedding", cents)
+      Query.Out(Similarity.clusterSilhouette(emb, "vec_id", "embedding", cents),
+        Seq("silhouette_centroids" -> OracleAux.centroids(s, cents)))
     },
       // simplified silhouette against the materialized centroid table:
       // own/runner-up by (sim DESC, cell DESC) on unrounded cosines,
@@ -506,29 +498,25 @@ object SimilarityQueries {
     // (round each subspace dot to 1e-6, integer-sum, rank) and
     // re-scores the exact dot on the winners, so the ADC quantization
     // error is a measured per-row column
-    Query("sim_topk_pq", (s, dir) => {
-      import s.implicits._
+    Query("sim_topk_pq", Seq("pq_codebooks", "pq_codes"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 8)
       val cbs = Similarity.pqTrain(emb, "vec_id", "embedding",
         m = 8, k = 16, iters = 2)
-      cbs.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (cw, c) => (j, c, cw.map(_.toDouble)) }
-      }.toSeq.toDF("subspace", "code", "vec").coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pq_codebooks"))
-      Similarity.pqEncode(emb, "vec_id", "embedding", cbs)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pq_codes"))
-      val topk = Similarity.pqAdcTopK(q,
-        s.read.parquet(OracleAux.dir(dir, "pq_codes")), cbs,
+      val codes = Checkpoints.checkpoint(
+        Similarity.pqEncode(emb, "vec_id", "embedding", cbs))
+      val topk = Similarity.pqAdcTopK(q, codes, cbs,
         "vec_id", "embedding", k = 10)
       val qv = emb.where(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
       val nv = emb.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("__nv"))
-      topk.join(broadcast(qv), Seq("query_id")).join(nv, Seq("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          col("est_dot"),
-          round(Similarity.dot(col("__qv"), col("__nv")), 6).as("exact_dot"))
+      Query.Out(
+        topk.join(broadcast(qv), Seq("query_id")).join(nv, Seq("neighbor_id"))
+          .select(col("query_id"), col("neighbor_id"), col("rank"),
+            col("est_dot"),
+            round(Similarity.dot(col("__qv"), col("__nv")), 6).as("exact_dot")),
+        Seq("pq_codebooks" -> OracleAux.codebooks(s, cbs), "pq_codes" -> codes))
     },
       // full ADC replay from the materialized model: per-subspace dots
       // rounded to micro-units (round ≡ Spark round(x,0) ≡ HALF_UP),
@@ -571,24 +559,19 @@ object SimilarityQueries {
     // index's quality as an oracle-checked number (the sim_recall_at_k
     // pattern; raw ADC ranking alone carries the quantization error
     // sim_topk_pq materializes, re-ranking buys it back)
-    Query("sim_pq_recall", (s, dir) => {
-      import s.implicits._
+    Query("sim_pq_recall", Seq("pqr_codebooks", "pqr_codes"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 8)
       val cbs = Similarity.pqTrain(emb, "vec_id", "embedding",
         m = 8, k = 16, iters = 2)
-      cbs.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (cw, c) => (j, c, cw.map(_.toDouble)) }
-      }.toSeq.toDF("subspace", "code", "vec").coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqr_codebooks"))
-      Similarity.pqEncode(emb, "vec_id", "embedding", cbs)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqr_codes"))
-      val approx = Similarity.pqShortlistRerank(q,
-        s.read.parquet(OracleAux.dir(dir, "pqr_codes")), cbs, emb,
+      val codes = Checkpoints.checkpoint(
+        Similarity.pqEncode(emb, "vec_id", "embedding", cbs))
+      val approx = Similarity.pqShortlistRerank(q, codes, cbs, emb,
         "vec_id", "embedding", k = 10, shortlist = 50)
       val exact = Similarity.bruteForceTopKDot(q, emb, "vec_id",
         "embedding", k = 10)
-      Similarity.recallAtK(approx, exact)
+      Query.Out(Similarity.recallAtK(approx, exact),
+        Seq("pqr_codebooks" -> OracleAux.codebooks(s, cbs), "pqr_codes" -> codes))
     },
       // full two-stage replay: ADC estimates from the materialized
       // model → shortlist(50) → exact-dot re-rank(10) → recall join vs
@@ -645,25 +628,20 @@ object SimilarityQueries {
     // codebooks materialize; the oracle replays ADC over exactly the
     // candidate pairs, shortlists, and re-ranks with the
     // list_dot_product twin
-    Query("sim_topk_ivfpq", (s, dir) => {
-      import s.implicits._
+    Query("sim_topk_ivfpq", Seq("pqi_codebooks", "pqi_codes", "pqi_cands"),
+        (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 8)
       val cbs = Similarity.pqTrain(emb, "vec_id", "embedding",
         m = 8, k = 16, iters = 2)
-      cbs.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (cw, c) => (j, c, cw.map(_.toDouble)) }
-      }.toSeq.toDF("subspace", "code", "vec").coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqi_codebooks"))
-      Similarity.pqEncode(emb, "vec_id", "embedding", cbs)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqi_codes"))
-      Similarity.ivfCandidates(q, emb, "vec_id", "embedding",
-          numCells = 16, nprobe = 8)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqi_cands"))
-      Similarity.ivfPqTopK(q, emb,
-        s.read.parquet(OracleAux.dir(dir, "pqi_cands")),
-        s.read.parquet(OracleAux.dir(dir, "pqi_codes")), cbs,
-        "vec_id", "embedding", k = 10, shortlist = 50)
+      val codes = Checkpoints.checkpoint(
+        Similarity.pqEncode(emb, "vec_id", "embedding", cbs))
+      val cands = Checkpoints.checkpoint(Similarity.ivfCandidates(q, emb,
+        "vec_id", "embedding", numCells = 16, nprobe = 8))
+      Query.Out(Similarity.ivfPqTopK(q, emb, cands, codes, cbs,
+          "vec_id", "embedding", k = 10, shortlist = 50),
+        Seq("pqi_codebooks" -> OracleAux.codebooks(s, cbs),
+          "pqi_codes" -> codes, "pqi_cands" -> cands))
     },
       // ADC replay RESTRICTED to the materialized candidate pairs, then
       // shortlist(50) on the micro estimates and exact-dot re-rank(10)
@@ -715,40 +693,34 @@ object SimilarityQueries {
     // Centroids, cell assignments, codebooks, codes, and candidates
     // all materialize; the oracle replays the two-term estimate,
     // shortlist, and exact re-rank
-    Query("sim_topk_ivfpq_res", (s, dir) => {
+    Query("sim_topk_ivfpq_res", Seq("pqres_cents", "pqres_cells",
+        "pqres_codebooks", "pqres_codes", "pqres_cands"), (s, dir) => {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 8)
       val cents = Similarity.trainCentroids(emb, "vec_id", "embedding",
         numCells = 16, iters = 1)
-      cents.map(_._1).zipWithIndex
-        .map { case (v, i) => (i, v.map(_.toDouble)) }.toSeq
-        .toDF("cell", "vec").coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqres_cents"))
-      // r19 multi-consumer pin: resid feeds the cells write, the three
-      // pqTrain actions AND the encode write — five executions of the
+      // r19 multi-consumer pin: resid feeds the cell table, the three
+      // pqTrain actions AND the encode — five executions of the
       // scan+cellFor+zip_with subtree without it
-      val resid = graft.Checkpoints.checkpoint(
+      val resid = Checkpoints.checkpoint(
         Similarity.residuals(emb, "vec_id", "embedding", cents))
-      resid.select("vec_id", "cell")
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqres_cells"))
+      val cells = resid.select("vec_id", "cell")
       val cbs = Similarity.pqTrain(resid, "vec_id", "__resid",
         m = 8, k = 16, iters = 2)
-      cbs.zipWithIndex.flatMap { case (cb, j) =>
-        cb.zipWithIndex.map { case (cw, c) => (j, c, cw.map(_.toDouble)) }
-      }.toSeq.toDF("subspace", "code", "vec").coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqres_codebooks"))
-      Similarity.pqEncode(resid, "vec_id", "__resid", cbs)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqres_codes"))
-      val cellsDf = s.read.parquet(OracleAux.dir(dir, "pqres_cells"))
-      Similarity.ivfProbe(q, "vec_id", "embedding", cents,
-          cellsDf.select(col("vec_id").as("neighbor_id"), col("cell")),
-          nprobe = 8)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "pqres_cands"))
-      Similarity.ivfPqResidualTopK(q, emb,
-        s.read.parquet(OracleAux.dir(dir, "pqres_cands")), cellsDf,
-        s.read.parquet(OracleAux.dir(dir, "pqres_codes")), cents, cbs,
-        "vec_id", "embedding", k = 10, shortlist = 50)
+      val codes = Checkpoints.checkpoint(
+        Similarity.pqEncode(resid, "vec_id", "__resid", cbs))
+      val cands = Checkpoints.checkpoint(Similarity.ivfProbe(q, "vec_id",
+        "embedding", cents,
+        cells.select(col("vec_id").as("neighbor_id"), col("cell")),
+        nprobe = 8))
+      Query.Out(Similarity.ivfPqResidualTopK(q, emb, cands, cells, codes,
+          cents, cbs, "vec_id", "embedding", k = 10, shortlist = 50),
+        Seq("pqres_cents" -> cents.map(_._1).zipWithIndex
+            .map { case (v, i) => (i, v.map(_.toDouble)) }.toSeq
+            .toDF("cell", "vec"),
+          "pqres_cells" -> cells, "pqres_codebooks" -> OracleAux.codebooks(s, cbs),
+          "pqres_codes" -> codes, "pqres_cands" -> cands))
     },
       // two-term estimate replay: q·centroid (per query×cell) + the
       // residual-codebook ADC sum over the candidate pairs, then
@@ -810,14 +782,13 @@ object SimilarityQueries {
 
     // IVF-bucketed ANN; probe-join candidates materialized, re-rank
     // DuckDB-verified (recall vs brute force asserted in SimilaritySpec)
-    Query("sim_topk_ivf", (s, dir) => {
+    Query("sim_topk_ivf", Seq("ivf_cands"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 8)
-      Similarity.ivfCandidates(q, emb, "vec_id", "embedding",
-        numCells = 16, nprobe = 8)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "ivf_cands"))
-      Similarity.rerankTopK(s.read.parquet(OracleAux.dir(dir, "ivf_cands")),
-        q, emb, "vec_id", "embedding", k = 10)
+      val cands = Checkpoints.checkpoint(Similarity.ivfCandidates(q, emb,
+        "vec_id", "embedding", numCells = 16, nprobe = 8))
+      Query.Out(Similarity.rerankTopK(cands, q, emb, "vec_id", "embedding",
+        k = 10), Seq("ivf_cands" -> cands))
     },
       s"""WITH p AS (SELECT query_id, neighbor_id
         |  FROM read_parquet('${OracleAux.sqlDir("ivf_cands")}/*.parquet')),
@@ -845,15 +816,14 @@ object SimilarityQueries {
     // to the cell-bounded operator at that scale; EITHER route emits
     // exact-scored pairs ≥ t, and the oracle re-scores the
     // materialized pair list, so the contract is route-independent.
-    Query("sim_cosine_neardups", (s, dir) => {
+    Query("sim_cosine_neardups", Seq("cosine_cands"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.cosineNearDupsAuto(emb, "vec_id", "embedding",
-          threshold = 0.4)
-        .select(col("id_a"), col("id_b"))
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "cosine_cands"))
-      Similarity.cosineNearDupsFromCandidates(
-        s.read.parquet(OracleAux.dir(dir, "cosine_cands")),
-        emb, "vec_id", "embedding", threshold = 0.4)
+      val cands = Checkpoints.checkpoint(
+        Similarity.cosineNearDupsAuto(emb, "vec_id", "embedding",
+          threshold = 0.4).select(col("id_a"), col("id_b")))
+      Query.Out(Similarity.cosineNearDupsFromCandidates(cands,
+        emb, "vec_id", "embedding", threshold = 0.4),
+        Seq("cosine_cands" -> cands))
     },
       // exact threshold stage over the materialized near-dup candidates
       s"""WITH p AS (SELECT id_a, id_b
@@ -870,18 +840,12 @@ object SimilarityQueries {
     // Σ|cell|² (never n²); drop = a smaller-id same-cell neighbor at
     // cosine ≥ t. Centroids materialized so DuckDB re-derives the
     // ASSIGNMENT and the within-cell NOT-EXISTS exactly
-    Query("dedup_semantic", (s, dir) => {
-      import s.implicits._
+    Query("dedup_semantic", Seq("semdedup_centroids"), (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val cents = Similarity.trainCentroids(emb, "vec_id", "embedding",
         numCells = 8, iters = 3)
-      cents.zipWithIndex
-        .map { case ((v, n), i) => (i, v.map(_.toDouble), n) }.toSeq
-        .toDF("cell", "centroid", "norm")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(OracleAux.dir(dir, "semdedup_centroids"))
-      Similarity.semanticDedup(emb, "vec_id", "embedding", cents,
-        threshold = 0.4)
+      Query.Out(Similarity.semanticDedup(emb, "vec_id", "embedding", cents,
+        threshold = 0.4), Seq("semdedup_centroids" -> OracleAux.centroids(s, cents)))
     },
       // nearest-centroid assignment re-derived from the materialized
       // model, then the SemDeDup drop rule as a correlated NOT EXISTS

@@ -550,20 +550,16 @@ object TextQueries {
     // reported as a per-source funnel (raw → post-dedup → kept, with
     // kept token/byte mass and shard count). One tagging pass computes
     // the dedup-survivor flag AND the quality signals (gopherRules'
-    // keep-through columns — no re-join on the id); the tagged frame
-    // materializes to the aux dir so the funnel aggregate and the
-    // prefix-sum sharder both read a parquet cache instead of
-    // recomputing the lineage (at 100 TB: persist or checkpoint — the
-    // tag pass is the only corpus-sized scan in the whole pipeline)
+    // keep-through columns — no re-join on the id); the tagged frame is
+    // pinned once so the funnel aggregate and the prefix-sum sharder
+    // both read it instead of recomputing the lineage (the tag pass is
+    // the only corpus-sized scan in the whole pipeline)
     Query("pipeline_curation_e2e", (s, dir) => {
       val w = Window.partitionBy(col("text")).orderBy(col("doc_id"))
-      val tagged = TextAnalysis.gopherRules(
+      val t = graft.Checkpoints.checkpoint(TextAnalysis.gopherRules(
         Tables.documents(s, dir).select("doc_id", "text", "source", "n_chars")
           .withColumn("is_first", (row_number().over(w) === 1).cast("int")),
-        "doc_id", "text", keep = Seq("source", "n_chars", "is_first"))
-      tagged.write.mode("overwrite")
-        .parquet(OracleAux.dir(dir, "curation_tagged"))
-      val t = s.read.parquet(OracleAux.dir(dir, "curation_tagged"))
+        "doc_id", "text", keep = Seq("source", "n_chars", "is_first")))
       val keptFlag = col("is_first") === 1 && col("gopher_pass") === 1
       val shards = TextAnalysis.shardByBytes(
           t.where(keptFlag).select("doc_id", "source", "n_chars"),
@@ -656,22 +652,17 @@ object TextQueries {
     // bucket-array cache, then 3 GD passes read only the sample) with
     // micro-unit-long gradient sums (bit-identical weights whatever
     // the partitioning), scored map-only over the FULL corpus. The
-    // trained model materializes to the aux dir (bucket -1 = bias,
-    // micro units); the oracle re-scores every doc from it
-    Query("text_quality_classifier", (s, dir) => {
+    // trained model is an artifact (bucket -1 = bias, micro units); the
+    // oracle re-scores every doc from it
+    Query("text_quality_classifier", Seq("quality_lr"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "text")
       val (w, b) = graft.text.QualityClassifier.train(
         docs, "text", col("lang") === "en", numBuckets = 256, iters = 3,
         sampleMod = graft.text.QualityClassifier.sampleModFor(
           docs.count(), 250))
-      val model = (-1 -> math.rint(b * 1e9).toLong) +:
-        w.toSeq.zipWithIndex.map { case (wt, i) =>
-          i -> math.rint(wt * 1e9).toLong }
-      import s.implicits._
-      model.toDF("bucket", "w_micro").coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "quality_lr"))
-      graft.text.QualityClassifier.score(docs, "doc_id", "text", w, b,
-        numBuckets = 256, threshold = 0.5)
+      Query.Out(graft.text.QualityClassifier.score(docs, "doc_id", "text",
+        w, b, numBuckets = 256, threshold = 0.5),
+        Seq("quality_lr" -> OracleAux.linearModel(s, w, b)))
     },
       // scoring re-derived from the materialized micro-unit model: same
       // md5 bucket, integer weight sum (order-free), same sigmoid + 6dp
@@ -703,21 +694,15 @@ object TextQueries {
     // threshold in {0.1..0.9}, the confusion counts and P/R/F1 against
     // the heuristic label, from ONE map-only scoring pass (label rides
     // through scoring via keepCols; the 9-way fan-out is an array
-    // explode of a literal grid, not 9 scans). Model materializes to
-    // its own aux dir; the oracle re-scores every doc from it and
-    // replays the same sweep arithmetic
-    Query("text_quality_pr_curve", (s, dir) => {
+    // explode of a literal grid, not 9 scans). The model is its own
+    // artifact; the oracle re-scores every doc from it and replays the
+    // same sweep arithmetic
+    Query("text_quality_pr_curve", Seq("quality_lr_pr"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "text")
       val (w, b) = graft.text.QualityClassifier.train(
         docs, "text", col("lang") === "en", numBuckets = 256, iters = 3,
         sampleMod = graft.text.QualityClassifier.sampleModFor(
           docs.count(), 250))
-      val model = (-1 -> math.rint(b * 1e9).toLong) +:
-        w.toSeq.zipWithIndex.map { case (wt, i) =>
-          i -> math.rint(wt * 1e9).toLong }
-      import s.implicits._
-      model.toDF("bucket", "w_micro").coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "quality_lr_pr"))
       val scored = graft.text.QualityClassifier.score(
         docs.withColumn("y", (col("lang") === "en").cast("int")),
         "doc_id", "text", w, b, numBuckets = 256, threshold = 0.5,
@@ -743,7 +728,7 @@ object TextQueries {
         TextAnalysis.exactRound6Ratio(col("tp"), col("tp") + col("fp")))
       val r = when(col("tp") + col("fn") > 0,
         TextAnalysis.exactRound6Ratio(col("tp"), col("tp") + col("fn")))
-      conf.withColumn("precision", p).withColumn("recall", r)
+      Query.Out(conf.withColumn("precision", p).withColumn("recall", r)
         .withColumn("__zp", round(col("precision") * 1e6, 0).cast("long"))
         .withColumn("__zr", round(col("recall") * 1e6, 0).cast("long"))
         .withColumn("f1",
@@ -751,7 +736,8 @@ object TextQueries {
             TextAnalysis.exactRound6Ratio(
               lit(2L) * col("__zp") * col("__zr"),
               (col("__zp") + col("__zr")) * lit(1000000L))))
-        .drop("__zp", "__zr")
+        .drop("__zp", "__zr"),
+        Seq("quality_lr_pr" -> OracleAux.linearModel(s, w, b)))
     },
       // same per-doc scoring from the materialized micro-unit model,
       // label from lang, then the 9-threshold sweep with P/R/F1 computed
@@ -844,25 +830,24 @@ object TextQueries {
     // of the distinct lines (one linear pass, no per-source distinct
     // shuffle, no line-keyed self-join) + pairwise union /
     // inclusion-exclusion over the k×k sketch-only frame. Estimates
-    // are hash-dependent → materialized to the aux dir; exact shared
-    // counts re-scored on both sides so the sketch's error is a
-    // measured, oracle-checked number (the dedup_minhash_est_error
-    // calibration pattern)
-    Query("corpus_overlap_sketch", (s, dir) => {
+    // are hash-dependent → pinned and declared; exact shared counts
+    // re-scored on both sides so the sketch's error is a measured,
+    // oracle-checked number (the dedup_minhash_est_error calibration
+    // pattern)
+    Query("corpus_overlap_sketch", Seq("overlap_hll"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("source", "text")
-      TextAnalysis.sourceOverlapSketch(docs, "source", "text",
-          lineWords = 3, lgK = 12)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "overlap_hll"))
-      val est = s.read.parquet(OracleAux.dir(dir, "overlap_hll"))
+      val est = graft.Checkpoints.checkpoint(
+        TextAnalysis.sourceOverlapSketch(docs, "source", "text",
+          lineWords = 3, lgK = 12))
       val exact = TextAnalysis.sourceOverlapMatrix(docs, "source", "text",
           lineWords = 3)
         .select(col("src_a"), col("src_b"), col("n_shared"))
-      est.join(exact, Seq("src_a", "src_b"), "left")
+      Query.Out(est.join(exact, Seq("src_a", "src_b"), "left")
         .select(col("src_a"), col("src_b"), col("est_a"), col("est_b"),
           col("est_union"), col("est_shared"),
           coalesce(col("n_shared"), lit(0L)).as("n_shared"),
           abs(col("est_shared") - coalesce(col("n_shared"), lit(0L)))
-            .as("abs_err"))
+            .as("abs_err")), Seq("overlap_hll" -> est))
     },
       // sketch estimates from the aux dump (hash-dependent); exact
       // shared-line counts re-derived with the same line CTE as
@@ -892,23 +877,22 @@ object TextQueries {
     // path answers per-term frequency from a fixed-size counter grid
     // (one map-side-combined scan, NO vocabulary shuffle); the exact
     // top-k here is the calibration reference. Estimates are
-    // hash-function-dependent (seeded) → materialized to the aux dir;
-    // exact counts re-derived by the oracle. Integer cell merges make
+    // hash-function-dependent (seeded) → a declared artifact; exact
+    // counts re-derived by the oracle. Integer cell merges make
     // the estimates bit-identical whatever the partitioning — CMS is
     // the deterministic sketch, unlike the HLL estimator
-    Query("corpus_heavyhitters_cms", (s, dir) => {
+    Query("corpus_heavyhitters_cms", Seq("cms_est"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("text")
       val cms = TextAnalysis.cmsTokenSketch(docs, "text",
         eps = 1e-4, confidence = 0.99, seed = 42)
       val exactTop = TextAnalysis.vocabTopK(docs, "text", 20)
         .select("term", "cnt", "rank")
       val terms = exactTop.select("term").collect().map(_.getString(0))
-      TextAnalysis.cmsEstimates(s, cms, terms.toSeq).coalesce(1)
-        .write.mode("overwrite").parquet(OracleAux.dir(dir, "cms_est"))
-      s.read.parquet(OracleAux.dir(dir, "cms_est"))
-        .join(broadcast(exactTop), Seq("term"))
+      val est = TextAnalysis.cmsEstimates(s, cms, terms.toSeq)
+      Query.Out(est.join(broadcast(exactTop), Seq("term"))
         .select(col("term"), col("rank"), col("cnt"), col("est_cnt"),
-          (col("est_cnt") - col("cnt")).as("overcount"))
+          (col("est_cnt") - col("cnt")).as("overcount")),
+        Seq("cms_est" -> est))
     },
       // estimates from the aux dump (seeded-hash-dependent); exact
       // top-20 counts re-derived with the text_vocab_topk CTE

@@ -369,28 +369,25 @@ object TokenQueries {
     // pattern): every winnow-screen pair gets its EXACT 3-gram
     // Jaccard — the screen's quality becomes a measured, oracle-
     // checked table instead of a claim. Pairs are deterministic and
-    // independently hash-checked by text_winnow_neardups; the aux
-    // parquet only transports them into the oracle
-    Query("text_winnow_screen_error", (s, dir) => {
+    // independently hash-checked by text_winnow_neardups; the artifact
+    // only transports them into the oracle
+    Query("text_winnow_screen_error", Seq("winnow_pairs"), (s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      TextAnalysis.winnowNearDups(docs, "doc_id", "text",
+      val pairs = graft.Checkpoints.checkpoint(
+        TextAnalysis.winnowNearDups(docs, "doc_id", "text",
           k = 3, w = 4, minShared = 2, maxDf = 20)
         .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"),
-          col("shared_fps"))
-        .write.mode("overwrite")
-        .parquet(OracleAux.dir(dir, "winnow_pairs"))
+          col("shared_fps")))
       val withSh = docs.select(col("doc_id").cast("long").as("doc_id"),
-        graft.dedup.Dedup.shingles(TextAnalysis.tokens(col("text")), 3)
-          .as("__sh"))
-      graft.dedup.Dedup.withJaccard(
-          s.read.parquet(OracleAux.dir(dir, "winnow_pairs")),
-          withSh, "doc_id", "__sh")
+        Dedup.shingles(TextAnalysis.tokens(col("text")), 3).as("__sh"))
+      Query.Out(Dedup.withJaccard(pairs, withSh, "doc_id", "__sh")
         .select(col("id_a"), col("id_b"), col("shared_fps"),
           Dedup.jaccard6(col("__ji"), col("__ju")).as("exact_jaccard"),
-          (Dedup.jaccard6(col("__ji"), col("__ju")) >= 0.5).as("is_neardup"))
+          (Dedup.jaccard6(col("__ji"), col("__ju")) >= 0.5).as("is_neardup")),
+        Seq("winnow_pairs" -> pairs))
     },
-      // pairs from the materialized aux; exact Jaccard recomputed from
-      // text with the same shingle spelling as the minhash evaluator
+      // pairs from the artifact; exact Jaccard recomputed from text with
+      // the same shingle spelling as the minhash evaluator
       s"""WITH p AS (SELECT id_a, id_b, shared_fps
         |  FROM read_parquet('${OracleAux.sqlDir("winnow_pairs")}/*.parquet')),
         |d AS (

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.queries.Query
+import graft.queries.{OracleAux, Query}
 
 class BenchSpec extends SparkSpec {
 
@@ -61,6 +61,29 @@ class BenchSpec extends SparkSpec {
         "sf", "full_json"))
       assert(c.get("n").asInt == 3 && c.get("error_count").asInt == 1)
       assert(c.get("errors").get("bench_throws").asText == "seeded")
+    } finally Files.deleteIfExists(out)
+  }
+
+  test("a filtered Bench run of sim_topk_lsh writes no aux directory, and " +
+    "its profiled jobs equal JobCounter's count for the same call") {
+    val out = Files.createTempFile("graft_bench", ".json")
+    val cands = new java.io.File(OracleAux.dir(sf(), "lsh_cands"))
+    val root = cands.getParentFile.getParentFile
+    def dirs(): Set[String] =
+      if (!root.exists()) Set.empty
+      else Files.walk(root.toPath).iterator.asScala
+        .filter(Files.isDirectory(_)).map(_.toString).toSet
+    try {
+      new scala.reflect.io.Directory(cands).deleteRecursively()
+      val before = dirs()
+      val picked = Bench.selected(Some("sim_topk_lsh"))
+      assert(picked.map(_.name) == Seq("sim_topk_lsh"))
+      val (full, _) = Bench.run(spark, sf(), picked, 1, out.toString)
+      assert(dirs() -- before == Set.empty[String])
+      val (_, jobs) = JobCounter.count(spark.sparkContext)(
+        SparkEntry.queries("sim_topk_lsh")(spark, sf()).count())
+      assert(new ObjectMapper().readTree(full).get("profile")
+        .get("sim_topk_lsh").get("jobs").asInt == jobs)
     } finally Files.deleteIfExists(out)
   }
 }

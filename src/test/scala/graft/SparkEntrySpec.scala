@@ -22,4 +22,13 @@ class SparkEntrySpec extends AnyFunSuite {
     val withTabs = SparkEntry.oracleSql.filter(_._2.contains("\t")).keys
     assert(withTabs.isEmpty, s"tabs in: $withTabs")
   }
+
+  test("each artifact name is declared by one record, and its oracle " +
+    "reads it") {
+    val declared = SparkEntry.records.flatMap(q => q.artifacts.map(_ -> q))
+    val dups = declared.groupBy(_._1).collect { case (a, qs) if qs.size > 1 => a }
+    assert(dups.isEmpty, s"two records would write one aux dir: $dups")
+    for ((a, q) <- declared)
+      assert(q.oracle.contains(s"/$a/"), s"${q.name} declares $a unread")
+  }
 }
