@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Driver-runnable streaming evidence (sbt-free). Three checks, each
-  * printing ONE JSON line:
+/** Driver-runnable streaming evidence (sbt-free). Twelve parity
+  * checks, each printing ONE JSON line:
   *
   *  - `fraud` (§2.9 T1-T5/T7/T10): the windowed-agg fraud plan with
   *    `Trigger.AvailableNow`, stream == batch parity against the batch
@@ -15,8 +15,25 @@ import org.apache.spark.sql.streaming.Trigger
   *    spend alerts over the same file stream, parity vs the window-
   *    predicate batch twin.
   *  - `streamjoin` (§2.9 T11-adjacent): watermarked stream-stream
-  *    interval join (views ⋈ purchases within 60 s per user), parity vs
+  *    interval join (views ⋈ purchases within 1 h per user), parity vs
   *    the identical batch join.
+  *  - `outerjoin`: the LEFT OUTER form of that join — matched rows and
+  *    watermark-due null rows vs the batch inner and anti joins.
+  *  - `session`: session windows vs the batch sessionization.
+  *  - `dedup`: `dropDuplicatesWithinWatermark` key set vs batch
+  *    `distinct`.
+  *  - `staticjoin`: stream-static broadcast enrichment vs the batch
+  *    join.
+  *  - `drift`: per-window PSI against a static baseline.
+  *  - `quality`: in-flight classifier scoring vs batch scoring.
+  *  - `cms`: per-window Count-Min sketch bytes vs the batch sketch.
+  *  - `latedrop`: rows behind the watermark dropped, in-state rows
+  *    merged, on a synthetic three-file source.
+  *  - `winnow`: in-flight winnowing fingerprints matched against a
+  *    static corpus index.
+  *
+  * `--check=bench` is a throughput mode, not one of the twelve (see
+  * `checkBench`).
   *
   * Usage: `runMain graft.StreamCheck [sfDir]
   * [--check=fraud|stateful|streamjoin|outerjoin|session|dedup|staticjoin|drift|quality|cms|latedrop|winnow|all]`
@@ -253,14 +270,6 @@ object StreamCheck {
       distinctStream = true)
   }
 
-  /** Watermarked stream-stream interval join: purchases within 1 h of a
-    * view by the same user, both sides file streams over the same events
-    * parquet. Batch twin = the identical join predicate in batch mode
-    * (AvailableNow delivers everything before the final watermark sweep,
-    * so no in-window match can be dropped). Each side buffers only rows
-    * younger than watermark + interval — the state bound that makes the
-    * join viable on unbounded streams.
-    */
   /** Stream-static broadcast join — the production dim-enrichment
     * shape: the streaming fact joined to a bounded dimension (events ⋈
     * customer on user_id = c_custkey), dim broadcast per micro-batch,
@@ -529,25 +538,44 @@ object StreamCheck {
       (System.nanoTime() - t0) / 1e9, extraOk = naiveDiffers)
   }
 
+  /** Inputs of the view ⋈ purchase interval join that `streamjoin`,
+    * `outerjoin` and the `bench` join family share: views and purchases
+    * of one events frame (stream or batch), and the join predicate —
+    * same user, purchase within 1 h after the view.
+    */
+  private def views(df: DataFrame): DataFrame =
+    df.where(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("ts").as("vts"),
+        col("event_id").as("view_id"))
+
+  private def buys(df: DataFrame): DataFrame =
+    df.where(col("event_type") === "purchase")
+      .select(col("user_id").as("b_user"), col("ts").as("bts"),
+        col("event_id").as("buy_id"), col("value").as("amount"))
+
+  private val viewBuyCond =
+    "v_user = b_user AND bts >= vts AND bts <= vts + interval 1 hour"
+
+  /** Watermarked stream-stream interval join: purchases within 1 h of a
+    * view by the same user, both sides file streams over the same events
+    * parquet. Batch twin = the identical join predicate in batch mode
+    * (AvailableNow delivers everything before the final watermark sweep,
+    * so no in-window match can be dropped). Each side buffers only rows
+    * younger than watermark + interval — the state bound that makes the
+    * join viable on unbounded streams.
+    */
   private def checkStreamJoin(spark: SparkSession, sfDir: String): Boolean = {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sc_ckpt").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft_sc_out").toString
     val t0 = System.nanoTime()
-    def views(df: DataFrame) = df.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("vts"),
-        col("event_id").as("view_id"))
-    def buys(df: DataFrame) = df.where(col("event_type") === "purchase")
-      .select(col("user_id").as("b_user"), col("ts").as("bts"),
-        col("event_id").as("buy_id"), col("value").as("amount"))
-    val cond = "v_user = b_user AND bts >= vts AND bts <= vts + interval 1 hour"
     val joined = views(eventsStream(spark, sfDir)).withWatermark("vts", "10 seconds")
       .join(buys(eventsStream(spark, sfDir)).withWatermark("bts", "10 seconds"),
-        expr(cond))
+        expr(viewBuyCond))
       .select(col("v_user").as("user_id"), col("view_id"), col("buy_id"),
         col("amount"))
     runToParquet(joined, ckpt, outDir)
     val ev = graft.model.Tables.events(spark, sfDir)
-    val batch = views(ev).join(buys(ev), expr(cond))
+    val batch = views(ev).join(buys(ev), expr(viewBuyCond))
       .select(col("v_user").as("user_id"), col("view_id"), col("buy_id"),
         col("amount"))
     parityLine("streaming_stream_join", sfDir, outDir, batch, "",
@@ -575,25 +603,18 @@ object StreamCheck {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sc_ckpt").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft_sc_out").toString
     val t0 = System.nanoTime()
-    def views(df: DataFrame) = df.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("vts"),
-        col("event_id").as("view_id"))
-    def buys(df: DataFrame) = df.where(col("event_type") === "purchase")
-      .select(col("user_id").as("b_user"), col("ts").as("bts"),
-        col("event_id").as("buy_id"), col("value").as("amount"))
-    val cond = "v_user = b_user AND bts >= vts AND bts <= vts + interval 1 hour"
     val joined = views(eventsStream(spark, sfDir)).withWatermark("vts", "10 seconds")
       .join(buys(eventsStream(spark, sfDir)).withWatermark("bts", "10 seconds"),
-        expr(cond), "left_outer")
+        expr(viewBuyCond), "left_outer")
       .select(col("v_user").as("user_id"), col("view_id"), col("vts"),
         col("buy_id"), col("amount"))
     runToParquet(joined, ckpt, outDir)
 
     val ev = graft.model.Tables.events(spark, sfDir)
-    val inner = views(ev).join(buys(ev), expr(cond))
+    val inner = views(ev).join(buys(ev), expr(viewBuyCond))
       .select(col("v_user").as("user_id"), col("view_id"), col("vts"),
         col("buy_id"), col("amount"))
-    val anti = views(ev).join(buys(ev), expr(cond), "left_anti")
+    val anti = views(ev).join(buys(ev), expr(viewBuyCond), "left_anti")
       .select(col("v_user").as("user_id"), col("view_id"), col("vts"))
     // the global watermark is the MIN of the two sides' watermarks
     // (each side: its own max event time − 10 s)
@@ -696,17 +717,10 @@ object StreamCheck {
     // the join's second leg opens its own stream: for the replay16
     // shape both sides pace at 1 file/trigger together.
     def joinPlanPaced(maxFiles: Option[Int])(df: DataFrame): DataFrame = {
-      def views(d: DataFrame) = d.where(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("vts"),
-          col("event_id").as("view_id"))
-      def buys(d: DataFrame) = d.where(col("event_type") === "purchase")
-        .select(col("user_id").as("b_user"), col("ts").as("bts"),
-          col("event_id").as("buy_id"), col("value").as("amount"))
       views(df).withWatermark("vts", "10 seconds")
         .join(buys(eventsStream0(spark, srcDir, maxFiles))
           .withWatermark("bts", "10 seconds"),
-          expr("v_user = b_user AND bts >= vts AND" +
-            " bts <= vts + interval 1 hour"))
+          expr(viewBuyCond))
         .select(col("v_user").as("user_id"), col("view_id"), col("buy_id"),
           col("amount"))
     }

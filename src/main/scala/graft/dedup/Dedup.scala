@@ -343,34 +343,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** SimHash near-dup pipeline over a text column. */
-  def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 7,
-                      maxBucketRows: Long = 65536L): DataFrame = {
-    // spread rationale as [[minhashNearDups]]
-    val signed = graft.Spread.spread(df).select(col(idCol),
-      simhash64(TextAnalysis.tokens(col(textCol))).as("__sim"))
-    simhashCandidatePairs(signed, idCol, "__sim", maxHamming, maxBucketRows)
-  }
-
-  /** Connected components over a near-duplicate pair graph — the cluster
-    * step of corpus dedup: a near-dup PAIR list (from MinHash/SimHash/
-    * embedding LSH) becomes disjoint clusters, and one canonical doc
-    * (min id) is kept per cluster. Runs alternating large-star/small-star
-    * pointer doubling ([[connectedComponentsWithRounds]]): O(log n)
-    * rounds independent of graph diameter, the 100 TB-safe choice.
-    * The driver sees only per-round fixpoint aggregates, never node
-    * data; rounds are checkpointed (reliable dir when the session has
-    * one configured, else localCheckpoint — see [[checkpoint]]).
-    *
-    * Output: (id, label) — `label` = min node id reachable from `id`,
-    * i.e. the cluster id. Only nodes that appear in `edges` are listed
-    * (isolated docs are their own trivial cluster).
-    */
-  def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 50): DataFrame =
-    connectedComponentsWithRounds(edges, aCol, bCol, maxIters)._1
-
   /** Shared reliable-dir-aware lineage truncation — see
     * [[graft.Checkpoints]]. LAZY here: the CC loop follows every
     * checkpoint with exactly one action (the fixpoint aggregate), which
@@ -381,16 +353,25 @@ object Dedup {
   private def checkpoint(df: DataFrame): DataFrame =
     graft.Checkpoints.checkpoint(df, eager = false)
 
-  /** [[connectedComponents]] plus the number of rounds it took — the
-    * O(log n) evidence for long-chain graphs (16 rounds on a 20,000-node
-    * chain, 21 on a 640,000-node one: BASELINE_HISTORY.md "round-7/8
-    * rows").
+  /** Connected components over a near-duplicate pair graph — the cluster
+    * step of corpus dedup: a near-dup PAIR list (from MinHash/SimHash/
+    * embedding LSH) becomes disjoint clusters, and one canonical doc
+    * (min id) is kept per cluster. The driver sees only per-round
+    * fixpoint aggregates, never node data.
+    *
+    * Output: (id, label) — `label` = min node id reachable from `id`,
+    * i.e. the cluster id. Only nodes that appear in `edges` are listed
+    * (isolated docs are their own trivial cluster).
     *
     * Alternating large-star/small-star (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC '14) — pointer-doubling
     * for edge lists: converges in O(log n) rounds regardless of graph
     * diameter, where min-label propagation needs diameter rounds (a
-    * 10⁶-node chain = 10⁶ rounds).
+    * 10⁶-node chain = 10⁶ rounds; measured 16 rounds on a 20,000-node
+    * chain, 21 on a 640,000-node one: BASELINE_HISTORY.md "round-7/8
+    * rows"). `maxIters` caps the rounds; a capped run's labels are the
+    * per-node minimum over the last round's edges, not yet the cluster
+    * minimum.
     *
     *  - large-star: for every node u, hook each STRICTLY LARGER neighbor
     *    v > u onto m = min(Γ(u) ∪ {u}) — emit (v, m);
@@ -399,9 +380,9 @@ object Dedup {
     *
     * Both steps preserve connectivity exactly (no approximation); at
     * fixpoint the edge set is a disjoint union of stars (v, root).
-    * Per round: two shuffle joins + two map-side-combined groupBy-mins
-    * over the EDGE list (never a node×neighbor matrix), one fixpoint
-    * check. Checkpointed each round ([[checkpoint]]: reliable dir when
+    * Per round: two window-min shuffles and one closing distinct over
+    * the EDGE list (never a node×neighbor matrix), one fixpoint check.
+    * Checkpointed each round ([[checkpoint]]: reliable dir when
     * configured, else local).
     *
     * Fixpoint test: the (count, wrapping-sum of xxhash64(src,dst))
@@ -409,9 +390,8 @@ object Dedup {
     * round; both steps are monotone (labels only decrease), so a stable
     * signature means a stable edge set.
     */
-  def connectedComponentsWithRounds(edges: DataFrame, aCol: String,
-                                    bCol: String, maxIters: Int = 50)
-      : (DataFrame, Int) = {
+  def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
+                          maxIters: Int = 50): DataFrame = {
     // canonical direction: (big, small); self-loops dropped
     def canon(e: DataFrame): DataFrame =
       e.where(col("src") =!= col("dst"))
@@ -471,10 +451,9 @@ object Dedup {
     }
     // fixpoint edge set is stars (v, root); roots get their self row.
     // groupBy-min is a safety net if maxIters truncated the loop.
-    val labels = e.select(col("src").as("id"), col("dst").as("label"))
+    e.select(col("src").as("id"), col("dst").as("label"))
       .union(e.select(col("dst").as("id"), col("dst").as("label")))
       .groupBy(col("id")).agg(min(col("label")).as("label"))
-    (labels, iters)
   }
 
   /** Brute-force exact n-gram Jaccard over all pairs of `df` — O(n²),
@@ -656,7 +635,8 @@ object Dedup {
     * side; both directions of a pair can appear.
     *
     * HYBRID execution (r15): two verify regimes, routed at PLAN time
-    * from the input's optimizer stats — zero extra jobs:
+    * from the input's optimizer stats — zero extra jobs (both timed at
+    * sf0.1 and sf1.0: BASELINE_HISTORY.md "Hybrid containment verify"):
     *
     *  - BROADCAST regime (estimated full-shingle-array payload —
     *    `stats.sizeInBytes × (shingleSize+1)` — fits
@@ -691,21 +671,27 @@ object Dedup {
     *    by d docs contributes d² rows, so a df-skewed corpus can blow
     *    this path up. Production entry is [[containmentPairsAuto]],
     *    which MEASURES Σ df² first and reroutes to the bounded sketch
-    *    screen when it exceeds `maxCandidatePairs`; call this method
+    *    screen when it exceeds [[DefaultMaxCandidatePairs]]; call this method
     *    directly only on inputs whose skew you know (probes, batch
     *    mode against a bounded query slice). EXACTNESS CAVEAT:
     *    containment is counted over `xxhash64` hashes, so a 64-bit
     *    cross-shingle collision INFLATES the score (it is not screened
     *    by an array verify) — within a doc pair that needs colliding
     *    shingles in the two docs' sets (probability ≤ |a|·|b|/2⁶⁴ per
-    *    pair); the broadcast regime and the capped path keep the
-    *    string-exact contract.
+    *    pair); the broadcast regime keeps the string-exact contract.
     *
-    * The `maxDf` cap (candidate generation only, probe/test surface)
-    * always takes the prefix+array-verify shape — the cap may only
-    * MISS pairs (those whose every shared shingle is over-cap), never
-    * mis-score survivors, so the verify needs full string sets; its
-    * broadcast hint follows the same size routing.
+    * `aFilter` restricts the CONTAINED (`id_a`) side to a subset of
+    * docs — the excerpt-detection regime: "which of these N quotes
+    * appear inside the corpus" runs the prefix side over just the
+    * query batch while the corpus side stays one linear posting pass.
+    * Output equals the unrestricted join filtered to `id_a` in the
+    * batch; at 100 TB this is THE way to run containment (the
+    * unrestricted all-pairs self-join squares the candidate volume —
+    * spill-bound long before CPU-bound). `aFilter` is resolved against
+    * the CALLER'S input frame (write it over `idCol` / any input
+    * column, e.g. `col("doc_id") % 2 === 1`) — it is evaluated before
+    * the internal rename, then carried as a boolean through to the
+    * prefix-side prune.
     *
     * 100 TB notes: the broadcast regime's candidate shuffle is
     * A-prefix × B-full postings on an 8-byte hash key, with the
@@ -715,28 +701,95 @@ object Dedup {
     * `aFilter` batch mode (A-side a query slice — candidate volume
     * batch × corpus, one linear posting pass over the corpus).
     */
-  /** `aFilter` restricts the CONTAINED (`id_a`) side to a subset of
-    * docs — the excerpt-detection regime: "which of these N quotes
-    * appear inside the corpus" runs the prefix side over just the
-    * query batch while the corpus side stays one linear posting pass.
-    * Output equals the unrestricted join filtered to `id_a` in the
-    * batch; at 100 TB this is THE way to run containment (the
-    * unrestricted all-pairs self-join squares the candidate volume —
-    * spill-bound long before CPU-bound).
-    *
-    * `aFilter` is resolved against the CALLER'S input frame (write it
-    * over `idCol` / any input column, e.g. `col("doc_id") % 2 === 1`)
-    * — it is evaluated before the internal rename, then carried as a
-    * boolean through to the prefix-side prune.
-    */
   def containmentPairsInverted(df: DataFrame, idCol: String, textCol: String,
                                shingleSize: Int, threshold: Double,
-                               maxDf: Long = 0L,
                                aFilter: Column = lit(true),
                                maxVerifyBroadcastBytes: Long =
-                                 DefaultVerifyBroadcastBytes): DataFrame =
-    containmentPairsInvertedWithPath(df, idCol, textCol, shingleSize,
-      threshold, maxDf, aFilter, maxVerifyBroadcastBytes)._1
+                                 DefaultVerifyBroadcastBytes): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"containment threshold must be in (0, 1], got $threshold")
+    // spread rationale as [[minhashNearDups]]; stats routing below
+    // reads the ORIGINAL df's plan stats, unaffected by the exchange
+    val withSh = graft.Spread.spread(df)
+      .select(col(idCol).cast("long").as("id"),
+      shingles(graft.text.TextAnalysis.tokens(col(textCol)), shingleSize)
+        .as("__sh"),
+      aFilter.as("__isA"))
+    val postings = withSh
+      .select(col("id"), col("__isA"), size(col("__sh")).as("__len"),
+        explode(col("__sh")).as("__s"))
+      .select(col("id"), col("__isA"), col("__len"),
+        xxhash64(col("__s")).as("h"))
+    // PLAN-time size routing (zero extra jobs): each input token lands
+    // in ≤ shingleSize shingles plus joiners, so input bytes ×
+    // (shingleSize+1) upper-estimates the materialized shingle-array
+    // payload the broadcast regime ships. Compression can make this an
+    // underestimate of in-memory size by a small constant — priced into
+    // the default's order-of-magnitude headroom.
+    val arrayBytesEst = BigDecimal(
+      df.queryExecution.optimizedPlan.stats.sizeInBytes) * (shingleSize + 1)
+    // COUNT regime (doc side too big to broadcast): see the method
+    // scaladoc. No arrays ever shuffle; join volume Σ df_A·df is the
+    // quantity [[containmentPairsAuto]] measures before landing here.
+    if (arrayBytesEst > BigDecimal(maxVerifyBroadcastBytes)) {
+      val a = postings.where(col("__isA"))
+        .select(col("h"), col("id").as("id_a"), col("__len").as("__la"))
+      val b = postings.select(col("h"), col("id").as("id_b"),
+        col("__len").as("__lb"))
+      return a.join(b, "h")
+        .where(col("id_a") =!= col("id_b") &&
+               col("__lb") >= col("__la") * lit(threshold) - lit(1e-6))
+        .groupBy(col("id_a"), col("__la"), col("id_b"))
+        .agg(count(lit(1)).as("__cnt"))
+        .withColumn("containment",
+          TextAnalysis.exactRound6Ratio(col("__cnt"), col("__la")))
+        .where(col("containment") >= threshold)
+        .select(col("id_a"), col("id_b"), col("containment"))
+    }
+    // BROADCAST regime: prefix+positional candidates + exact
+    // full-string-set array verify; the prefix pigeonhole keeps
+    // exactness.
+    val dfs = postings.groupBy(col("h")).agg(count(lit(1)).as("__df"))
+    // ONE shared per-doc (df, h) sort feeds both sides (identical
+    // subplan → exchange reuse): a takes the pigeonhole prefix, b
+    // takes every posting plus its position in the same global order.
+    // __isA is functionally dependent on id, so adding it to the
+    // grouping key changes no group.
+    val ord = postings.join(dfs, "h")
+      .groupBy(col("id"), col("__isA"), col("__len"))
+      .agg(sort_array(collect_list(struct(col("__df"), col("h")))).as("__ord"))
+    // the prefix side prunes BEFORE the explode, so a query-sized
+    // batch keeps the candidate join batch × corpus
+    val a = ord.where(col("__isA"))
+      .select(col("id"), col("__len"),
+        explode(slice(col("__ord"), lit(1),
+          (col("__len") - ceil(lit(threshold) * col("__len")) + 1)
+            .cast("int"))).as("__p"))
+      .select(col("__p.h").as("h"), col("id").as("id_a"),
+        col("__len").as("__la"))
+    val b = ord.select(col("id"), col("__len"),
+        posexplode(col("__ord")).as(Seq("__pb", "__p")))
+      .select(col("__p.h").as("h"), col("id").as("id_b"),
+        col("__len").as("__lb"), col("__pb"))
+    val cands = a.join(b, "h")
+      .where(col("id_a") =!= col("id_b"))
+      .where(col("__lb") - col("__pb") >=
+             col("__la") * lit(threshold) - lit(1e-6))
+      .select(col("id_a"), col("id_b")).distinct()
+    // explicit broadcast — the r13 sf1.0 speed came from an AQE
+    // auto-broadcast that stats drift could silently lose; pinning it
+    // here makes the fast regime a plan property
+    val vSh = broadcast(withSh.select(col("id"), col("__sh")))
+    cands
+      .join(vSh.select(col("id").as("id_a"), col("__sh").as("__sh_a")), "id_a")
+      .join(vSh.select(col("id").as("id_b"), col("__sh").as("__sh_b")), "id_b")
+      .withColumn("containment",
+        TextAnalysis.exactRound6Ratio(
+          size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("long"),
+          size(col("__sh_a")).cast("long")))
+      .where(col("containment") >= threshold)
+      .select(col("id_a"), col("id_b"), col("containment"))
+  }
 
   /** Estimated-array-payload budget under which the containment verify
     * broadcasts the doc side (id → full shingle array). 128 MB of
@@ -765,6 +818,13 @@ object Dedup {
   val DefaultMaxPrefixPostings: Long = 2000000000L
   val DefaultMaxCandidatePairs: Long = 2000000000L
 
+  /** How far below `threshold` [[containmentPairsAuto]]'s sketch screen
+    * admits candidates (`minEst = threshold − SketchMargin`): the
+    * hypergeometric miss tail is ~exp(−2·k·margin²) per pair, ~8.7e-3
+    * at k=64.
+    */
+  private val SketchMargin: Double = 0.15
+
   /** Decision inputs + outcome of [[containmentPairsAuto]]'s measured
     * gate. Produced by [[containmentGate]] — the SAME code the
     * production entry runs — so a printed route (the route tables in
@@ -780,121 +840,7 @@ object Dedup {
       // handed to [[containmentSketchPairs]] so the sketch path's
       // hot-shingle cap reuses the measurement instead of re-running
       // the h-keyed aggregation at construction time (r17 ADVICE)
-      hist: Option[Array[(Long, Long)]] = None) {
-    def route(countVerifyFastPairs: Long = CountVerifyFastPairs): String =
-      if (usesSketch) "sketch-screen"
-      else if (df2.exists(_ <= countVerifyFastPairs)) "count"
-      else if (df2.isDefined) "broadcast-or-count-by-size"
-      else "plan-time-exact (size routing decides verify)"
-  }
-
-  /** [[containmentPairsInverted]] plus which verify regime the size
-    * routing chose (`true` = count-verify) — the observability hook
-    * the routing spec pins against (both regimes timed at sf0.1 and
-    * sf1.0: BASELINE_HISTORY.md "Hybrid containment verify").
-    */
-  private[graft] def containmentPairsInvertedWithPath(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, threshold: Double,
-      maxDf: Long = 0L, aFilter: Column = lit(true),
-      maxVerifyBroadcastBytes: Long = DefaultVerifyBroadcastBytes)
-      : (DataFrame, Boolean) = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"containment threshold must be in (0, 1], got $threshold")
-    // spread rationale as [[minhashNearDups]]; stats routing below
-    // reads the ORIGINAL df's plan stats, unaffected by the exchange
-    val withSh = graft.Spread.spread(df)
-      .select(col(idCol).cast("long").as("id"),
-      shingles(graft.text.TextAnalysis.tokens(col(textCol)), shingleSize)
-        .as("__sh"),
-      aFilter.as("__isA"))
-    val postings = withSh
-      .select(col("id"), col("__isA"), size(col("__sh")).as("__len"),
-        explode(col("__sh")).as("__s"))
-      .select(col("id"), col("__isA"), col("__len"),
-        xxhash64(col("__s")).as("h"))
-    // PLAN-time size routing (zero extra jobs): each input token lands
-    // in ≤ shingleSize shingles plus joiners, so input bytes ×
-    // (shingleSize+1) upper-estimates the materialized shingle-array
-    // payload the broadcast regime ships. Compression can make this an
-    // underestimate of in-memory size by a small constant — priced into
-    // the default's order-of-magnitude headroom.
-    val arrayBytesEst = BigDecimal(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes) * (shingleSize + 1)
-    val broadcastFits = arrayBytesEst <= BigDecimal(maxVerifyBroadcastBytes)
-    // COUNT regime (uncapped + doc side too big to broadcast): see the
-    // method scaladoc. No arrays ever shuffle; join volume Σ df_A·df is
-    // the quantity [[containmentPairsAuto]] measures before landing here.
-    if (maxDf <= 0 && !broadcastFits) {
-      val a = postings.where(col("__isA"))
-        .select(col("h"), col("id").as("id_a"), col("__len").as("__la"))
-      val b = postings.select(col("h"), col("id").as("id_b"),
-        col("__len").as("__lb"))
-      return (a.join(b, "h")
-        .where(col("id_a") =!= col("id_b") &&
-               col("__lb") >= col("__la") * lit(threshold) - lit(1e-6))
-        .groupBy(col("id_a"), col("__la"), col("id_b"))
-        .agg(count(lit(1)).as("__cnt"))
-        .withColumn("containment",
-          TextAnalysis.exactRound6Ratio(col("__cnt"), col("__la")))
-        .where(col("containment") >= threshold)
-        .select(col("id_a"), col("id_b"), col("containment")), true)
-    }
-    // BROADCAST regime (uncapped + fits) and the CAPPED path (maxDf >
-    // 0): prefix+positional candidates + exact full-string-set array
-    // verify. The cap must MISS pairs, never mis-score survivors, so
-    // candidates come from capped postings but the verify reads the
-    // FULL shingle sets; uncapped, `capped = postings` and the prefix
-    // pigeonhole keeps exactness.
-    val capped = if (maxDf > 0) {
-      val dfs0 = postings.groupBy(col("h")).agg(count(lit(1)).as("__df"))
-      postings.join(dfs0.where(col("__df") <= maxDf), "h")
-        .select(col("id"), col("__isA"), col("__len"), col("h"))
-    } else postings
-    val dfs = capped.groupBy(col("h")).agg(count(lit(1)).as("__df"))
-    // ONE shared per-doc (df, h) sort feeds both sides (identical
-    // subplan → exchange reuse): a takes the pigeonhole prefix, b
-    // takes every posting plus its position in the same global order.
-    // __isA is functionally dependent on id, so adding it to the
-    // grouping key changes no group.
-    val ord = capped.join(dfs, "h")
-      .groupBy(col("id"), col("__isA"), col("__len"))
-      .agg(sort_array(collect_list(struct(col("__df"), col("h")))).as("__ord"))
-    // the prefix side prunes BEFORE the explode, so a query-sized
-    // batch keeps the candidate join batch × corpus
-    val a = ord.where(col("__isA"))
-      .select(col("id"), col("__len"),
-        explode(slice(col("__ord"), lit(1),
-          (col("__len") - ceil(lit(threshold) * col("__len")) + 1)
-            .cast("int"))).as("__p"))
-      .select(col("__p.h").as("h"), col("id").as("id_a"),
-        col("__len").as("__la"))
-    val b = ord.select(col("id"), col("__len"),
-        posexplode(col("__ord")).as(Seq("__pb", "__p")))
-      .select(col("__p.h").as("h"), col("id").as("id_b"),
-        col("__len").as("__lb"), col("__pb"))
-    val cands = a.join(b, "h")
-      .where(col("id_a") =!= col("id_b"))
-      .where(col("__lb") - col("__pb") >=
-             col("__la") * lit(threshold) - lit(1e-6))
-      .select(col("id_a"), col("id_b")).distinct()
-    // explicit broadcast when the routing said the arrays fit — the
-    // r13 sf1.0 speed came from an AQE auto-broadcast that stats
-    // drift could silently lose; pinning it here makes the fast
-    // regime a plan property. The capped path above any broadcastable
-    // size keeps the shuffled join (cap-bounded candidate volume).
-    val docSide = withSh.select(col("id"), col("__sh"))
-    val vSh = if (broadcastFits) broadcast(docSide) else docSide
-    (cands
-      .join(vSh.select(col("id").as("id_a"), col("__sh").as("__sh_a")), "id_a")
-      .join(vSh.select(col("id").as("id_b"), col("__sh").as("__sh_b")), "id_b")
-      .withColumn("containment",
-        TextAnalysis.exactRound6Ratio(
-          size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("long"),
-          size(col("__sh_a")).cast("long")))
-      .where(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"), col("containment")), false)
-  }
+      hist: Option[Array[(Long, Long)]] = None)
 
   /** Containment pairs with an AUTOMATIC all-pairs escape — the entry
     * point a 100 TB pipeline should call (VERDICT r12: make the escape
@@ -924,44 +870,82 @@ object Dedup {
     *  3. Posting COUNT doesn't bound the count-verify regime's JOIN
     *     volume — that is Σ_h df(h)² (posting PAIRS), which one hot
     *     shingle can blow up at tiny posting counts — so one h-keyed
-    *     aggregation MEASURES Σ df² against `maxCandidatePairs`; exact
-    *     path iff it fits too. Short-circuit: Σ df² ≤ (Σ df)², so when
-    *     the squared posting total (the level-2 measurement if it ran,
-    *     else the level-1 plan bound) already fits, the gate settles
-    *     WITHOUT this scan — tiny inputs keep the plan-time-only
+    *     aggregation MEASURES Σ df² against [[DefaultMaxCandidatePairs]];
+    *     exact path iff it fits too. Short-circuit: Σ df² ≤ (Σ df)², so
+    *     when the squared posting total (the level-2 measurement if it
+    *     ran, else the level-1 plan bound) already fits, the gate
+    *     settles WITHOUT this scan — tiny inputs keep the plan-time-only
     *     decision and its zero extra jobs. When the scan DID run, its
     *     value also selects the exact path's verify regime
     *     (≤ [[CountVerifyFastPairs]] → count-verify, measured-cheap;
     *     above → the broadcast array-verify via the size routing).
     *
     * Above the gate the plan is screen → exact verify: sketch
-    * candidates at `minEst = threshold − sketchMargin`, then re-score
-    * full shingle sets and keep `containment ≥ threshold` — output
-    * schema and rounding identical to the exact path. Misses are pairs
-    * whose bottom-`sketchK` estimate fell below `threshold −
-    * sketchMargin`: impossible when a doc has ≤ `sketchK` distinct
-    * shingles (the estimate is then ≥ the true containment), else a
-    * hypergeometric tail ~exp(−2·k·margin²) per pair (~8.7e-3 at
-    * k=64, margin=0.15), plus ≤ (#capped-hot shared shingles)/k of
-    * estimator bias from the sketch join's hot-shingle cap (r17 —
-    * see [[containmentSketchPairs]]; the margin absorbs it) — the
-    * documented recall trade for candidate
+    * candidates at `minEst = threshold − SketchMargin` (0.15), then
+    * re-score full shingle sets and keep `containment ≥ threshold` —
+    * output schema and rounding identical to the exact path. Misses are
+    * pairs whose bottom-`sketchK` estimate fell below that `minEst`:
+    * impossible when a doc has ≤ `sketchK` distinct shingles (the
+    * estimate is then ≥ the true containment), else a hypergeometric
+    * tail ~exp(−2·k·margin²) per pair (~8.7e-3 at k=64), plus ≤
+    * (#capped-hot shared shingles)/k of estimator bias from the sketch
+    * join's hot-shingle cap (r17 — see [[containmentSketchPairs]]; the
+    * margin absorbs it) — the documented recall trade for candidate
     * volume that scales with OUTPUT pairs instead of corpus².
     * Production defaults leave the brute-force form to tests and the
     * bench canary (`dedup_containment` registers the auto form; the
-    * gate spec pins path parity on a forced-low threshold).
+    * gate spec pins path parity on a forced-low threshold; the route
+    * executed at sf100: BASELINE.md "sf100 containment EXECUTED leg").
     */
   def containmentPairsAuto(df: DataFrame, idCol: String, textCol: String,
                            shingleSize: Int, threshold: Double,
-                           maxDf: Long = 0L,
                            maxPrefixPostings: Long = DefaultMaxPrefixPostings,
                            sketchK: Int = 64,
-                           sketchMargin: Double = 0.15,
-                           maxCandidatePairs: Long = DefaultMaxCandidatePairs,
-                           aFilter: Column = lit(true)): DataFrame =
-    containmentPairsAutoWithPath(df, idCol, textCol, shingleSize,
-      threshold, maxDf, maxPrefixPostings, sketchK, sketchMargin,
-      maxCandidatePairs, aFilter)._1
+                           aFilter: Column = lit(true)): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0 && sketchK > 0)
+    val gate = containmentGate(df, textCol, shingleSize, threshold,
+      maxPrefixPostings)
+    if (!gate.usesSketch) {
+      // the level-3 measurement, when it ran, also SELECTS the verify
+      // regime: Σ df² IS the count-verify join's row volume, so under
+      // `CountVerifyFastPairs` the count path is measured-cheap — take
+      // it (array-free, and faster than the prefix machinery at bench
+      // scales: sf0.1 3.3 s vs 4.9 s). Above it, prefer the broadcast
+      // array-verify via the size routing (sf1.0: 76 s vs the count
+      // path's 316 s — the r14 regression this hybrid resolves), which
+      // itself falls back to count-verify when the arrays can't
+      // broadcast. Unmeasured (short-circuited) inputs are tiny — the
+      // size routing alone decides, sub-second either way.
+      val budget =
+        if (gate.df2.exists(_ <= CountVerifyFastPairs)) 0L
+        else DefaultVerifyBroadcastBytes
+      containmentPairsInverted(df, idCol, textCol, shingleSize,
+        threshold, aFilter, maxVerifyBroadcastBytes = budget)
+    }
+    else {
+      // batch (aFilter) form on the sketch path: restrict the CONTAINED
+      // side before the exact re-verify — a semi-join on the filtered
+      // id set, skipped entirely for the trivially-true default
+      val trivialA = org.apache.spark.sql.graft.bridge.expression(aFilter)
+        .semanticEquals(
+          org.apache.spark.sql.graft.bridge.expression(lit(true)))
+      val screened0 = containmentSketchPairs(df, idCol, textCol,
+          shingleSize, sketchK, math.max(0.0, threshold - SketchMargin),
+          maxJoinPairs = DefaultMaxCandidatePairs,
+          precomputedHist = gate.hist)
+        .select(col("id_a"), col("id_b"))
+      val screened = if (trivialA) screened0 else screened0.join(
+        df.where(aFilter).select(col(idCol).cast("long").as("id_a")),
+        Seq("id_a"), "left_semi")
+      val withSh = df.select(col(idCol).cast("long").as("id"),
+        shingles(graft.text.TextAnalysis.tokens(col(textCol)), shingleSize)
+          .as("__sh"))
+      withContainment(screened, withSh, "id", "__sh")
+        .where(col("exact_containment") >= threshold)
+        .select(col("id_a"), col("id_b"),
+          col("exact_containment").as("containment"))
+    }
+  }
 
   /** The measured gate behind [[containmentPairsAuto]], factored out so
     * diagnostics run the PRODUCTION decision code (no mirror to drift):
@@ -1038,65 +1022,6 @@ object Dedup {
       })
     ContainmentGate(planPostings, planBound, measuredTotal, postingsFit,
       df2Opt, usesSketch, histOpt)
-  }
-
-  /** [[containmentPairsAuto]] plus which path the gate chose
-    * (`true` = sketch screen) — the observability hook the gate spec
-    * pins against (the route executed at sf100: BASELINE.md "sf100
-    * containment EXECUTED leg").
-    */
-  private[graft] def containmentPairsAutoWithPath(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, threshold: Double, maxDf: Long,
-      maxPrefixPostings: Long, sketchK: Int, sketchMargin: Double,
-      maxCandidatePairs: Long = DefaultMaxCandidatePairs,
-      aFilter: Column = lit(true))
-      : (DataFrame, Boolean) = {
-    require(threshold > 0.0 && threshold <= 1.0 && sketchK > 0)
-    val gate = containmentGate(df, textCol, shingleSize, threshold,
-      maxPrefixPostings, maxCandidatePairs)
-    val usesSketch = gate.usesSketch
-    val df2Opt = gate.df2
-    if (!usesSketch) {
-      // the level-3 measurement, when it ran, also SELECTS the verify
-      // regime: Σ df² IS the count-verify join's row volume, so under
-      // `CountVerifyFastPairs` the count path is measured-cheap — take
-      // it (array-free, and faster than the prefix machinery at bench
-      // scales: sf0.1 3.3 s vs 4.9 s). Above it, prefer the broadcast
-      // array-verify via the size routing (sf1.0: 76 s vs the count
-      // path's 316 s — the r14 regression this hybrid resolves), which
-      // itself falls back to count-verify when the arrays can't
-      // broadcast. Unmeasured (short-circuited) inputs are tiny — the
-      // size routing alone decides, sub-second either way.
-      val budget =
-        if (df2Opt.exists(_ <= CountVerifyFastPairs)) 0L
-        else DefaultVerifyBroadcastBytes
-      (containmentPairsInverted(df, idCol, textCol, shingleSize,
-        threshold, maxDf, aFilter, maxVerifyBroadcastBytes = budget), false)
-    }
-    else {
-      // batch (aFilter) form on the sketch path: restrict the CONTAINED
-      // side before the exact re-verify — a semi-join on the filtered
-      // id set, skipped entirely for the trivially-true default
-      val trivialA = org.apache.spark.sql.graft.bridge.expression(aFilter)
-        .semanticEquals(
-          org.apache.spark.sql.graft.bridge.expression(lit(true)))
-      val screened0 = containmentSketchPairs(df, idCol, textCol,
-          shingleSize, sketchK, math.max(0.0, threshold - sketchMargin),
-          maxJoinPairs = maxCandidatePairs,
-          precomputedHist = gate.hist)
-        .select(col("id_a"), col("id_b"))
-      val screened = if (trivialA) screened0 else screened0.join(
-        df.where(aFilter).select(col(idCol).cast("long").as("id_a")),
-        Seq("id_a"), "left_semi")
-      val withSh = df.select(col(idCol).cast("long").as("id"),
-        shingles(graft.text.TextAnalysis.tokens(col(textCol)), shingleSize)
-          .as("__sh"))
-      (withContainment(screened, withSh, "id", "__sh")
-        .where(col("exact_containment") >= threshold)
-        .select(col("id_a"), col("id_b"),
-          col("exact_containment").as("containment")), true)
-    }
   }
 
   /** APPROXIMATE all-pairs containment screen via a bottom-`k` sketch —

@@ -120,19 +120,6 @@ object Aggregation {
         stageReached.cast("int").as("stage_reached"): _*)
   }
 
-  /** Cohort-retention matrix — the product-analytics staple: keys
-    * cohorted by the UTC day of their first event, then for each
-    * (cohort day, day offset) the number of distinct keys active that
-    * many days after joining. Days are integer days-since-epoch, so
-    * every output cell is an exact integer count.
-    *
-    * Scale shape: one hash agg keyed on the key for first-event days,
-    * joined back ON THE SAME KEY (the exchange layout is reused — the
-    * ngram-novelty pattern), then a (key, cohort, day) distinct and
-    * the final (cohort, offset) count, both partial-aggregable. No
-    * window, no per-cohort scan; the matrix is |cohorts| × |offsets|
-    * rows.
-    */
   /** Robust per-group outlier gate — the Iglewicz–Hoaglin modified
     * z-score: `0.6745·|x − median| / MAD`, outlier when > `zThresh`
     * (their recommended 3.5). Median/MAD instead of mean/stddev
@@ -491,6 +478,19 @@ object Aggregation {
     ranked.select(col(keyCol), bucket.cast("int").as("__ntile"))
   }
 
+  /** Cohort-retention matrix — the product-analytics staple: keys
+    * cohorted by the UTC day of their first event, then for each
+    * (cohort day, day offset) the number of distinct keys active that
+    * many days after joining. Days are integer days-since-epoch, so
+    * every output cell is an exact integer count.
+    *
+    * Scale shape: one hash agg keyed on the key for first-event days,
+    * joined back ON THE SAME KEY (the exchange layout is reused — the
+    * ngram-novelty pattern), then a (key, cohort, day) distinct and
+    * the final (cohort, offset) count, both partial-aggregable. No
+    * window, no per-cohort scan; the matrix is |cohorts| × |offsets|
+    * rows.
+    */
   def cohortRetention(df: DataFrame, keyCol: String,
                       tsCol: String): DataFrame = {
     val e = df.select(col(keyCol),

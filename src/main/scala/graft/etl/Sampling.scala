@@ -78,77 +78,34 @@ object Sampling {
       .select(col(strataCol), col(idCol), col("n_toks"))
   }
 
-  /** [[tokenBudgetMix]] at 100 TB — the same two-pass distributed
-    * prefix sum as `TextAnalysis.packSequencesScalable`, over the
-    * (stratum, md5-hash, id) order: pass 1 range-partitions so one
-    * stratum spans many partitions (each locally sorted) and computes
-    * per-partition local exclusive sums; pass 2 broadcasts the tiny
-    * per-(partition, stratum) subtotals back as offsets. No stratum is
-    * ever sorted on a single task — the window form's failure mode
-    * when a stratum is 10 TB. Bit-equal to the window form
-    * (SamplingSpec).
+  /** [[tokenBudgetMix]] at 100 TB — the same selection through the
+    * distributed two-pass prefix sum
+    * ([[graft.text.TextAnalysis.exclusivePrefixScalable]]) over the
+    * (stratum, md5-hash, id) order, so no stratum is ever sorted on a
+    * single task — the window form's failure mode when a stratum is
+    * 10 TB. Bit-equal to the window form (SamplingSpec).
     */
   def tokenBudgetMixScalable(df: DataFrame, idCol: String, textCol: String,
                              strataCol: String, budgetTokens: Long,
                              numParts: Int = 32): DataFrame =
-    exclusivePrefixByStratum(df, idCol, textCol, strataCol, numParts)
+    tokenPrefix(df, idCol, textCol, strataCol, numParts)
       .where(col("__before") < budgetTokens)
       .select(col(strataCol), col(idCol), col("n_toks"))
 
-  /** Shared core of the scalable mixers: (stratum, id, n_toks, __before)
-    * where `__before` is the stratum's EXCLUSIVE prefix token sum in the
-    * deterministic (md5-of-id, id) order — the two-pass distributed
-    * prefix sum (range-partition + local sums, then broadcast the tiny
-    * per-(partition, stratum) subtotals back as offsets). No stratum is
-    * ever sorted on a single task. Rows with a null token count (null
-    * text) are excluded up front — they contribute nothing to any
-    * prefix, and skipping them here keeps the window twin, this form,
-    * and the DuckDB oracle agreeing on dirty input instead of one of
-    * them throwing.
+  /** Shared input of the scalable mixers: (stratum, id, n_toks, __h,
+    * __before), `__before` the stratum's exclusive prefix token sum in
+    * the deterministic (md5-of-id, id) order. Rows with a null token
+    * count (null text) are dropped first: they are never selected, and
+    * the window twin and the DuckDB oracle drop them too.
     */
-  private def exclusivePrefixByStratum(df: DataFrame, idCol: String,
-                                       textCol: String, strataCol: String,
-                                       numParts: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = df.sparkSession
-    val toks = df.select(col(strataCol), col(idCol),
-        graft.text.TextAnalysis.tokenCount(col(textCol)).as("n_toks"),
-        md5(col(idCol).cast("string")).as("__h"))
-      .where(col("n_toks").isNotNull)
-      .repartitionByRange(numParts, col(strataCol), col("__h"), col(idCol))
-      .sortWithinPartitions(col(strataCol), col("__h"), col(idCol))
-    val withPid = toks.withColumn("__pid", spark_partition_id())
-    val schema = StructType(withPid.schema.fields :+
-      StructField("__local_excl", LongType, nullable = false))
-    // field positions resolved by NAME from the schema — immune to
-    // upstream select-order edits
-    val iStrat = withPid.schema.fieldIndex(strataCol)
-    val iToks = withPid.schema.fieldIndex("n_toks")
-    val local = spark.createDataFrame(
-      withPid.rdd.mapPartitions { it =>
-        var stratum: Any = null
-        var running = 0L
-        it.map { r =>
-          if (r.get(iStrat) != stratum) { stratum = r.get(iStrat); running = 0L }
-          val excl = running
-          running += r.getInt(iToks)
-          Row.fromSeq(r.toSeq :+ excl)
-        }
-      }, schema)
-    val subtotal = local.groupBy(col("__pid"), col(strataCol))
-      .agg(sum(col("n_toks")).as("__part_total"))
-    val offsetW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(strataCol)).orderBy(col("__pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = subtotal
-      .withColumn("__offset",
-        coalesce(sum(col("__part_total")).over(offsetW), lit(0L)))
-      .select(col("__pid"), col(strataCol), col("__offset"))
-    local.join(broadcast(offsets), Seq("__pid", strataCol))
-      .select(col(strataCol), col(idCol), col("n_toks"),
-        (col("__local_excl") + col("__offset")).as("__before"))
-  }
+  private def tokenPrefix(df: DataFrame, idCol: String, textCol: String,
+                          strataCol: String, numParts: Int): DataFrame =
+    graft.text.TextAnalysis.exclusivePrefixScalable(
+      df.select(col(strataCol), col(idCol),
+          graft.text.TextAnalysis.tokenCount(col(textCol)).as("n_toks"),
+          md5(col(idCol).cast("string")).as("__h"))
+        .where(col("n_toks").isNotNull),
+      strataCol, Seq(col("__h"), col(idCol)), "n_toks", numParts)
 
   /** Epoch-aware mix EXECUTION — the up-sampling half of corpus mixing
     * that [[tokenBudgetMix]] (selection up to a budget) doesn't do:
@@ -180,7 +137,7 @@ object Sampling {
                strataCol: String, targets: Map[String, Long],
                maxEpochs: Int, numParts: Int = 32): DataFrame = {
     require(maxEpochs >= 1, "need maxEpochs >= 1")
-    val prefix = exclusivePrefixByStratum(df, idCol, textCol, strataCol, numParts)
+    val prefix = tokenPrefix(df, idCol, textCol, strataCol, numParts)
     val avail = prefix.groupBy(col(strataCol))
       .agg(sum(col("n_toks")).as("__avail"))
     val target = targets.foldLeft(lit(0L)) { case (acc, (k, v)) =>
@@ -205,19 +162,6 @@ object Sampling {
       .select(col(strataCol), col(idCol), col("n_toks"), col("n_repeats"))
   }
 
-  /** Leak-free train/valid/test split: the split is a deterministic
-    * hash of the GROUP key (domain, author, conversation — whatever
-    * unit leaks), never the row, so near-duplicate documents from one
-    * domain can't straddle train and test and inflate eval. Buckets
-    * come from [[hashBucket]] — partition-, cluster-, and
-    * rerun-invariant, and re-derivable by any engine from the same md5
-    * arithmetic. `trainPct`/`validPct` are percentages; the remainder
-    * is test. Emits `split_bucket` so audits can re-check the decision.
-    *
-    * Scale shape: map-only expression over the scan — the group
-    * assignment needs NO join against a group table because the hash
-    * is stateless in the group key.
-    */
   /** Exact-k uniform sample PER KEY — the distributed "reservoir":
     * rank rows within each key by the md5 draw of `id:salt` and keep
     * the k smallest. Same distribution as classic reservoir sampling
@@ -274,6 +218,19 @@ object Sampling {
       Seq("priority_micro" -> true, idCol -> false), k)
   }
 
+  /** Leak-free train/valid/test split: the split is a deterministic
+    * hash of the GROUP key (domain, author, conversation — whatever
+    * unit leaks), never the row, so near-duplicate documents from one
+    * domain can't straddle train and test and inflate eval. Buckets
+    * come from [[hashBucket]] — partition-, cluster-, and
+    * rerun-invariant, and re-derivable by any engine from the same md5
+    * arithmetic. `trainPct`/`validPct` are percentages; the remainder
+    * is test. Emits `split_bucket` so audits can re-check the decision.
+    *
+    * Scale shape: map-only expression over the scan — the group
+    * assignment needs NO join against a group table because the hash
+    * is stateless in the group key.
+    */
   def leakFreeSplit(df: DataFrame, groupCol: String, salt: String,
                     trainPct: Int = 80, validPct: Int = 10): DataFrame = {
     require(trainPct > 0 && validPct >= 0 && trainPct + validPct < 100,

@@ -93,7 +93,7 @@ object MultimodalQueries {
 
     // payload near-dup (perceptual-hash style): block-hash histogram
     // features through the decode boundary, then the MEASURED-GATE
-    // near-dup operator (cosineNearDupsAutoWithPath) — never all-pairs.
+    // near-dup operator (cosineNearDupsAuto) — never all-pairs.
     // Text-as-bytes payloads (asMedia) carry the corpus' planted
     // near-dups; features and the candidate pair list are pinned and
     // declared (the JVM decode boundary + hash/centroid-dependent

@@ -15,10 +15,11 @@ import graft.functions.VectorExprs
   *    correctness baseline. Queries are broadcast; the corpus streams;
   *    per-query rank via window. Cost O(|Q|·|corpus|) — fine when |Q| is
   *    small, which is the only honest use of brute force at 100 TB.
-  *  - [[srpSignature]] / [[lshTopK]]: signed-random-projection LSH
-  *    (Charikar '02): deterministic fixed-seed hyperplanes, bucket join
-  *    on signature bands, exact re-rank *within* candidates. The scale
-  *    path: shuffle ∝ bucket sizes, never |Q|×|corpus|.
+  *  - [[srpSignature]] / [[lshCandidates]]: signed-random-projection
+  *    LSH (Charikar '02): deterministic fixed-seed hyperplanes, bucket
+  *    join on signature bands, exact re-rank *within* candidates
+  *    ([[rerankTopK]]). The scale path: shuffle ∝ bucket sizes, never
+  *    |Q|×|corpus|.
   *
   * Norms are computed once per vector (a Project before the join), never
   * per pair.
@@ -89,7 +90,7 @@ object Similarity {
     *
     * Scale shape: broadcast anchors × corpus scan, like
     * [[bruteForceTopK]] — the exact baseline. At corpus scale, feed
-    * the scored candidates from an ANN shortlist ([[ivfTopK]] /
+    * the scored candidates from an ANN shortlist ([[ivfCandidates]] /
     * [[pqShortlistRerank]]) instead of the full scan; the
     * threshold-split + margin logic is unchanged.
     */
@@ -204,21 +205,19 @@ object Similarity {
     (bits, bands)
   }
 
-  /** LSH-bucketed approximate top-k: queries and corpus are signed with
-    * the same hyperplanes; candidates = corpus vectors sharing ≥1 band
-    * with the query (queries multi-probe Hamming-1 buckets); exact cosine
-    * re-rank within candidates. Defaults 128 planes = 16 bands × 8 bits:
-    * band-key space 256, so each band join touches ~n/256-row buckets —
-    * candidate volume Θ(n·bands·(1+bits)/2^bits), never Θ(n²). Size via
-    * [[srpPlan]] for other corpus scales. Recall measured against
-    * [[bruteForceTopK]] in the test suite.
-    */
-  /** Candidate stage of [[lshTopK]]: (query_id, neighbor_id) pairs
-    * sharing ≥1 band bucket (queries multi-probe Hamming-1). Only ids
+  /** Candidate stage of LSH-bucketed approximate top-k: queries and
+    * corpus are signed with the same hyperplanes; candidates =
+    * (query_id, neighbor_id) pairs sharing ≥1 band bucket (queries
+    * multi-probe Hamming-1 buckets). Defaults 128 planes = 16 bands ×
+    * 8 bits: band-key space 256, so each band join touches ~n/256-row
+    * buckets — candidate volume Θ(n·bands·(1+bits)/2^bits), never
+    * Θ(n²). Size via [[srpPlan]] for other corpus scales. Only ids
     * travel through the band join and the distinct — the shuffle moves
-    * (long, long) pairs, not 64-float arrays. Exposed separately so the
-    * pair list can be materialized and the exact re-rank verified
-    * externally ([[rerankTopK]]).
+    * (long, long) pairs, not 64-float arrays. The top-k is
+    * `rerankTopK(lshCandidates(…), …)` — the exact cosine re-rank
+    * within candidates, so the pair list can be materialized and the
+    * re-rank verified externally. Recall measured against
+    * [[bruteForceTopK]] in the test suite.
     */
   def lshCandidates(queries: DataFrame, corpus: DataFrame, idCol: String,
                     vecCol: String, numPlanes: Int = 128, bands: Int = 16,
@@ -288,13 +287,6 @@ object Similarity {
       .agg(count(lit(1)).cast("int").as("k"),
         sum(coalesce(col("__hit"), lit(0))).cast("int").as("n_hit"))
       .withColumn("recall", round(col("n_hit") / col("k"), 6))
-
-  def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              vecCol: String, k: Int, numPlanes: Int = 128, bands: Int = 16,
-              seed: Long = 42L): DataFrame =
-    rerankTopK(
-      lshCandidates(queries, corpus, idCol, vecCol, numPlanes, bands, seed),
-      queries, corpus, idCol, vecCol, k)
 
   /** Embedding near-duplicate pairs: corpus self-match with cosine ≥
     * threshold, via SRP banding (no quadratic pass). Wide 8-bit band
@@ -390,7 +382,7 @@ object Similarity {
   def cosineNearDupsFromCandidates(cands: DataFrame, corpus: DataFrame,
                                    idCol: String, vecCol: String,
                                    threshold: Double): DataFrame = {
-    // coalesce wrap: see [[cellBoundedNearDupsN]] — the score
+    // coalesce wrap: see [[cellBoundedNearDups]] — the score
     // predicate's inferred isnotnull re-evaluated sqrt(dot) per corpus
     // row on both join sides (plan-verified); null-vector pairs still
     // die on the score comparison itself
@@ -406,11 +398,11 @@ object Similarity {
   }
 
   /** Measured background-similarity statistics of an embedding corpus,
-    * from a deterministic sample: the `sampleN` hash-rank-smallest rows
+    * from a deterministic sample: the 256 hash-rank-smallest rows
     * (TakeOrdered — one linear scan with per-partition heaps, no full
     * sort; ties broken by id, so the sample is layout- and
     * run-independent) self-paired via a broadcast cross join —
-    * `sampleN(sampleN−1)/2` cosines, constant work at any corpus size.
+    * 256·255/2 cosines, constant work at any corpus size.
     *
     * `mean` sizes banding ([[srpPlan]]'s `bgSim` — the r14 sf10 lesson:
     * trusting a caller-supplied default underestimates candidate volume
@@ -424,12 +416,12 @@ object Similarity {
                               fracAtOrAbove: Double, nPairs: Long)
 
   def measuredBgSim(corpus: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double, sampleN: Int = 256): BgSimStats = {
+                    threshold: Double): BgSimStats = {
     val sample = corpus
       .select(col(idCol).as("__id"), col(vecCol).as("__v"),
         l2Norm(col(vecCol)).as("__n"))
       .orderBy(xxhash64(col("__id")), col("__id"))
-      .limit(sampleN)
+      .limit(256)
     val a = sample.select(col("__id").as("__ia"), col("__v").as("__va"),
       col("__n").as("__na"))
     val b = sample.select(col("__id").as("__ib"), col("__v").as("__vb"),
@@ -476,17 +468,12 @@ object Similarity {
     *    (bounded n only)? Use [[cosineNearDups]] banding with the
     *    measured bg, or brute force below ~10⁵ rows.
     */
-  def cellBoundedNearDups(corpus: DataFrame, idCol: String, vecCol: String,
-                          threshold: Double,
-                          targetCellRows: Int = 1024): DataFrame =
-    cellBoundedNearDupsN(corpus, idCol, vecCol, threshold, targetCellRows,
-      corpus.count())
-
-  private def cellBoundedNearDupsN(corpus: DataFrame, idCol: String,
-                                   vecCol: String, threshold: Double,
-                                   targetCellRows: Int, n: Long): DataFrame = {
+  private def cellBoundedNearDups(corpus: DataFrame, idCol: String,
+                                  vecCol: String, threshold: Double,
+                                  n: Long): DataFrame = {
+    // ~1024 rows per cell
     val numCells = math.max(4, math.min(65536,
-      math.ceil(n.toDouble / targetCellRows).toInt))
+      math.ceil(n.toDouble / 1024).toInt))
     val cents = trainCentroids(corpus, idCol, vecCol, numCells, iters = 1,
       sampleMod = trainSampleModFor(n, numCells))
     // null-proof the DERIVED columns (coalesce with a literal → the
@@ -519,23 +506,25 @@ object Similarity {
     * banding defaults, then route:
     *
     *  - threshold inside the background tail (`threshold ≤ p99 +
-    *    bgMargin`), or estimated TRUE output volume super-linear
-    *    (`fracAtOrAbove·(n−1)/2 > maxOutputPerRow` — output pairs per
-    *    corpus row): banding cannot prune candidates that ARE the
+    *    0.05`), or estimated TRUE output volume super-linear
+    *    (`fracAtOrAbove·(n−1)/2 > 32` output pairs per corpus row):
+    *    banding cannot prune candidates that ARE the
     *    background (the measured sf10 `sim_cosine_neardups` regime:
     *    threshold 0.4 ≈ 3.2σ of N(0, 1/√64), ~8M quadratic output
-    *    pairs) → the cell-bounded [[cellBoundedNearDups]] operator.
+    *    pairs) → the cell-bounded operator (`cellBoundedNearDups`).
     *  - otherwise: SRP banding, sized by [[srpPlan]] with the MEASURED
     *    background mean (bgSim clamped to [0, 0.95]) — the multimodal
     *    block-hash space measures ≈0.70 where the embedding default
     *    would assume ≈0.3 and under-bit the band keys exponentially.
     *
-    * Both routes emit `(id_a, id_b, score)` with exact re-scored
+    * The decision is [[nearDupsReroute]] (the measured route at sf100:
+    * BASELINE.md "sf100 gate decisions"). Both routes emit
+    * `(id_a, id_b, score)` with exact re-scored
     * cosine ≥ threshold; they differ in which true pairs the candidate
     * stage can miss (S-curve tail vs cross-cell pairs).
     *
     * Threshold-picking guidance (the measured r16 recall curve — full
-    * numbers at [[cellBoundedNearDups]]): genuine near-duplicates
+    * numbers at `cellBoundedNearDups`): genuine near-duplicates
     * (cosine ≳ 0.92) recall 0.87–1.000 through the cell route;
     * thresholds INSIDE the measured background tail recall 0.4–0.6
     * because background-similarity pairs are Θ(n²) output by
@@ -544,54 +533,31 @@ object Similarity {
     * raise it, or accept the cell-local contract.
     */
   def cosineNearDupsAuto(corpus: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double, recall: Double = 0.95,
-                         targetBucket: Int = 64, bgMargin: Double = 0.05,
-                         maxOutputPerRow: Double = 32.0,
-                         sampleN: Int = 256): DataFrame =
-    cosineNearDupsAutoWithPath(corpus, idCol, vecCol, threshold, recall,
-      targetBucket, bgMargin, maxOutputPerRow, sampleN)._1
-
-  /** The measured-background reroute decision, factored out so
-    * diagnostics print the PRODUCTION arithmetic — no mirror to drift
-    * (the containmentGate treatment, r16 ADVICE). Returns
-    * (estOutPerRow, reroute): reroute to the cell-bounded operator
-    * when the threshold sits inside the background tail (p99+margin)
-    * or the estimated true output is itself corpus-quadratic.
-    */
-  private[graft] def nearDupsReroute(bg: BgSimStats, n: Long,
-      threshold: Double, bgMargin: Double = 0.05,
-      maxOutputPerRow: Double = 32.0): (Double, Boolean) = {
-    val estOutPerRow = bg.fracAtOrAbove * math.max(0L, n - 1) / 2.0
-    (estOutPerRow,
-      threshold <= bg.p99 + bgMargin || estOutPerRow > maxOutputPerRow)
-  }
-
-  /** [[cosineNearDupsAuto]] plus which route the measured gate chose
-    * (`true` = cell-bounded reroute) — the observability hook the gate
-    * spec pins against (the decision at sf100: BASELINE.md "sf100 gate
-    * decisions").
-    */
-  private[graft] def cosineNearDupsAutoWithPath(
-      corpus: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      recall: Double = 0.95, targetBucket: Int = 64, bgMargin: Double = 0.05,
-      maxOutputPerRow: Double = 32.0, sampleN: Int = 256)
-      : (DataFrame, Boolean) = {
+                         threshold: Double,
+                         recall: Double = 0.95): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0)
     val n = corpus.count()
-    val bg = measuredBgSim(corpus, idCol, vecCol, threshold, sampleN)
-    val (_, reroute) = nearDupsReroute(bg, n, threshold, bgMargin,
-      maxOutputPerRow)
-    if (reroute)
-      (cellBoundedNearDupsN(corpus, idCol, vecCol, threshold,
-        targetCellRows = 1024, n), true)
+    val bg = measuredBgSim(corpus, idCol, vecCol, threshold)
+    if (nearDupsReroute(bg, n, threshold))
+      cellBoundedNearDups(corpus, idCol, vecCol, threshold, n)
     else {
-      val (bits, bands) = srpPlan(n, threshold, recall, targetBucket,
-        multiProbe = false,
+      val (bits, bands) = srpPlan(n, threshold, recall,
         bgSim = math.min(0.95, math.max(0.0, bg.mean)))
-      (cosineNearDups(corpus, idCol, vecCol, threshold,
-        numPlanes = bits * bands, bands = bands), false)
+      cosineNearDups(corpus, idCol, vecCol, threshold,
+        numPlanes = bits * bands, bands = bands)
     }
   }
+
+  /** The measured-background reroute decision of [[cosineNearDupsAuto]]:
+    * reroute to the cell-bounded operator when the threshold sits
+    * inside the background tail (`threshold ≤ p99 + 0.05`) or the
+    * estimated true output (`fracAtOrAbove·(n−1)/2` pairs per row) is
+    * over 32, i.e. itself corpus-quadratic.
+    */
+  private[graft] def nearDupsReroute(bg: BgSimStats, n: Long,
+                                     threshold: Double): Boolean =
+    threshold <= bg.p99 + 0.05 ||
+      bg.fracAtOrAbove * math.max(0L, n - 1) / 2.0 > 32.0
 
   /** SemDeDup — semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): k-means partition the embedding space, then
@@ -603,7 +569,7 @@ object Similarity {
     * Scale shape: the clustering bounds the quadratic term — candidate
     * volume is Σ|cell|², not n², and the self-join shuffles only
     * (id, vec, norm) keyed on `cell`. At 100 TB the cell count grows
-    * with the corpus (cells ≈ n / targetCellRows, the [[ivfPlan]]
+    * with the corpus (cells ≈ n / rows-per-cell, the IVF sizing
     * discipline — the paper itself runs k≈100k on LAION) so per-cell
     * work stays constant and cells are embarrassingly parallel; the
     * centroid model is driver state inlined into one codegen
@@ -612,7 +578,7 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     cents: Array[(Seq[Float], Double)],
                     threshold: Double): DataFrame = {
-    // coalesce wraps: see [[cellBoundedNearDupsN]] — kills the inferred
+    // coalesce wraps: see [[cellBoundedNearDups]] — kills the inferred
     // isnotnull(nearestcells)/isnotnull(sqrt·dot) duplicate evaluation
     val assigned = corpus.select(col(idCol), col(vecCol).as("__v"),
       coalesce(l2Norm(col(vecCol)), lit(0.0)).as("__n"),
@@ -630,27 +596,6 @@ object Similarity {
       .select(col(idCol), col("cell"), col("__dup").isNull.as("keep"))
   }
 
-  /** IVF (inverted-file) approximate top-k — the other classic ANN scale
-    * path next to LSH. A coarse quantizer of `numCells` centroids
-    * partitions the corpus into cells (the "inverted lists"); each query
-    * probes only its `nprobe` nearest cells and exact-reranks the
-    * vectors in those cells.
-    *
-    * Centroid training is deterministic and seed-free: a hash-stratified
-    * init (one pseudo-random row per `xxhash64(id) mod numCells` stratum
-    * — spread across the corpus, unlike a lowest-id prefix which can be
-    * arbitrarily clustered) followed by ONE Lloyd refinement (cell means
-    * via [[graft.functions.VectorAgg]], rounded to 6 dp so partial-sum
-    * order can't leak into the model). The centroid table is tiny model
-    * state: collected on the driver and inlined as literal arrays, so
-    * cell assignment is a map-only Project over the corpus (no join, no
-    * shuffle). Training cost = 2 extra corpus passes, both map-side
-    * partial-aggregated. At 100 TB the only shuffle is the probe⋈cell
-    * equi-join, whose right side carries ~|corpus|·nprobe/numCells rows
-    * per query, and the final per-query top-k is [[rerankTopK]]'s
-    * `row_number` rank filter, which Spark plans as a per-query group
-    * limit over the sorted candidates.
-    */
   private def withNorm(v: Seq[Float]): (Seq[Float], Double) =
     (v, math.sqrt(v.map(x => x.toDouble * x.toDouble).sum))
 
@@ -658,8 +603,9 @@ object Similarity {
     * row's own positive norm), descending, in ONE codegen expression
     * ([[VectorExprs.NearestCells]]): the centroid matrix is a codegen
     * reference object and `numCells` a loop bound, so cell count can
-    * follow [[ivfPlan]]'s √n rule without the per-cell struct-expression
-    * spelling whose janino compile dominates past ~64 cells.
+    * follow the √n sizing rule ([[ivfCandidates]]) without the per-cell
+    * struct-expression spelling whose janino compile dominates past ~64
+    * cells.
     */
   def nearestCells(cents: Array[(Seq[Float], Double)], n: Int)(vec: Column): Column =
     VectorExprs.nearest_cells(vec, cents.flatMap(_._1), cents.map(_._2), n)
@@ -667,33 +613,6 @@ object Similarity {
   /** Nearest-centroid cell index for a vector column. */
   def cellFor(cents: Array[(Seq[Float], Double)])(vec: Column): Column =
     element_at(nearestCells(cents, 1)(vec), 1)
-
-  /** Sizing rule for the IVF coarse quantizer — the [[srpPlan]]
-    * analogue, the knob to re-derive at any corpus scale. Per-QUERY work
-    * over balanced cells is
-    * {{{
-    *   numCells·dim                 // score every centroid
-    *   + nprobe·(n/numCells)·dim    // exact re-rank of the probed lists
-    * }}}
-    * minimized at `numCells = √(n·nprobe)` where the two terms are equal
-    * — per-query cost then grows as √(n·nprobe)·dim, the IVF
-    * subquadratic scale claim (total query workload n^1.5 for n queries,
-    * vs n² brute force). Recall is bought with `nprobe`: a true neighbor
-    * is reachable iff its cell is probed, and vectors near a cell
-    * boundary need more than one probe; re-rank cost is linear in
-    * nprobe. Measured against [[bruteForceTopK]] in SimilaritySpec
-    * (recall 1.0 at nprobe=8 of 16 cells on the test corpus).
-    *
-    * The √n count is capped at `maxCells`: the one-time BUILD pass
-    * ([[ivfBuild]]) assigns every corpus row at n·numCells·dim cost and
-    * the driver-side model is numCells·dim floats — past the cap the
-    * flat centroid scan itself needs the IVF treatment (a two-level /
-    * hierarchical coarse quantizer). Train on a hash sample sized by
-    * [[trainSampleModFor]], never the full corpus.
-    */
-  def ivfPlan(n: Long, nprobe: Int = 4, maxCells: Int = 4096): (Int, Int) =
-    (math.max(4, math.min(maxCells,
-      math.ceil(math.sqrt(n.toDouble * nprobe)).toInt)), nprobe)
 
   /** Hash-sample modulus leaving ≈ `rowsPerCell·numCells` training rows:
     * the quantizer needs ~10²-rows-per-cell statistics, not the corpus —
@@ -763,7 +682,7 @@ object Similarity {
                numCells: Int, iters: Int = 1, sampleMod: Int = 1)
       : (Array[(Seq[Float], Double)], DataFrame) = {
     val cents = trainCentroids(corpus, idCol, vecCol, numCells, iters, sampleMod)
-    // coalesce wrap: see [[cellBoundedNearDupsN]] — the probe join's
+    // coalesce wrap: see [[cellBoundedNearDups]] — the probe join's
     // inferred isnotnull would re-evaluate nearestcells over the CORPUS
     (cents, corpus.select(col(idCol).as("neighbor_id"),
       coalesce(cellFor(cents)(col(vecCol)), lit(-1)).as("cell")))
@@ -784,9 +703,51 @@ object Similarity {
       .select("query_id", "neighbor_id")
   }
 
-  /** Candidate stage of [[ivfTopK]]: (query_id, neighbor_id) pairs from
-    * probing each query's `nprobe` nearest cells. Exposed so the pair
-    * list can be materialized and the exact re-rank verified externally.
+  /** Candidate stage of IVF (inverted-file) approximate top-k — the
+    * other classic ANN scale path next to LSH. A coarse quantizer of
+    * `numCells` centroids partitions the corpus into cells (the
+    * "inverted lists"); each query probes only its `nprobe` nearest
+    * cells, giving (query_id, neighbor_id) pairs. The top-k is
+    * `rerankTopK(ivfCandidates(…), …)`, the exact re-rank of those
+    * pairs, so the pair list can be materialized and the re-rank
+    * verified externally.
+    *
+    * Centroid training is deterministic and seed-free: a hash-stratified
+    * init (one pseudo-random row per `xxhash64(id) mod numCells` stratum
+    * — spread across the corpus, unlike a lowest-id prefix which can be
+    * arbitrarily clustered) followed by ONE Lloyd refinement (cell means
+    * via [[graft.functions.VectorAgg]], rounded to 6 dp so partial-sum
+    * order can't leak into the model). The centroid table is tiny model
+    * state: collected on the driver and inlined as literal arrays, so
+    * cell assignment is a map-only Project over the corpus (no join, no
+    * shuffle). Training cost = 2 extra corpus passes, both map-side
+    * partial-aggregated. At 100 TB the only shuffle is the probe⋈cell
+    * equi-join, whose right side carries ~|corpus|·nprobe/numCells rows
+    * per query, and the final per-query top-k is [[rerankTopK]]'s
+    * `row_number` rank filter, which Spark plans as a per-query group
+    * limit over the sorted candidates.
+    *
+    * Sizing rule for the coarse quantizer — the [[srpPlan]] analogue,
+    * the knob to re-derive at any corpus scale. Per-QUERY work over
+    * balanced cells is
+    * {{{
+    *   numCells·dim                 // score every centroid
+    *   + nprobe·(n/numCells)·dim    // exact re-rank of the probed lists
+    * }}}
+    * minimized at `numCells = √(n·nprobe)` where the two terms are equal
+    * — per-query cost then grows as √(n·nprobe)·dim, the IVF
+    * subquadratic scale claim (total query workload n^1.5 for n queries,
+    * vs n² brute force). Recall is bought with `nprobe`: a true neighbor
+    * is reachable iff its cell is probed, and vectors near a cell
+    * boundary need more than one probe; re-rank cost is linear in
+    * nprobe. Measured against [[bruteForceTopK]] in SimilaritySpec
+    * (recall 0.79 at nprobe=8 of 16 cells on the sf0.001 corpus). Cap the
+    * √n count at a few thousand cells: the one-time BUILD pass
+    * ([[ivfBuild]]) assigns every corpus row at n·numCells·dim cost and
+    * the driver-side model is numCells·dim floats — past that the flat
+    * centroid scan itself needs the IVF treatment (a two-level /
+    * hierarchical coarse quantizer). Train on a hash sample sized by
+    * [[trainSampleModFor]], never the full corpus.
     */
   def ivfCandidates(queries: DataFrame, corpus: DataFrame, idCol: String,
                     vecCol: String, numCells: Int = 16,
@@ -795,13 +756,6 @@ object Similarity {
       ivfBuild(corpus, idCol, vecCol, numCells, iters = 1, sampleMod)
     ivfProbe(queries, idCol, vecCol, cents, cells, nprobe)
   }
-
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              vecCol: String, k: Int, numCells: Int = 16,
-              nprobe: Int = 4, sampleMod: Int = 1): DataFrame =
-    rerankTopK(
-      ivfCandidates(queries, corpus, idCol, vecCol, numCells, nprobe, sampleMod),
-      queries, corpus, idCol, vecCol, k)
 
   // ------------- Product Quantization (Jégou et al. 2011) -------------
   // "Product Quantization for Nearest Neighbor Search", TPAMI 2011: the
@@ -817,15 +771,10 @@ object Similarity {
   // and "it doesn't".
 
   /** L2-nearest codeword index within ONE subspace codebook:
-    * `argmin ‖x − c‖² = argmax (x·c − ‖c‖²/2)` — the dot-product form
-    * keeps the per-code expression one [[VectorExprs.float_dot]] plus a
-    * literal. Ties break toward the LARGER code (struct array_max
-    * compares score then code) — deterministic, mirrored nowhere else
-    * because codes are always consumed from the materialized encode
-    * output, never re-derived.
-    */
-  /** Nearest codeword under L2 for one subspace's subvector — a loop
-    * over the broadcast-referenced codebook
+    * `argmin ‖x − c‖² = argmax (x·c − ‖c‖²/2)`. Ties break toward the
+    * LARGER code — deterministic, mirrored nowhere else because codes
+    * are always consumed from the materialized encode output, never
+    * re-derived. A loop over the broadcast-referenced codebook
     * ([[graft.functions.VectorExprs.PqNearestCode]]). The earlier
     * unrolled `array_max(array(struct(dot − ½‖cw‖², code) × k))`
     * spelling emitted O(k) dot blocks per subspace into the consuming
@@ -1325,29 +1274,6 @@ object Similarity {
         row_number().over(w).cast("int").as("rank"))
   }
 
-  /** Per-dimension corpus standardization (feature whitening) — the
-    * z-score transform an embedding pipeline applies before indexing
-    * or distance thresholds so no dimension dominates by scale. The
-    * published preprocessing step of SemDeDup-style dedup and of
-    * whitened-PCA retrieval stacks.
-    *
-    * Determinism: FP sums reorder under partitioning, so each float
-    * first rounds to an integer MICRO-unit; the per-dim first and
-    * second moments are then exact long sums, and the z-score clears
-    * its fractions to  z = (n·x − Σx) / √(n·Σx² − (Σx)²)  — exact
-    * integers inside, one IEEE sqrt (correctly rounded on every
-    * platform, unlike ln) and one division at the end, rounded to
-    * 4 dp. A zero-variance dimension standardizes to NULL rather than
-    * a division blow-up. The second moments sum as decimal(38,0) —
-    * n·Σx² grows as n² and would overflow a long past ~20k rows at
-    * embedding scale (a bound the replica scale probes caught:
-    * BASELINE_HISTORY.md "Scale probe (events ×32 …)"), while decimal
-    * keeps the cleared fraction exact to 10³⁸.
-    *
-    * Scale shape: one posexplode + ONE hash agg to the dim-sized
-    * moment table (64 rows — model-sized), broadcast back onto the
-    * exploded stream: map-only scoring, a single corpus shuffle.
-    */
   /** Label-separation report over a labeled embedding corpus — the
     * "are my classes actually separable in this embedding space"
     * diagnostic an embedding/eval pipeline runs before training on
@@ -1660,6 +1586,29 @@ object Similarity {
       .toDF("dim", "loading_micro", "lambda_micro2")
   }
 
+  /** Per-dimension corpus standardization (feature whitening) — the
+    * z-score transform an embedding pipeline applies before indexing
+    * or distance thresholds so no dimension dominates by scale. The
+    * published preprocessing step of SemDeDup-style dedup and of
+    * whitened-PCA retrieval stacks.
+    *
+    * Determinism: FP sums reorder under partitioning, so each float
+    * first rounds to an integer MICRO-unit; the per-dim first and
+    * second moments are then exact long sums, and the z-score clears
+    * its fractions to  z = (n·x − Σx) / √(n·Σx² − (Σx)²)  — exact
+    * integers inside, one IEEE sqrt (correctly rounded on every
+    * platform, unlike ln) and one division at the end, rounded to
+    * 4 dp. A zero-variance dimension standardizes to NULL rather than
+    * a division blow-up. The second moments sum as decimal(38,0) —
+    * n·Σx² grows as n² and would overflow a long past ~20k rows at
+    * embedding scale (a bound the replica scale probes caught:
+    * BASELINE_HISTORY.md "Scale probe (events ×32 …)"), while decimal
+    * keeps the cleared fraction exact to 10³⁸.
+    *
+    * Scale shape: one posexplode + ONE hash agg to the dim-sized
+    * moment table (64 rows — model-sized), broadcast back onto the
+    * exploded stream: map-only scoring, a single corpus shuffle.
+    */
   def standardizeEmbeddings(emb: DataFrame, idCol: String,
                             vecCol: String, strata: Int = 1): DataFrame = {
     require(strata >= 1)

@@ -275,22 +275,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_eval_matches"), max(col("__j")).as("max_jaccard"))
   }
 
-  /** Unigram language-model quality score (the CCNet/RedPajama-style
-    * "LM perplexity" filter, reduced to its order-0 form): train a
-    * unigram model ON the corpus (token → count / total), then score
-    * every document by its mean token log-probability. Rare-token-heavy
-    * docs (OCR noise, codes, lorem) score low; filtering is a
-    * downstream threshold on `avg_logprob`.
-    *
-    * Scale shape: the model is vocabulary-sized (≪ corpus) — counts are
-    * one hash agg, the normalizing total folds in-plan as a broadcast
-    * 1-row aggregate (no driver collect), and scoring re-joins the
-    * model to the exploded corpus via broadcast, so the corpus never
-    * shuffles. FP discipline: per-token log-probs round to integer
-    * micro-nats and sum as DECIMAL — order-insensitive, so the score is
-    * identical under any partitioning (and to the DuckDB oracle); ONE
-    * double division at the end.
-    */
   /** `round(num / den, 6)` with the half-boundary decided in INTEGER
     * arithmetic — the money-sum spelling rule extended to ratios (r15
     * sf10 census finding): when the exact rational `num/den` lands ON a
@@ -326,6 +310,22 @@ object TextAnalysis {
       org.apache.spark.sql.graft.bridge.expression(b)))
   }
 
+  /** Unigram language-model quality score (the CCNet/RedPajama-style
+    * "LM perplexity" filter, reduced to its order-0 form): train a
+    * unigram model ON the corpus (token → count / total), then score
+    * every document by its mean token log-probability. Rare-token-heavy
+    * docs (OCR noise, codes, lorem) score low; filtering is a
+    * downstream threshold on `avg_logprob`.
+    *
+    * Scale shape: the model is vocabulary-sized (≪ corpus) — counts are
+    * one hash agg, the normalizing total folds in-plan as a broadcast
+    * 1-row aggregate (no driver collect), and scoring re-joins the
+    * model to the exploded corpus via broadcast, so the corpus never
+    * shuffles. FP discipline: per-token log-probs round to integer
+    * micro-nats and sum as DECIMAL — order-insensitive, so the score is
+    * identical under any partitioning (and to the DuckDB oracle); ONE
+    * double division at the end.
+    */
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = df.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
@@ -556,27 +556,21 @@ object TextAnalysis {
           lit(budgetTokens.toDouble)).cast("int"))
   }
 
-  /** [[packSequences]] at 100 TB: the distributed two-pass prefix sum.
-    * Pass 1 range-partitions on (stratum, id) — so one stratum SPANS
-    * many partitions, each locally sorted — and computes per-partition
-    * local running sums plus one (partition, stratum) subtotal row.
-    * Pass 2 broadcasts the subtotals (O(partitions × strata-per-
-    * partition-boundary) rows, ~KB) back as exclusive offsets. No
-    * stratum is ever sorted on a single task, which is exactly the
-    * failure mode of the window form when a stratum is 10 TB.
-    * Deterministic: range partitioning is boundary-based and the local
-    * scan follows the same (stratum, id) order the window form uses —
-    * PackingSpec asserts bit-equality between the two forms.
+  /** [[packSequences]] at 100 TB: the same packs through the
+    * distributed two-pass prefix sum ([[exclusivePrefixScalable]]) over
+    * the (stratum, id) order, so no stratum is ever sorted on a single
+    * task. PackingSpec asserts bit-equality between the two forms.
     */
   def packSequencesScalable(df: DataFrame, idCol: String, textCol: String,
                             strataCol: String, budgetTokens: Int,
                             numParts: Int = 32): DataFrame =
-    prefixAssignScalable(
+    exclusivePrefixScalable(
       df.select(col(strataCol), col(idCol),
-        tokenCount(col(textCol)).cast("long").as("__w")),
-      strataCol, idCol, budgetTokens.toDouble, "pack_id", numParts)
-      .select(col(strataCol), col(idCol),
-        col("__w").cast("int").as("n_toks"), col("pack_id"))
+        tokenCount(col(textCol)).as("n_toks")),
+      strataCol, Seq(col(idCol)), "n_toks", numParts)
+      .select(col(strataCol), col(idCol), col("n_toks"),
+        floor(col("__before") / lit(budgetTokens.toDouble)).cast("int")
+          .as("pack_id"))
 
   /** Output-shard assignment by byte budget — the balanced-file writer
     * every corpus export needs (training loaders want ~equal shard
@@ -590,60 +584,75 @@ object TextAnalysis {
   def shardByBytes(df: DataFrame, idCol: String, bytesCol: String,
                    strataCol: String, budgetBytes: Long,
                    numParts: Int = 32): DataFrame =
-    prefixAssignScalable(
+    exclusivePrefixScalable(
       df.select(col(strataCol), col(idCol),
-        col(bytesCol).cast("long").as("__w")),
-      strataCol, idCol, budgetBytes.toDouble, "shard_id", numParts)
-      .select(col(strataCol), col(idCol), col("__w").as("n_bytes"),
-        col("shard_id"))
+        col(bytesCol).cast("long").as("n_bytes")),
+      strataCol, Seq(col(idCol)), "n_bytes", numParts)
+      .select(col(strataCol), col(idCol), col("n_bytes"),
+        floor(col("__before") / lit(budgetBytes.toDouble)).cast("int")
+          .as("shard_id"))
 
-  /** The shared two-pass distributed prefix-sum assigner behind
-    * [[packSequencesScalable]] (token budgets) and [[shardByBytes]]
-    * (byte budgets). `rows` must be `(strataCol, idCol, __w: long)`;
-    * returns `(strataCol, idCol, __w, outCol)` with
-    * `outCol = floor(exclusive-prefix-sum(__w) / budget)` in
-    * (stratum, id) order.
+  /** The two-pass distributed EXCLUSIVE prefix sum behind
+    * [[packSequencesScalable]], [[shardByBytes]] and the scalable
+    * mixers of [[graft.etl.Sampling]]: returns `rows` plus `__before`,
+    * the sum of `weightCol` over the rows that precede each row in its
+    * stratum, in (`strataCol`, `order`…) order.
     *
-    * Pass 1 range-partitions on (stratum, id) — so one stratum SPANS
-    * many partitions, each locally sorted — and computes per-partition
-    * local running sums plus one (partition, stratum) subtotal row.
-    * Pass 2 broadcasts the subtotals (O(partitions × strata-per-
-    * partition-boundary) rows, ~KB) back as exclusive offsets. No
-    * stratum is ever sorted on a single task, which is exactly the
-    * failure mode of the window form when a stratum is 10 TB.
-    * Deterministic: range partitioning is boundary-based and the local
-    * scan follows the same (stratum, id) order the window form uses —
-    * PackingSpec asserts bit-equality between the two forms.
+    * Pass 1 range-partitions on (stratum, order…) — so one stratum
+    * SPANS many partitions, each locally sorted — and computes
+    * per-partition local running sums plus one (partition, stratum)
+    * subtotal row. Pass 2 broadcasts the subtotals (O(partitions ×
+    * strata-per-partition-boundary) rows, ~KB) back as exclusive
+    * offsets. No stratum is ever sorted on a single task, which is
+    * exactly the failure mode of a window form when a stratum is
+    * 10 TB. Deterministic: range partitioning is boundary-based and the
+    * local scan follows the same order the window forms use —
+    * PackingSpec and SamplingSpec assert bit-equality with them.
+    *
+    * Null weights: a row whose weight is null adds nothing to any
+    * prefix and gets a null `__before` — the window forms' `sum`
+    * semantics, so a null-text doc keeps its row with a null pack or
+    * shard id. A caller that must not emit such rows filters them out
+    * before calling.
     */
-  private def prefixAssignScalable(rows: DataFrame, strataCol: String,
-                                   idCol: String, budget: Double,
-                                   outCol: String, numParts: Int): DataFrame = {
+  private[graft] def exclusivePrefixScalable(rows: DataFrame,
+                                             strataCol: String,
+                                             order: Seq[Column],
+                                             weightCol: String,
+                                             numParts: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = rows.sparkSession
-    val sorted = rows
-      .repartitionByRange(numParts, col(strataCol), col(idCol))
-      .sortWithinPartitions(col(strataCol), col(idCol))
-    val withPid = sorted.withColumn("__pid", spark_partition_id())
+    val key = col(strataCol) +: order
+    val withPid = rows
+      .repartitionByRange(numParts, key: _*)
+      .sortWithinPartitions(key: _*)
+      .withColumn("__pid", spark_partition_id())
     // pass 1: local exclusive prefix sums (one iterator scan per task —
-    // rows are already (stratum, id)-sorted within the partition)
+    // rows are already key-sorted within the partition); positions
+    // resolved by NAME from the schema
+    val iStrat = withPid.schema.fieldIndex(strataCol)
+    val iW = withPid.schema.fieldIndex(weightCol)
     val schema = StructType(withPid.schema.fields :+
-      StructField("__local_excl", LongType, nullable = false))
+      StructField("__local_excl", LongType, nullable = true))
     val local = spark.createDataFrame(
       withPid.rdd.mapPartitions { it =>
         var stratum: Any = null
         var running = 0L
         it.map { r =>
-          if (r.get(0) != stratum) { stratum = r.get(0); running = 0L }
-          val excl = running
-          running += r.getLong(2)
-          Row(r.get(0), r.get(1), r.get(2), r.get(3), excl)
+          if (r.get(iStrat) != stratum) { stratum = r.get(iStrat); running = 0L }
+          if (r.isNullAt(iW)) Row.fromSeq(r.toSeq :+ null)
+          else {
+            val excl = running
+            running += r.getAs[Number](iW).longValue
+            Row.fromSeq(r.toSeq :+ excl)
+          }
         }
       }, schema)
     // pass 2: per-(partition, stratum) totals → exclusive cross-
     // partition offsets; tiny (≤ partitions × strata), broadcast back
     val subtotal = local.groupBy(col("__pid"), col(strataCol))
-      .agg(sum(col("__w")).as("__part_total"))
+      .agg(sum(col(weightCol)).as("__part_total"))
     val offsetW = org.apache.spark.sql.expressions.Window
       .partitionBy(col(strataCol)).orderBy(col("__pid"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -652,19 +661,10 @@ object TextAnalysis {
         coalesce(sum(col("__part_total")).over(offsetW), lit(0L)))
       .select(col("__pid"), col(strataCol), col("__offset"))
     local.join(broadcast(offsets), Seq("__pid", strataCol))
-      .select(col(strataCol), col(idCol), col("__w"),
-        floor((col("__local_excl") + col("__offset")) / lit(budget))
-          .cast("int").as(outCol))
+      .select(rows.columns.map(col) :+
+        (col("__local_excl") + col("__offset")).as("__before"): _*)
   }
 
-  /** Overlapping token-window chunking — the context-window splitter: a
-    * doc of n tokens becomes `1 + ceil((n - chunk)/stride)` chunks,
-    * chunk i covering tokens `[i·stride, i·stride + chunk)` (the last
-    * one short). Emits (id, chunk_id, n_chunk_tokens, chunk_hash) —
-    * map-only, one codegen'd Project with a posexplode, no shuffle; the
-    * hash stands in for the chunk text so downstream exact-dedup of
-    * chunks is a plain groupBy.
-    */
   /** Corpus-level exact line dedup — the C4 recipe (Raffel et al. 2020
     * dedups three-sentence spans; RefinedWeb drops exact duplicate
     * lines): a line that appears in MORE THAN ONE distinct document is
@@ -1047,6 +1047,14 @@ object TextAnalysis {
         coalesce(col("__spans"), lit(0L)).as("n_spans"))
   }
 
+  /** Overlapping token-window chunking — the context-window splitter: a
+    * doc of n tokens becomes `1 + ceil((n - chunk)/stride)` chunks,
+    * chunk i covering tokens `[i·stride, i·stride + chunk)` (the last
+    * one short). Emits (id, chunk_id, n_chunk_tokens, chunk_hash) —
+    * map-only, one codegen'd Project with a posexplode, no shuffle; the
+    * hash stands in for the chunk text so downstream exact-dedup of
+    * chunks is a plain groupBy.
+    */
   def chunkWindows(df: DataFrame, idCol: String, textCol: String,
                    chunkTokens: Int, strideTokens: Int): DataFrame = {
     require(strideTokens > 0 && chunkTokens >= strideTokens,

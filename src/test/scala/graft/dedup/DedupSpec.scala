@@ -17,6 +17,14 @@ class DedupSpec extends SparkSpec {
   private def dedupExactMap(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
+  /** SimHash near-dups as the registry's `dedup_simhash` composes them. */
+  private def simhashPairs(df: org.apache.spark.sql.DataFrame, idCol: String,
+                           textCol: String, maxHamming: Int,
+                           maxBucketRows: Long = 65536L) =
+    Dedup.simhashCandidatePairs(
+      df.select(col(idCol), Dedup.simhash64(TextAnalysis.tokens(col(textCol))).as("fp")),
+      idCol, "fp", maxHamming, maxBucketRows)
+
   test("shingles produce n-grams; short docs collapse to one shingle") {
     val df = Seq((1L, "a b c d"), (2L, "a b")).toDF("id", "t")
     val sh = df.select($"id",
@@ -95,7 +103,7 @@ class DedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf())
     val planted = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.9)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sims = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 7)
+    val sims = simhashPairs(docs, "doc_id", "text", maxHamming = 7)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // simhash at hamming≤7 must recover the strongly-planted pairs
     assert(planted.subsetOf(sims),
@@ -105,7 +113,7 @@ class DedupSpec extends SparkSpec {
   test("simhash hamming distance is 0 for identical token streams") {
     val df = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"))
       .toDF("id", "t")
-    val out = Dedup.simhashNearDups(df, "id", "t", maxHamming = 0).collect()
+    val out = simhashPairs(df, "id", "t", maxHamming = 0).collect()
     assert(out.length == 1 && out.head.getInt(2) == 0)
   }
 
@@ -213,12 +221,18 @@ class DedupSpec extends SparkSpec {
     "a long chain where minlabel needs diameter rounds") {
     // 512-node chain: diameter 511. minlabel moves the min one hop per
     // round; alternating's star contractions collapse it in ~log n.
+    // A run capped at `maxIters` rounds labels the whole chain 0 only
+    // if it reached the star fixpoint within the cap.
     val chain = (0L until 511L).map(i => (i, i + 1))
-    val (labels, rounds) = Dedup.connectedComponentsWithRounds(
-      chain.toDF("id_a", "id_b"), "id_a", "id_b", maxIters = 25)
-    val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m.size == 512 && m.values.forall(_ == 0L), s"rounds=$rounds")
-    assert(rounds <= 15, s"expected O(log 512) ≈ <=15 rounds, took $rounds")
+    def labels(maxIters: Int) = Dedup.connectedComponents(
+        chain.toDF("id_a", "id_b"), "id_a", "id_b", maxIters = maxIters)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val m = labels(15)
+    assert(m.size == 512)
+    assert(m.values.count(_ != 0L) == 0,
+      "expected O(log 512) ≈ <=15 rounds to label the whole chain 0")
+    assert(labels(2).values.count(_ != 0L) > 0,
+      "2 rounds must not finish a 512-chain: the cap has to bind")
     // and minlabel demonstrably can NOT finish the chain in that budget
     val (_, mlRounds) = minLabel(chain, maxIters = 16)
     assert(mlRounds == 16, "minlabel should exhaust its budget on a chain")
@@ -250,7 +264,7 @@ class DedupSpec extends SparkSpec {
       .toDF("id", "t")
       .union(Seq((9001L, "zebra quartz jumble vortex nimbus krypton"),
         (9002L, "zebra quartz jumble vortex nimbus krypton")).toDF("id", "t"))
-    val gated = Dedup.simhashNearDups(skewed, "id", "t", maxHamming = 7,
+    val gated = simhashPairs(skewed, "id", "t", maxHamming = 7,
       maxBucketRows = 100)
     val rows = gated.collect()
     // the hot bucket is gone: no pair of the 2000 identical docs remains
@@ -260,7 +274,7 @@ class DedupSpec extends SparkSpec {
     assert(rows.exists(r => r.getLong(0) == 9001L && r.getLong(1) == 9002L),
       "guard must not drop small buckets")
     // inert default: same corpus, default cap → identical-doc pairs found
-    val ungated = Dedup.simhashNearDups(skewed.where($"id" <= 50), "id", "t",
+    val ungated = simhashPairs(skewed.where($"id" <= 50), "id", "t",
       maxHamming = 7)
     assert(ungated.where($"id_a" <= 50 && $"id_b" <= 50).count() == 50L * 49 / 2)
   }
@@ -676,15 +690,19 @@ class DedupSpec extends SparkSpec {
     val docs = graft.model.Tables.documents(spark, sf()).where($"doc_id" < 150)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // the array verify intersects the shingle arrays; the count verify
+    // never touches an array
+    def arrayVerify(df: org.apache.spark.sql.DataFrame) =
+      plants[org.apache.spark.sql.catalyst.expressions.ArrayIntersect](df)
     // a tiny corpus must route to the broadcast array-verify regime...
-    val (bc, countAtDefault) = Dedup.containmentPairsInvertedWithPath(
-      docs, "doc_id", "text", 3, 0.5)
-    assert(!countAtDefault,
+    val bc = Dedup.containmentPairsInverted(docs, "doc_id", "text", 3, 0.5)
+    assert(arrayVerify(bc),
       "plan-stats routing must pick the broadcast regime on a tiny corpus")
     // ...and a zero budget forces the count-verify regime
-    val (cnt, countForced) = Dedup.containmentPairsInvertedWithPath(
-      docs, "doc_id", "text", 3, 0.5, maxVerifyBroadcastBytes = 0L)
-    assert(countForced, "a zero broadcast budget must force the count regime")
+    val cnt = Dedup.containmentPairsInverted(docs, "doc_id", "text", 3, 0.5,
+      maxVerifyBroadcastBytes = 0L)
+    assert(!arrayVerify(cnt),
+      "a zero broadcast budget must force the count regime")
     val viaBroadcast = canon(bc)
     assert(viaBroadcast.nonEmpty, "fixture must exercise both regimes")
     assert(canon(cnt) == viaBroadcast,
@@ -692,9 +710,11 @@ class DedupSpec extends SparkSpec {
     // batch (aFilter) form: both regimes equal the filtered full result
     val expected = viaBroadcast.filter(_._1 % 2 == 1)
     Seq(0L, Long.MaxValue).foreach { budget =>
-      val (batch, _) = Dedup.containmentPairsInvertedWithPath(
+      val batch = Dedup.containmentPairsInverted(
         docs, "doc_id", "text", 3, 0.5, aFilter = col("doc_id") % 2 === 1,
         maxVerifyBroadcastBytes = budget)
+      assert(arrayVerify(batch) == (budget > 0L),
+        s"batch form must take the same regime at budget=$budget")
       assert(canon(batch) == expected, s"batch parity at budget=$budget")
     }
   }
@@ -705,9 +725,15 @@ class DedupSpec extends SparkSpec {
       .select("doc_id", "text")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val (exactDf, sketchAtDefault) = Dedup.containmentPairsAutoWithPath(
-      docs, "doc_id", "text", 3, 0.5, 0L, 2000000000L, 64, 0.15)
-    assert(!sketchAtDefault,
+    // the sketch route re-scores its screen through withContainment,
+    // the one plan that carries an `exact_containment` column
+    def viaSketchRoute(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.exists(_.output.exists(
+        _.name == "exact_containment"))
+    assert(!Dedup.containmentGate(docs, "text", 3, 0.5).usesSketch,
+      "the default gate must keep the exact all-pairs plan")
+    val exactDf = Dedup.containmentPairsAuto(docs, "doc_id", "text", 3, 0.5)
+    assert(!viaSketchRoute(exactDf),
       "the default threshold must keep the exact all-pairs plan")
     val exact = canon(exactDf)
     assert(exact == canon(
@@ -717,9 +743,13 @@ class DedupSpec extends SparkSpec {
     // scan confirms, and the gate routes sketch-screen → exact-verify.
     // k ≥ every doc's shingle count makes the screen lossless (the
     // bottom-k IS the full set), so crossing the gate moves no pair.
-    val (viaSketch, sketchForced) = Dedup.containmentPairsAutoWithPath(
-      docs, "doc_id", "text", 3, 0.5, 0L, 1L, 100000, 0.15)
-    assert(sketchForced, "a forced-low threshold must take the sketch route")
+    assert(Dedup.containmentGate(docs, "text", 3, 0.5,
+      maxPrefixPostings = 1L).usesSketch,
+      "a forced-low threshold must take the sketch route")
+    val viaSketch = Dedup.containmentPairsAuto(docs, "doc_id", "text", 3,
+      0.5, maxPrefixPostings = 1L, sketchK = 100000)
+    assert(viaSketchRoute(viaSketch),
+      "a forced-low threshold must take the sketch route")
     assert(canon(viaSketch) == exact,
       "gate crossing must not move a single pair when the screen is lossless")
     assert(exact.nonEmpty, "fixture must exercise both paths on real pairs")

@@ -1,11 +1,19 @@
 package graft.similarity
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.functions.VectorExprs.{NearestCells, SrpBandKeys}
 import graft.model.Tables
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  /** LSH top-k as the registry's `sim_topk_lsh` composes it. */
+  private def lshTopK(q: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    Similarity.rerankTopK(
+      Similarity.lshCandidates(q, corpus, "vec_id", "embedding"),
+      q, corpus, "vec_id", "embedding", k)
 
   test("cosine of known vectors") {
     val df = Seq(
@@ -41,7 +49,7 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.lshTopK(q, emb, "vec_id", "embedding", 10)
+    val approx = lshTopK(q, emb, 10)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
@@ -66,7 +74,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf())
     val q = emb.where($"vec_id" < 10)
     val exact = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 10)
-    val approx = Similarity.lshTopK(q, emb, "vec_id", "embedding", 10)
+    val approx = lshTopK(q, emb, 10)
     val perQuery = Similarity.recallAtK(approx, exact)
     val macroRecall = perQuery.agg(avg($"recall")).head().getDouble(0)
     val eSet = exact.select("query_id", "neighbor_id").collect()
@@ -80,7 +88,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("SRP band buckets are small: max bucket ≪ corpus (the subquadratic guard)") {
-    // reproduce the banding exactly as cosineNearDups/lshTopK build it
+    // reproduce the banding exactly as cosineNearDups/lshCandidates build it
     // (16 bands × 8-bit keys over the fixed-seed hyperplanes) and assert
     // no bucket concentrates the corpus — a 2-bit key space would put
     // ~n/4 rows in every bucket and candidate generation would be Θ(n²)
@@ -106,22 +114,18 @@ class SimilaritySpec extends SparkSpec {
     val (bitsB, _) = Similarity.srpPlan(1000000000L, 0.45, 0.9)
     assert(bitsB >= 23, s"1e9 rows need ~2^24 key space, got 2^$bitsB")
     assert(bands1k >= 4 && bands1k <= 128, s"bands1k=$bands1k")
-    // multi-probe divides bands ~5× (used by lshTopK on the query side)
+    // multi-probe divides bands ~5× (used by lshCandidates on the query side)
     val (_, bandsMp) = Similarity.srpPlan(1000, 0.45, 0.9, multiProbe = true)
     assert(bandsMp < bands1k / 3, s"mp=$bandsMp vs $bands1k")
   }
 
-  test("ivfPlan: √(n·nprobe) cells, capped; sampleMod leaves ~rowsPerCell·cells") {
-    val (c64k, np) = Similarity.ivfPlan(64000)
-    assert(np == 4 && c64k == math.ceil(math.sqrt(64000.0 * 4)).toInt, s"c=$c64k")
-    val (c2m, _) = Similarity.ivfPlan(64000L * 32)
-    // √n rule: ×32 corpus → ~√32 ≈ 5.7× the cells
-    assert(c2m.toDouble / c64k > 4 && c2m.toDouble / c64k < 7, s"$c64k -> $c2m")
-    val (cBig, _) = Similarity.ivfPlan(1000000000L)
-    assert(cBig == 4096, "cap: past maxCells the quantizer needs a 2nd level")
-    val mod = Similarity.trainSampleModFor(64000L * 32, c2m)
-    val sampled = 64000L * 32 / mod
-    assert(sampled >= 100L * c2m && sampled <= 300L * c2m, s"mod=$mod")
+  test("trainSampleModFor leaves ~128 rows per cell") {
+    // 2,048,000 rows at the √(n·nprobe) cell count for nprobe = 4
+    val n = 64000L * 32
+    val cells = math.ceil(math.sqrt(n * 4.0)).toInt
+    val mod = Similarity.trainSampleModFor(n, cells)
+    val sampled = n / mod
+    assert(sampled >= 100L * cells && sampled <= 300L * cells, s"mod=$mod")
   }
 
   test("nearestCells matches the naive (sim desc, cell desc) ordering, ties included") {
@@ -148,8 +152,12 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.ivfTopK(q, emb, "vec_id", "embedding", 10,
-      numCells = 16, nprobe = 8)
+    // the registry's sim_topk_ivf composition
+    def ivfTopK() = Similarity.rerankTopK(
+      Similarity.ivfCandidates(q, emb, "vec_id", "embedding",
+        numCells = 16, nprobe = 8),
+      q, emb, "vec_id", "embedding", 10)
+    val approx = ivfTopK()
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
@@ -158,8 +166,7 @@ class SimilaritySpec extends SparkSpec {
     // cells: honest pruning (each probe sees ~n·nprobe/numCells rows)
     // with recall still comfortably above the 0.7 floor
     assert(recall >= 0.7, f"recall $recall%.2f too low")
-    val ranks = Similarity.ivfTopK(q, emb, "vec_id", "embedding", 10,
-      numCells = 16, nprobe = 8)
+    val ranks = ivfTopK()
       .groupBy("query_id").agg(max("rank").as("m"), count(lit(1)).as("n"))
       .collect()
     ranks.foreach(r => assert(r.getInt(1) == r.getLong(2).toInt,
@@ -350,8 +357,7 @@ class SimilaritySpec extends SparkSpec {
     }
     val emb16 = rows.toDF("vec_id", "embedding")
     assert(Similarity.vecDim(emb16, "embedding") == 16)
-    val out = Similarity.lshTopK(emb16.where($"vec_id" < 5), emb16,
-      "vec_id", "embedding", k = 3).collect()
+    val out = lshTopK(emb16.where($"vec_id" < 5), emb16, k = 3).collect()
     assert(out.nonEmpty)
     val top1 = out.filter(_.getInt(2) == 1)
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -380,8 +386,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("deterministic across runs: same seed → same LSH output") {
     val emb = Tables.embeddings(spark, sf())
-    def run() = Similarity.lshTopK(emb.where($"vec_id" < 3), emb,
-      "vec_id", "embedding", 5).collect()
+    def run() = lshTopK(emb.where($"vec_id" < 3), emb, 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(run() == run())
   }
@@ -690,13 +695,20 @@ class SimilaritySpec extends SparkSpec {
       bg.p99 > 0.15 && bg.p99 < 0.45, "sampled background must look gaussian")
 
     // threshold INSIDE the background tail -> cell-bounded reroute
-    val (cellOut, rerouted) = Similarity.cosineNearDupsAutoWithPath(
+    val n = corpus.count()
+    assert(Similarity.nearDupsReroute(bg, n, 0.2),
+      "threshold 0.2 <= p99+margin must reroute to cells")
+    val cellOut = Similarity.cosineNearDupsAuto(
       corpus, "vec_id", "embedding", threshold = 0.2)
-    assert(rerouted, "threshold 0.2 <= p99+margin must reroute to cells")
+    assert(plants[NearestCells](cellOut) && !plants[SrpBandKeys](cellOut),
+      "the rerouted frame must assign cells, not key bands")
     // threshold far ABOVE the tail -> banded route
-    val (bandOut, rerouted2) = Similarity.cosineNearDupsAutoWithPath(
+    assert(!Similarity.nearDupsReroute(bg, n, 0.95),
+      "threshold 0.95 must stay on the banded route")
+    val bandOut = Similarity.cosineNearDupsAuto(
       corpus, "vec_id", "embedding", threshold = 0.95)
-    assert(!rerouted2, "threshold 0.95 must stay on the banded route")
+    assert(plants[SrpBandKeys](bandOut) && !plants[NearestCells](bandOut),
+      "the banded frame must key bands, not assign cells")
 
     val planted = (0 until 5).map(j => (j.toLong, 1000L + j)).toSet
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -744,10 +756,12 @@ class SimilaritySpec extends SparkSpec {
     assert(bg.mean > 0.6 && bg.p99 > 0.85,
       "fixture must reproduce the high-background histogram regime")
 
-    val (out, rerouted) = Similarity.cosineNearDupsAutoWithPath(
-      corpus, "media_id", "features", threshold = 0.95)
-    assert(rerouted,
+    assert(Similarity.nearDupsReroute(bg, corpus.count(), 0.95),
       "threshold inside the measured background tail must reroute to cells")
+    val out = Similarity.cosineNearDupsAuto(
+      corpus, "media_id", "features", threshold = 0.95)
+    assert(plants[NearestCells](out) && !plants[SrpBandKeys](out),
+      "the rerouted frame must assign cells, not key bands")
     val got = out.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     (0 until 5).foreach { j =>

@@ -13,13 +13,18 @@ class PackingSpec extends SparkSpec {
   private def docs = graft.model.Tables.documents(spark, sf())
 
   test("packSequencesScalable == packSequences (every doc, every stratum)") {
-    val w = TextAnalysis.packSequences(docs, "doc_id", "text", "source", 512)
+    // one doc's text nulled: it adds no tokens to any prefix and keeps
+    // its row with a null pack_id in both forms
+    val withNull = docs.withColumn("text",
+      when(col("doc_id") =!= 250, col("text")))
+    val w = TextAnalysis.packSequences(withNull, "doc_id", "text", "source", 512)
     // numParts=5 forces strata to span partition boundaries (10 sources,
     // 500 docs) so the cross-partition offset path actually executes
-    val s = TextAnalysis.packSequencesScalable(docs, "doc_id", "text",
+    val s = TextAnalysis.packSequencesScalable(withNull, "doc_id", "text",
       "source", 512, numParts = 5)
     assert(w.exceptAll(s).isEmpty && s.exceptAll(w).isEmpty,
       "two-pass prefix sum must reproduce the window form exactly")
+    assert(s.where(col("pack_id").isNull).count() == 1)
     // sanity: multiple packs exist, so the test isn't vacuous
     assert(w.select("pack_id").distinct().count() > 1)
   }
