@@ -825,15 +825,11 @@ object Dedup {
     */
   private val SketchMargin: Double = 0.15
 
-  /** Decision inputs + outcome of [[containmentPairsAuto]]'s measured
-    * gate. Produced by [[containmentGate]] — the SAME code the
-    * production entry runs — so a printed route (the route tables in
-    * BASELINE.md "sf100 gate decisions") can never disagree with what
-    * the gate actually chooses.
+  /** Outcome of [[containmentPairsAuto]]'s measured gate, produced by
+    * [[containmentGate]]: the route, and the Σdf² measurement when the
+    * gate took it.
     */
   private[graft] case class ContainmentGate(
-      planPostings: BigDecimal, planBound: BigDecimal,
-      measuredTotal: Option[Long], postingsFit: Boolean,
       df2: Option[Double], usesSketch: Boolean,
       // the level-3 measurement's full shape: df value → #hashes,
       // ascending (≤ √(2·Σdf) rows). Present iff the Σdf² job ran;
@@ -1020,8 +1016,7 @@ object Dedup {
         df2Opt = Some(df2.toDouble)
         df2 > BigInt(maxCandidatePairs)
       })
-    ContainmentGate(planPostings, planBound, measuredTotal, postingsFit,
-      df2Opt, usesSketch, histOpt)
+    ContainmentGate(df2Opt, usesSketch, histOpt)
   }
 
   /** APPROXIMATE all-pairs containment screen via a bottom-`k` sketch —

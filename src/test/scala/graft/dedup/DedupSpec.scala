@@ -1,7 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 import graft.model.Tables
 import graft.text.TextAnalysis
 
@@ -221,17 +221,27 @@ class DedupSpec extends SparkSpec {
     "a long chain where minlabel needs diameter rounds") {
     // 512-node chain: diameter 511. minlabel moves the min one hop per
     // round; alternating's star contractions collapse it in ~log n.
-    // A run capped at `maxIters` rounds labels the whole chain 0 only
-    // if it reached the star fixpoint within the cap.
+    // Every round runs the same jobs (one pin, one signature action), so
+    // the job count of a run read against two capped runs gives the
+    // rounds it took: a loop whose stable-signature stop never fires
+    // runs to the 25-round cap.
     val chain = (0L until 511L).map(i => (i, i + 1))
-    def labels(maxIters: Int) = Dedup.connectedComponents(
-        chain.toDF("id_a", "id_b"), "id_a", "id_b", maxIters = maxIters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val m = labels(15)
+    def run(maxIters: Int): (Map[Long, Long], Int) =
+      JobCounter.count(spark.sparkContext)(Dedup.connectedComponents(
+          chain.toDF("id_a", "id_b"), "id_a", "id_b", maxIters = maxIters)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val (m2, j2) = run(2)
+    val (_, j3) = run(3)
+    val (m, j25) = run(25)
+    val perRound = j3 - j2
+    assert(perRound > 0, "a further round must run further jobs")
+    assert((j25 - j2) % perRound == 0, s"jobs $j2, $j3, $j25")
+    val rounds = 2 + (j25 - j2) / perRound
+    assert(rounds <= 15 && rounds < 25,
+      s"expected O(log 512) ≈ <=15 rounds, ran $rounds of a 25 cap")
     assert(m.size == 512)
-    assert(m.values.count(_ != 0L) == 0,
-      "expected O(log 512) ≈ <=15 rounds to label the whole chain 0")
-    assert(labels(2).values.count(_ != 0L) > 0,
+    assert(m.values.count(_ != 0L) == 0)
+    assert(m2.values.count(_ != 0L) > 0,
       "2 rounds must not finish a 512-chain: the cap has to bind")
     // and minlabel demonstrably can NOT finish the chain in that budget
     val (_, mlRounds) = minLabel(chain, maxIters = 16)
